@@ -120,7 +120,7 @@ object LdaTrainer {
       .persist(StorageLevel.MEMORY_AND_DISK)
     docs.localCheckpoint()
     var pinned: RDD[_] = docs // the currently-persisted generation
-    var model = Gibbs.countModelRdd(docs, numWords, k)
+    var model = Gibbs.countModelRdd(docs, numWords, k)._1
     val accum = accum0.getOrElse(new Array[Double]((numWords + 1) * k))
     var nAccum = nAccum0
     // ArrayBuffer, NOT Array.newBuilder: the per-checkpoint snapshots below
@@ -141,33 +141,23 @@ object LdaTrainer {
       val t0 = System.nanoTime()
       val bc = sc.broadcast(model)
       val tBc = System.nanoTime()
-      if (cfg.computeLikelihood) {
-        // fused path: the pre-sweep LL (quirk #6 — reports the previous
-        // iteration's model) rides the swept RDD into the countModel
-        // treeReduce. Exactly-once without an extra pass: a retried task
-        // recomputes its tuples, unlike an accumulator updated inside a
-        // transformation, which would double-add.
-        val swept = Gibbs.sweepWithLL(docs, bc, numWords, k, cfg.alpha,
-          cfg.beta, cfg.seed, iter).persist(StorageLevel.MEMORY_AND_DISK)
-        // lineage cut every 10 iters, marked BEFORE the materializing
-        // action below (RDD.localCheckpoint must precede the first job);
-        // bounds recompute depth after executor loss
-        if ((iter + 1) % 10 == 0) swept.localCheckpoint()
-        val (m, ll) = Gibbs.countModelWithLL(swept, numWords, k) // materializes
-        model = m
-        lls += ll
-        docs = swept.map(_._1) // narrow view over the persisted generation
-        pinned.unpersist(blocking = false)
-        pinned = swept
-      } else {
-        val swept = Gibbs.sweepRdd(docs, bc, numWords, k, cfg.alpha, cfg.beta,
-          train = true, cfg.seed, iter).persist(StorageLevel.MEMORY_AND_DISK)
-        if ((iter + 1) % 10 == 0) swept.localCheckpoint()
-        model = Gibbs.countModelRdd(swept, numWords, k) // materializes the sweep
-        docs = swept
-        pinned.unpersist(blocking = false)
-        pinned = swept
-      }
+      val swept = Gibbs.sweepRdd(docs, bc, numWords, k, cfg.alpha, cfg.beta,
+        cfg.seed, iter).persist(StorageLevel.MEMORY_AND_DISK)
+      // lineage cut every 10 iters, marked BEFORE the materializing
+      // action below (RDD.localCheckpoint must precede the first job);
+      // bounds recompute depth after executor loss
+      if ((iter + 1) % 10 == 0) swept.localCheckpoint()
+      // the pre-sweep LL (quirk #6: it describes the previous iteration's
+      // model) is summed from the still-cached pre-sweep docs by the
+      // tally's own tasks
+      val likelihood = if (!cfg.computeLikelihood) None else Some((docs,
+        (d: DocState) => Gibbs.logLikelihood(d, bc.value, numWords, cfg.alpha, cfg.beta, k)))
+      val (m, ll) = Gibbs.countModelRdd(swept, numWords, k, likelihood) // materializes
+      model = m
+      if (cfg.computeLikelihood) lls += ll
+      docs = swept
+      pinned.unpersist(blocking = false)
+      pinned = swept
       bc.unpersist(blocking = false)
       if (iter >= cfg.burnInIterations) {
         var i = 0
@@ -207,9 +197,7 @@ object LdaInfer {
       cfg: LdaConfig, dist: Array[Double]): Array[Double] = {
     val k = cfg.numTopics
     val topics = doc.topics.clone()
-    val docTopics = new Array[Long](k)
-    var j = 0
-    while (j < topics.length) { docTopics(topics(j)) += 1; j += 1 }
+    val docTopics = doc.topicHistogram(k)
     val acc = new Array[Double](k)
     val rng = new SplitMix64(Rng.mix(cfg.seed, doc.docId, 0x1FE2L))
     var iter = 0

@@ -21,6 +21,11 @@ final case class WordTopics(wordId: Int, counts: Array[Long])
   * and executor peak memory are bounded by the shard size, never the
   * full model.
   *
+  * There is no sampler here: each shard pass runs [[Gibbs]]'s one kernel
+  * ([[Gibbs.sweepDocument]], [[Gibbs.logLikelihood]]) over the shard's word
+  * range [lo, hi), handing it the shard's rows with the global row n(k)
+  * appended. Training and fold-in differ only in `train`.
+  *
   * Like [[LdaTrainer]], the doc-state loop runs at the RDD layer (plain
   * JVM object caching; a Dataset persist would encoder-serialize every
   * DocState once per shard pass). Public entry points keep Dataset
@@ -119,14 +124,17 @@ object ShardedLda {
     (numWords + per - 1) / per
   }
 
-  /** Collect one shard's rows into a dense (hi−lo)×K flat array. Driver
-    * memory: (V/S)×K×8 bytes — the whole point. */
+  /** Collect one shard's rows into a dense (hi−lo)×K flat array followed
+    * by the global row: the model slice [[Gibbs.sweepDocument]] reads.
+    * Driver memory: (V/S + 1)×K×8 bytes — the whole point. */
   private def collectShard(
-      modelRows: RDD[(Int, Array[Long])], lo: Int, hi: Int, k: Int): Array[Long] = {
-    val flat = new Array[Long]((hi - lo) * k)
+      modelRows: RDD[(Int, Array[Long])], lo: Int, hi: Int, global: Array[Long]): Array[Long] = {
+    val k = global.length
+    val flat = new Array[Long]((hi - lo + 1) * k)
     modelRows.filter { case (w, _) => w >= lo && w < hi }.collect().foreach {
       case (w, counts) => System.arraycopy(counts, 0, flat, (w - lo) * k, k)
     }
+    System.arraycopy(global, 0, flat, (hi - lo) * k, k)
     flat
   }
 
@@ -155,61 +163,30 @@ object ShardedLda {
       checkpointLast: Boolean): RDD[DocState] = {
     val sc = docs.sparkContext
     val k = numTopics
-    val vBeta = numWords * beta
     val global0 = globalRowRdd(modelRows, k) // stale for the whole iteration
     var current = docs
-    var s = 0
     val nShards = effectiveShards(numWords, numShards)
-    while (s < nShards) {
+    // `s` is a fresh val per pass: a task closure recomputed from lineage
+    // must key its RNG on its own shard, not on a shared loop variable
+    for (s <- 0 until nShards) {
       val (lo, hi) = shardBounds(numWords, numShards, s)
-      val bcShard = sc.broadcast(collectShard(modelRows, lo, hi, k))
-      val bcGlobal = sc.broadcast(global0)
+      val bcShard = sc.broadcast(collectShard(modelRows, lo, hi, global0))
       val prev = current
       current = current.mapPartitions { it =>
         val shard = bcShard.value.clone() // task-local AD-LDA replica
-        val global = bcGlobal.value.clone()
         val dist = new Array[Double](k)
         it.map { doc =>
           val topics = doc.topics.clone()
-          val docTopics = doc.topicHistogram(k)
           val rng = new SplitMix64(Rng.mix(seed, doc.docId, iter.toLong << 16 | s))
-          var i = 0
-          while (i < doc.wordIds.length) {
-            val w = doc.wordIds(i)
-            if (w >= lo && w < hi) {
-              val wOff = (w - lo) * k
-              var j = doc.offsets(i)
-              val end = doc.offsets(i + 1)
-              while (j < end) {
-                val cur = topics(j)
-                var t = 0
-                while (t < k) {
-                  val adj = if (t == cur) -1 else 0
-                  dist(t) = (shard(wOff + t) + adj + beta) *
-                    (docTopics(t) + adj + alpha) / (global(t) + adj + vBeta)
-                  t += 1
-                }
-                val next = Gibbs.sampleFromCdf(dist, rng.nextDouble())
-                if (next != cur) {
-                  shard(wOff + cur) -= 1; shard(wOff + next) += 1
-                  global(cur) -= 1; global(next) += 1
-                  docTopics(cur) -= 1; docTopics(next) += 1
-                  topics(j) = next
-                }
-                j += 1
-              }
-            }
-            i += 1
-          }
-          DocState(doc.docId, doc.wordIds, doc.offsets, topics)
+          Gibbs.sweepDocument(doc.wordIds, doc.offsets, topics, doc.topicHistogram(k),
+            shard, lo, hi, numWords, alpha, beta, train = true, rng, dist)
+          doc.copy(topics = topics)
         }
       }.persist(StorageLevel.MEMORY_AND_DISK)
       if (checkpointLast && s == nShards - 1) current.localCheckpoint()
       current.count() // materialize before releasing this shard's broadcast
       if (prev ne docs) prev.unpersist(blocking = false)
       bcShard.unpersist(blocking = false)
-      bcGlobal.unpersist(blocking = false)
-      s += 1
     }
     current
   }
@@ -356,80 +333,50 @@ object ShardedLda {
     import spark.implicits._
     val sc = spark.sparkContext
     val k = cfg.numTopics
-    val vBeta = numWords * cfg.beta
     val (alpha, beta, seed) = (cfg.alpha, cfg.beta, cfg.seed)
     val mrows = modelRows.rdd.map(r => (r.wordId, r.counts))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val bcGlobal = sc.broadcast(globalRowRdd(mrows, k)) // frozen → once
+    val global = globalRowRdd(mrows, k) // frozen
     var state: RDD[(DocState, Array[Double])] =
       docs0.rdd.map(d => (d, new Array[Double](k)))
         .persist(StorageLevel.MEMORY_AND_DISK)
     state.localCheckpoint() // marked before the first job (count below)
     state.count()
-    var iter = 0
     val nShards = effectiveShards(numWords, numShards)
-    while (iter < cfg.totalIterations) {
-      var s = 0
-      while (s < nShards) {
-        val (lo, hi) = shardBounds(numWords, numShards, s)
-        val bcShard = sc.broadcast(collectShard(mrows, lo, hi, k))
-        val accumulate = (s == nShards - 1) && iter >= cfg.burnInIterations
-        val (it0, s0) = (iter, s)
-        val prev = state
-        state = state.mapPartitions { it =>
-          val shard = bcShard.value
-          val g = bcGlobal.value
-          val dist = new Array[Double](k)
-          it.map { case (doc, acc) =>
-            val topics = doc.topics.clone()
-            val docTopics = doc.topicHistogram(k)
-            // namespace by seed xor (not OR-ed tag bits, which alias once
-            // iter/shard bits overlap the tag); (iter << 16 | shard) is
-            // collision-free like the training path's key
-            val rng = new SplitMix64(
-              Rng.mix(seed ^ 0x1FE2C0DEL, doc.docId, (it0.toLong << 16) | s0))
-            var i = 0
-            while (i < doc.wordIds.length) {
-              val w = doc.wordIds(i)
-              if (w >= lo && w < hi) {
-                val wOff = (w - lo) * k
-                var j = doc.offsets(i)
-                val end = doc.offsets(i + 1)
-                while (j < end) {
-                  val cur = topics(j)
-                  var t = 0
-                  while (t < k) {
-                    dist(t) = (shard(wOff + t) + beta) * (docTopics(t) + alpha) / (g(t) + vBeta)
-                    t += 1
-                  }
-                  val next = Gibbs.sampleFromCdf(dist, rng.nextDouble())
-                  if (next != cur) {
-                    docTopics(cur) -= 1; docTopics(next) += 1; topics(j) = next
-                  }
-                  j += 1
-                }
-              }
-              i += 1
-            }
-            val acc2 =
-              if (accumulate) {
-                val a = acc.clone()
-                var t = 0
-                while (t < k) { a(t) += docTopics(t); t += 1 }
-                a
-              } else acc
-            (DocState(doc.docId, doc.wordIds, doc.offsets, topics), acc2)
-          }
-        }.persist(StorageLevel.MEMORY_AND_DISK)
-        // cut the S-pass chain at each iteration boundary, marked before
-        // the materializing count
-        if (s == numShards - 1) state.localCheckpoint()
-        state.count() // materialize before releasing this shard's broadcast
-        prev.unpersist(blocking = false)
-        bcShard.unpersist(blocking = false)
-        s += 1
-      }
-      iter += 1
+    for (iter <- 0 until cfg.totalIterations; s <- 0 until nShards) {
+      val (lo, hi) = shardBounds(numWords, numShards, s)
+      val bcShard = sc.broadcast(collectShard(mrows, lo, hi, global))
+      val accumulate = (s == nShards - 1) && iter >= cfg.burnInIterations
+      val prev = state
+      state = state.mapPartitions { it =>
+        val shard = bcShard.value
+        val dist = new Array[Double](k)
+        it.map { case (doc, acc) =>
+          val topics = doc.topics.clone()
+          val docTopics = doc.topicHistogram(k)
+          // namespace by seed xor (not OR-ed tag bits, which alias once
+          // iter/shard bits overlap the tag); (iter << 16 | shard) is
+          // collision-free like the training path's key
+          val rng = new SplitMix64(
+            Rng.mix(seed ^ 0x1FE2C0DEL, doc.docId, (iter.toLong << 16) | s))
+          Gibbs.sweepDocument(doc.wordIds, doc.offsets, topics, docTopics,
+            shard, lo, hi, numWords, alpha, beta, train = false, rng, dist)
+          val acc2 =
+            if (accumulate) {
+              val a = acc.clone()
+              var t = 0
+              while (t < k) { a(t) += docTopics(t); t += 1 }
+              a
+            } else acc
+          (doc.copy(topics = topics), acc2)
+        }
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+      // cut the S-pass chain at each iteration boundary, marked before
+      // the materializing count
+      if (s == nShards - 1) state.localCheckpoint()
+      state.count() // materialize before releasing this shard's broadcast
+      prev.unpersist(blocking = false)
+      bcShard.unpersist(blocking = false)
     }
     mrows.unpersist(blocking = false)
     val n = cfg.totalIterations - cfg.burnInIterations
@@ -437,12 +384,9 @@ object ShardedLda {
       state.map { case (d, acc) => LdaInfer.DocTopics(d.docId, acc.map(_ / n)) })
   }
 
-  /** Corpus log-likelihood on the sharded model: per-word log p(w|z)
-    * terms need the word's own row, so compute word-major — join model
-    * rows to per-doc word slices? Cheaper: docs carry everything except
-    * n(w,·); ship p(z|d) per doc-word via an exploded join on wordId.
-    * For bounded shards we reuse the shard-at-a-time broadcast instead:
-    * Σ over shards of the shard's occurrences' contributions. */
+  /** Corpus log-likelihood on the sharded model: per-word terms need the
+    * word's own row, so broadcast the model shard by shard and sum each
+    * shard's occurrences' contributions. */
   def shardedLikelihood(
       docs: Dataset[DocState], modelRows: Dataset[WordTopics],
       numWords: Int, cfg: LdaConfig, numShards: Int = 0,
@@ -466,40 +410,17 @@ object ShardedLda {
       if (numShards >= 1) numShards
       else math.max(1L, (numWords.toLong * k * 8 + maxShardBytes - 1) / maxShardBytes).toInt)
     var total = 0.0
-    var s = 0
-    while (s < shards) {
+    for (s <- 0 until shards) {
       val (lo, hi) = shardBounds(numWords, shards, s)
-      val bcShard = sc.broadcast(collectShard(modelRows, lo, hi, k))
-      val bcGlobal = sc.broadcast(global)
+      val bcShard = sc.broadcast(collectShard(modelRows, lo, hi, global))
       total += docs.mapPartitions { it =>
         val shard = bcShard.value
-        val g = bcGlobal.value
         var acc = 0.0
-        it.foreach { doc =>
-          val hist = doc.topicHistogram(k)
-          val len = doc.numOccurrences
-          var i = 0
-          while (i < doc.wordIds.length) {
-            val w = doc.wordIds(i)
-            if (w >= lo && w < hi) {
-              val wOff = (w - lo) * k
-              var pw = 0.0
-              var t = 0
-              while (t < k) {
-                pw += (shard(wOff + t) + beta) / (g(t) + numWords * beta) *
-                  ((hist(t) + alpha) / (len + alpha * k))
-                t += 1
-              }
-              acc += (doc.offsets(i + 1) - doc.offsets(i)) * math.log(pw)
-            }
-            i += 1
-          }
-        }
+        it.foreach(doc => acc = Gibbs.logLikelihood(doc, shard, lo, hi, numWords,
+          alpha, beta, k, acc))
         Iterator.single(acc)
       }.treeReduce(_ + _, depth = 1) // partials are one Double each
       bcShard.unpersist(blocking = false)
-      bcGlobal.unpersist(blocking = false)
-      s += 1
     }
     total
   }

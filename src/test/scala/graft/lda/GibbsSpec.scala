@@ -78,6 +78,36 @@ class GibbsSpec extends SparkSpec {
     })
   }
 
+  test("sweepDocument over a word range touches only that range's occurrences and rows") {
+    val (k, v, lo, hi) = (3, 5, 1, 3)
+    val doc = DocState.init(2L, Array(0, 1, 2, 4), Array(3, 4, 2, 3), k, 17L)
+    val model = new Array[Long]((v + 1) * k)
+    for (i <- doc.wordIds.indices; j <- doc.offsets(i) until doc.offsets(i + 1)) {
+      model(doc.wordIds(i) * k + doc.topics(j)) += 1
+      model(v * k + doc.topics(j)) += 1
+    }
+    // the slice: rows [lo, hi) back to back, then the global row
+    val shard = model.slice(lo * k, hi * k) ++ model.slice(v * k, (v + 1) * k)
+    val docTopics = doc.topicHistogram(k)
+    val topics = doc.topics.clone()
+    Gibbs.sweepDocument(doc.wordIds, doc.offsets, topics, docTopics, shard, lo, hi, v,
+      0.1, 0.01, train = true, new SplitMix64(5L), new Array[Double](k))
+    for (i <- doc.wordIds.indices if doc.wordIds(i) < lo || doc.wordIds(i) >= hi;
+         j <- doc.offsets(i) until doc.offsets(i + 1))
+      assert(topics(j) == doc.topics(j), s"occurrence $j of word ${doc.wordIds(i)} moved")
+    assert(docTopics.sameElements {
+      val h = new Array[Long](k); topics.foreach(t => h(t) += 1); h
+    })
+    // shard rows keep their word totals; the global row moves with them
+    for (w <- lo until hi)
+      assert((0 until k).map(t => shard((w - lo) * k + t)).sum ==
+        (0 until k).map(t => model(w * k + t)).sum)
+    val g = (hi - lo) * k
+    for (t <- 0 until k)
+      assert(shard(g + t) - model(v * k + t) ==
+        (lo until hi).map(w => shard((w - lo) * k + t) - model(w * k + t)).sum)
+  }
+
   test("countModel is partition-count invariant") {
     import spark.implicits._
     val docs = (0L until 40L).map { id =>

@@ -53,6 +53,36 @@ class ShardedLdaSpec extends SparkSpec {
     swept.collect().foreach(d => assert(d.topics.forall(t => t >= 0 && t < k)))
   }
 
+  test("a shard pass recomputed after its cache is dropped resamples identically") {
+    // each shard pass keys its RNG on its own shard index, so lineage
+    // recompute (block loss, eviction) must replay the same draws
+    val docs = corpus(30).rdd
+    val modelRows = ShardedLda.countModelRowsRdd(docs, k).persist()
+    val swept = ShardedLda.sweepIterationRdd(docs, modelRows, v, k, numShards = 3,
+      alpha = 0.1, beta = 0.01, seed = 5L, iter = 0, checkpointLast = false)
+    def topics = swept.collect().sortBy(_.docId).map(_.topics.toSeq)
+    val first = topics
+    swept.unpersist(blocking = true)
+    val changed = first.zip(topics).count { case (a, b) => a != b }
+    assert(changed == 0, s"$changed of 30 docs resampled differently")
+    modelRows.unpersist(blocking = true)
+  }
+
+  test("sharded fold-in lineage does not grow with iterations (V=12, S=5 → 4 shards)") {
+    def lineage(rdd: org.apache.spark.rdd.RDD[_]): Int = {
+      val seen = scala.collection.mutable.Set.empty[Int]
+      def walk(r: org.apache.spark.rdd.RDD[_]): Unit =
+        if (seen.add(r.id)) r.dependencies.foreach(d => walk(d.rdd))
+      walk(rdd)
+      seen.size
+    }
+    val docs = corpus(12)
+    val rows = ShardedLda.countModelRows(docs, k)
+    def depth(iters: Int): Int = lineage(ShardedLda.infer(docs, rows, v,
+      LdaConfig(k, 0.1, 0.01, totalIterations = iters, seed = 6L), numShards = 5).rdd)
+    assert(depth(2) == depth(6))
+  }
+
   test("sharded training is deterministic for fixed seed and shards") {
     val a = ShardedLda.train(corpus(20), v,
       LdaConfig(k, 0.1, 0.01, totalIterations = 3, seed = 77L), numShards = 3)
