@@ -1,8 +1,10 @@
 package graft.lda
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 /** Training iteration driver (SURVEY §3.4).
@@ -354,55 +356,91 @@ final case class LdaModel(
     LdaInfer.infer(corpus, counts, numWords, inferCfg)
   }
 
-  /** Model as DataFrame(word, word_id, counts). */
-  def toDataFrame: DataFrame = {
-    val spark = vocab.sparkSession
-    ModelIO.toDataFrame(spark, counts, cfg.numTopics, indexToWord)
+  /** Words in id order: collects (word_id, tok) and places each word by
+    * its id (V ≪ corpus). The ids must be exactly 0..V-1, as every
+    * [[Corpus]] vocabulary builder makes them: `counts` is indexed by id. */
+  lazy val indexToWord: Array[String] = {
+    val rows = vocab.select(col("word_id").cast("int"), col("tok")).collect()
+    val words = new Array[String](rows.length)
+    rows.foreach { r =>
+      val id = r.getInt(0)
+      require(id >= 0 && id < words.length && words(id) == null,
+        s"vocab word_id $id (word ${r.getString(1)}) is out of range or repeated: " +
+          s"the ${words.length} ids must be exactly 0..${words.length - 1}")
+      words(id) = r.getString(1)
+    }
+    words
   }
-
-  /** Words in id order (collected; V ≪ corpus). */
-  lazy val indexToWord: Array[String] =
-    vocab.orderBy("word_id").select("tok").collect().map(_.getString(0))
 
   /** word → id map (collected; for broadcast in row-wise/streaming paths). */
   lazy val vocabMap: Map[String, Int] = indexToWord.zipWithIndex.toMap
+
+  /** Per topic, the ids of its words with count > 1 in rank order — count
+    * descending, ties by word in Spark's string order (UTF-8 bytes) — cut
+    * to the first `n`. Ranked on the driver from `counts`. */
+  private def ranked(n: Int): IndexedSeq[Array[Int]] = {
+    val k = cfg.numTopics
+    val utf8 = indexToWord.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    (0 until k).map { t =>
+      val better: Ordering[Int] = (a, b) => {
+        val c = java.lang.Long.compare(counts(b * k + t), counts(a * k + t))
+        if (c != 0) c else Corpus.unsignedBytes.compare(utf8(a), utf8(b))
+      }
+      // the n best so far; the head is the worst of them
+      val top = scala.collection.mutable.PriorityQueue.empty[Int](better)
+      var w = 0
+      while (w < utf8.length) {
+        if (n > 0 && counts(w * k + t) > 1) {
+          if (top.size < n) top.enqueue(w)
+          else if (better.lt(w, top.head)) { top.dequeue(); top.enqueue(w) }
+        }
+        w += 1
+      }
+      top.toArray.sorted(better)
+    }
+  }
+
+  private def localFrame(rows: Seq[Row], schema: StructType): DataFrame =
+    vocab.sparkSession.createDataFrame(rows.asJava, schema)
 
   /** MLlib-style topic description: one row per topic with rank-ordered
     * term/weight arrays. Weights are fractions of the FULL topic mass
     * n(k) (totals computed before any filtering); the term list applies
     * the same cnt > 1 floor as [[topWords]] (view_model.py:20), so the
     * two views agree and no zero-count filler terms appear. A topic with
-    * no cnt > 1 words is absent from both views. */
+    * no cnt > 1 words is absent from both views. Built on the driver from
+    * `counts` (K rows). */
   def describeTopics(maxTerms: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val long = ModelIO.toLongForm(toDataFrame)
-    val w = Window.partitionBy("topic").orderBy(col("cnt").desc, col("word").asc)
-    val totals = Window.partitionBy("topic")
-    long.withColumn("total", sum(col("cnt")).over(totals)) // full topic mass
-      .where(col("cnt") > 1)
-      .withColumn("r", row_number().over(w))
-      .where(col("r") <= maxTerms)
-      .groupBy("topic")
-      .agg(
-        sort_array(collect_list(struct(col("r"), col("word")))).as("tw"),
-        sort_array(collect_list(struct(col("r"),
-          (col("cnt") / col("total")).as("wt")))).as("twt"))
-      .select(col("topic"),
-        col("tw.word").as("terms"),
-        col("twt.wt").as("termWeights"))
-      .orderBy("topic")
+    val k = cfg.numTopics
+    val words = indexToWord
+    val rows = ranked(maxTerms).zipWithIndex.collect { case (ids, t) if ids.nonEmpty =>
+      var total = 0L
+      for (w <- words.indices) total += counts(w * k + t)
+      Row(t, ids.map(words(_)).toSeq, ids.map(w => counts(w * k + t).toDouble / total).toSeq)
+    }
+    localFrame(rows, LdaModel.DescribeTopicsSchema)
   }
 
   /** Top-n words per topic (R1, view_model.py): count>1 filter, per-topic
-    * ranking window, deterministic tie-break by word. */
+    * ranking, deterministic tie-break by word; rows ordered by (topic,
+    * cnt desc, word). Built on the driver from `counts` (at most K·n
+    * rows). */
   def topWords(n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val long = ModelIO.toLongForm(toDataFrame)
-    val w = Window.partitionBy("topic").orderBy(col("cnt").desc, col("word").asc)
-    long.where(col("cnt") > 1)
-      .withColumn("r", row_number().over(w))
-      .where(col("r") <= n)
-      .select("topic", "word", "cnt")
-      .orderBy(col("topic"), col("cnt").desc, col("word"))
+    val words = indexToWord
+    val rows = for ((ids, t) <- ranked(n).zipWithIndex; w <- ids.toSeq)
+      yield Row(t, words(w), counts(w * cfg.numTopics + t))
+    localFrame(rows, LdaModel.TopWordsSchema)
   }
+}
+
+object LdaModel {
+  private val TopWordsSchema = StructType(Seq(
+    StructField("topic", IntegerType, nullable = false),
+    StructField("word", StringType),
+    StructField("cnt", LongType, nullable = false)))
+
+  private val DescribeTopicsSchema = StructType(Seq(
+    StructField("topic", IntegerType, nullable = false),
+    StructField("terms", ArrayType(StringType, containsNull = true), nullable = false),
+    StructField("termWeights", ArrayType(DoubleType, containsNull = true), nullable = false)))
 }

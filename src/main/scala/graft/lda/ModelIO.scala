@@ -1,9 +1,10 @@
 package graft.lda
 
 import java.io.{BufferedWriter, FileWriter}
-import java.util.Locale
+import java.math.{MathContext, RoundingMode, BigDecimal => JBigDecimal}
+import scala.collection.mutable.ArrayBuffer
 import scala.io.Source
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Model (de)serialization with byte parity to the reference's text format
@@ -19,27 +20,39 @@ import org.apache.spark.sql.functions._
   * model.cc:126-127 (quirk #4). Word order in the file defines word ids on
   * reload (V3 vocabulary semantics).
   *
+  * The codec runs as plain loops over the V×K values: [[formatDouble]]
+  * rounds with `BigDecimal`, and the reader splits lines without a regex
+  * and parses each value with `parseDouble`.
+  *
   * The text model file is a driver-side artifact (V×K longs — ~8 MB at the
-  * reference's NYTimes scale). For the huge-V regime the parquet form
-  * below keeps the model distributed.
+  * reference's NYTimes scale); [[writeCountsDistributed]] exports models
+  * too large to collect.
   */
 object ModelIO {
 
-  /** C++ `ostream << double` (defaultfloat, precision 6): like %.6g with
-    * trailing zeros (and a bare trailing '.') stripped. */
-  def formatDouble(d: Double): String = {
-    val s = String.format(Locale.ROOT, "%.6g", java.lang.Double.valueOf(d))
-    val (mant, exp) = s.indexOf('e') match {
-      case -1 => (s, "")
-      case i  => (s.substring(0, i), s.substring(i))
+  private val Digits6 = new MathContext(6, RoundingMode.HALF_EVEN)
+
+  /** C++ `ostream << double` (defaultfloat, precision 6), i.e. C's `%.6g`
+    * with trailing zeros (and a bare trailing '.') stripped: the exact
+    * binary value rounded half-to-even to 6 significant digits, fixed
+    * notation for decimal exponents -4..5, else `d.ddddde±XX`. Zeros
+    * print as `0` / `-0`; NaN and infinities keep Java's spelling. */
+  def formatDouble(d: Double): String =
+    if (d == 0) (if (1 / d < 0) "-0" else "0")
+    else if (d.isNaN || d.isInfinite) d.toString
+    else {
+      val r = new JBigDecimal(math.abs(d)).round(Digits6).stripTrailingZeros
+      val exp = r.precision - r.scale - 1 // decimal exponent of the rounded value
+      val body =
+        if (exp >= -4 && exp < 6) r.toPlainString
+        else {
+          val digits = r.unscaledValue.toString
+          val mant = if (digits.length == 1) digits else s"${digits.head}.${digits.tail}"
+          val e = math.abs(exp)
+          s"${mant}e${if (exp < 0) '-' else '+'}${if (e < 10) "0" else ""}$e"
+        }
+      if (d < 0) "-" + body else body
     }
-    val stripped =
-      if (mant.contains('.')) {
-        val m = mant.reverse.dropWhile(_ == '0').reverse
-        if (m.endsWith(".")) m.dropRight(1) else m
-      } else mant
-    stripped + exp
-  }
 
   /** Write raw counts (model.cc:98-111). `indexToWord(i)` = word with id i;
     * `model` is the flat (V+1)×K array (global row excluded from output). */
@@ -81,38 +94,78 @@ object ModelIO {
     } finally out.close()
   }
 
+  private def isBlank(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
+
+  /** The fields of a model line: `line.trim.split("\\s+")` without the
+    * regex. */
+  private[lda] def fields(line: String): Array[String] = {
+    var end = line.length
+    while (end > 0 && line.charAt(end - 1) <= ' ') end -= 1
+    var i = 0
+    while (i < end && line.charAt(i) <= ' ') i += 1
+    if (i == end) return Array("")
+    val out = ArrayBuffer.empty[String]
+    while (i < end) {
+      val start = i
+      while (i < end && !isBlank(line.charAt(i))) i += 1
+      out += line.substring(start, i)
+      while (i < end && isBlank(line.charAt(i))) i += 1
+    }
+    out.toArray
+  }
+
+  /** The rows of a model file, as the reference parser sees them: lines
+    * that are empty or start with '#', '\r' or '\n' are skipped; every other
+    * line is a word and its values, and must have as many values as the
+    * first such line. */
+  private def readRows(path: String): (Array[String], Array[Array[Double]]) = {
+    val src = Source.fromFile(path)
+    try {
+      val words = ArrayBuffer.empty[String]
+      val rows = ArrayBuffer.empty[Array[Double]]
+      var lineNo = 0
+      for (line <- src.getLines()) {
+        lineNo += 1
+        if (line.nonEmpty && line(0) != '#' && line(0) != '\r' && line(0) != '\n') {
+          val f = fields(line)
+          val values = new Array[Double](f.length - 1)
+          var t = 0
+          while (t < values.length) { values(t) = java.lang.Double.parseDouble(f(t + 1)); t += 1 }
+          if (rows.nonEmpty) require(values.length == rows(0).length,
+            s"model file $path line $lineNo: ${values.length} values, expected ${rows(0).length}")
+          words += f(0)
+          rows += values
+        }
+      }
+      (words.toArray, rows.toArray)
+    } finally src.close()
+  }
+
   /** Read a model file (model.cc:113-153): word order defines ids (V3);
     * double values truncated to long (quirk #4); global row rebuilt by
     * column sums (model.cc:147-151). Returns (flat (V+1)×K counts, words
-    * in id order). */
+    * in id order). Fails on a file with no rows, or rows of unequal
+    * length. */
   def readModel(path: String): (Array[Long], Array[String]) = {
-    val src = Source.fromFile(path)
-    try {
-      val rows = scala.collection.mutable.ArrayBuffer[(String, Array[Long])]()
-      for (line <- src.getLines()) {
-        if (line.nonEmpty && line(0) != '#' && line(0) != '\r' && line(0) != '\n') {
-          val parts = line.trim.split("\\s+")
-          rows += ((parts(0), parts.drop(1).map(_.toDouble.toLong)))
-        }
+    val (words, rows) = readRows(path)
+    require(words.nonEmpty, s"model file $path has no model rows")
+    val v = words.length
+    val k = rows(0).length
+    val model = new Array[Long]((v + 1) * k)
+    var w = 0
+    while (w < v) {
+      val cs = rows(w)
+      var t = 0
+      while (t < k) {
+        val c = cs(t).toLong
+        model(w * k + t) = c
+        model(v * k + t) += c
+        t += 1
       }
-      val v = rows.length
-      val k = rows.head._2.length
-      val model = new Array[Long]((v + 1) * k)
-      val words = new Array[String](v)
-      var w = 0
-      while (w < v) {
-        words(w) = rows(w)._1
-        val cs = rows(w)._2
-        var t = 0
-        while (t < k) {
-          model(w * k + t) = cs(t)
-          model(v * k + t) += cs(t)
-          t += 1
-        }
-        w += 1
-      }
-      (model, words)
-    } finally src.close()
+      w += 1
+    }
+    (model, words)
   }
 
   /** view_model.py-parity report lines (view_model.py:28-39): per topic a
@@ -123,41 +176,22 @@ object ModelIO {
     * to the inference reload path only) and rendered python-str-style
     * (integral doubles as `x.0`). */
   def viewModelLines(path: String): Seq[String] = {
-    val src = Source.fromFile(path)
-    try {
-      val rows = src.getLines().filter(l =>
-        l.nonEmpty && l(0) != '#' && l(0) != '\r' && l(0) != '\n').map { line =>
-        val parts = line.trim.split("\\s+")
-        (parts(0), parts.drop(1).map(_.toDouble))
-      }.toVector
-      if (rows.isEmpty) return Seq.empty
-      val k = rows.head._2.length
-      def pyFloat(v: Double): String =
-        if (v == math.floor(v) && math.abs(v) < 1e16) s"${v.toLong}.0" else v.toString
-      (0 until k).flatMap { t =>
-        val entries = rows.collect { case (w, vs) if vs(t) > 1 => (w, vs(t)) }
-        val mass = entries.map(_._2).sum
-        val sorted = entries.sortBy { case (w, v) => (-v, w) }(
-          Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.String.reverse))
-        Seq("", s"TOPIC:  $t ${pyFloat(mass)}", "") ++
-          sorted.map { case (w, v) => s"$w ${pyFloat(v)}" }
+    val (words, rows) = readRows(path)
+    if (words.isEmpty) return Seq.empty
+    def pyFloat(v: Double): String =
+      if (v == math.floor(v) && math.abs(v) < 1e16) s"${v.toLong}.0" else v.toString
+    (0 until rows(0).length).flatMap { t =>
+      val kept = words.indices.filter(w => rows(w)(t) > 1).toArray
+      var mass = 0.0
+      kept.foreach(w => mass += rows(w)(t))
+      val byValueThenWordDesc: Ordering[Int] = (a, b) => {
+        val c = java.lang.Double.compare(rows(b)(t), rows(a)(t))
+        if (c != 0) c else words(b).compareTo(words(a))
       }
-    } finally src.close()
+      Seq("", s"TOPIC:  $t ${pyFloat(mass)}", "") ++
+        kept.sorted(byValueThenWordDesc).map(w => s"${words(w)} ${pyFloat(rows(w)(t))}")
+    }
   }
-
-  /** Distributed model form: DataFrame(word, word_id, counts array) —
-    * the scale path (parquet at rest; never collected to the driver). */
-  def toDataFrame(spark: SparkSession, model: Array[Long], numTopics: Int, indexToWord: Array[String]): DataFrame = {
-    import spark.implicits._
-    indexToWord.indices.map { w =>
-      (indexToWord(w), w, (0 until numTopics).map(k => model(w * numTopics + k)).toArray)
-    }.toDF("word", "word_id", "counts")
-  }
-
-  /** Long-form (word, topic, cnt) for relational reporting (R1 top-words). */
-  def toLongForm(modelDf: DataFrame): DataFrame =
-    modelDf.select(col("word"),
-        posexplode(col("counts")).as(Seq("topic", "cnt")))
 
   /** Distributed plda-format text export for models too large to collect
     * (the [[ShardedLda]] path): formats each `word\tc1 … cK` line on the
