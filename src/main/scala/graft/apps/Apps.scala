@@ -250,7 +250,7 @@ object ViewModelApp {
   def main(args: Array[String]): Unit = {
     val lines = ModelIO.viewModelLines(args(0))
     if (args.length > 1) {
-      val out = new java.io.PrintWriter(args(1))
+      val out = new java.io.PrintWriter(args(1), "UTF-8")
       try lines.foreach(out.println) finally out.close()
     } else lines.foreach(println)
   }

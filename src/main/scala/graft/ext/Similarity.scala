@@ -586,13 +586,20 @@ object Similarity {
     // — submit them from a small thread pool so each run's scheduling
     // tail back-fills the others' (guide §2.6 overlap); per-subspace
     // results are computed and returned in subspace order, so the books
-    // are bit-identical to the sequential form
+    // are bit-identical to the sequential form. Each run is its own job
+    // group, so a failure cancels the runs still going instead of leaving
+    // their jobs behind; there is no timeout, as a slow run has not failed
+    val sc = full.sparkSession.sparkContext
+    val groups = (0 until m).map(s => s"graft-pq-books-${java.util.UUID.randomUUID()}-$s")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(m)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     try {
+      val description = sc.getLocalProperty("spark.job.description")
       val runs = (0 until m).map { s =>
         scala.concurrent.Future {
+          // keeps the caller's job description (what Bench keys on)
+          sc.setJobGroup(groups(s), description, interruptOnCancel = true)
           val sub = full
             .select(col("vec_id"), slice(col("e"), s * d0 + 1, d0).as("e"))
             .withColumn("n2", dot(col("e"), col("e")))
@@ -600,8 +607,12 @@ object Similarity {
         }
       }
       scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(runs),
-        scala.concurrent.duration.Duration(600, "s"))
+        scala.concurrent.Future.sequence(runs), scala.concurrent.duration.Duration.Inf)
+    } catch {
+      case e: Throwable =>
+        groups.foreach(sc.cancelJobGroup)
+        pool.shutdownNow()
+        throw e
     } finally pool.shutdown()
   }
 

@@ -1,14 +1,16 @@
 package graft.lda
 
+import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 
 /** Collapsed-Gibbs kernel (the only genuinely custom compute in the engine;
   * everything relational is Spark built-ins — SURVEY.md §4.3). Every LDA
-  * path — flat training, fold-in, and the word-sharded [[ShardedLda]] —
-  * samples and scores through the one full conditional, per-document
-  * sampling loop and per-document log-likelihood below.
+  * path — training at any word-shard count, fold-in, and the distributed
+  * model's fold-in and likelihood in [[ShardedLda]] — samples and scores
+  * through the one full conditional, per-document sampling loop and
+  * per-document log-likelihood below.
   *
   * Semantics mirror `/root/reference/sampler.cc` exactly:
   *  - full conditional p(k) ∝ (n(w,k)+β)(n(d,k)+α)/(n(k)+Vβ), with the
@@ -23,10 +25,11 @@ import org.apache.spark.sql.Dataset
   *
   * The kernel reads the model as a slice over a word range [lo, hi): the
   * rows n(w,·) of those words back to back, then the topic row n(·) — the
-  * flat (V+1)×K layout restricted to the range. The flat path passes the
-  * whole model (lo = 0, hi = V); the sharded path passes one shard's rows
-  * with the global row appended, and occurrences of words outside the
-  * range are left as they are.
+  * flat (V+1)×K layout restricted to the range. A one-shard training pass
+  * or a flat fold-in passes the whole model (lo = 0, hi = V); a pass over
+  * one of S ≥ 2 word shards passes that shard's rows with the global row
+  * appended, and occurrences of words outside the range are left as they
+  * are.
   *
   * Unlike the reference (per-occurrence `vector<double>` alloc,
   * sampler.cc:67 — a known inefficiency we do NOT copy), the kernel reuses
@@ -34,10 +37,11 @@ import org.apache.spark.sql.Dataset
   * per-occurrence loop.
   *
   * Scale: the sweep is a `mapPartitions` over the doc states with a
-  * broadcast model — no shuffle. The model aggregation is a per-partition
-  * tally + `treeReduce` (Spark's allreduce idiom, = mpi_lda.cc:58-92's
-  * chunked MPI_Allreduce). Cost per iteration: broadcast (V+1)K×8 bytes
-  * down, same up — identical to the reference's communication profile.
+  * broadcast model slice — no shuffle. The tally is a per-partition
+  * count of the slice + `treeReduce` (Spark's allreduce idiom, =
+  * mpi_lda.cc:58-92's chunked MPI_Allreduce). Cost per pass: broadcast
+  * the slice down, same up — at one shard, identical to the reference's
+  * communication profile.
   */
 object Gibbs {
 
@@ -121,10 +125,11 @@ object Gibbs {
     sweepDocument(wordIds, offsets, topics, docTopics, model, 0, numWords, numWords,
       alpha, beta, train, rng, dist)
 
-  /** Distributed training sweep: one `mapPartitions` over the doc states.
-    * Each task clones the broadcast model once (its local AD-LDA replica)
-    * and streams docs through [[sweepDocument]]. Per-doc RNG streams keyed
-    * on (seed, docId, iter) make the sweep deterministic for a fixed
+  /** Distributed training sweep of the occurrences of words in [lo, hi):
+    * one `mapPartitions` over the doc states. Each task clones the
+    * broadcast model slice once (its local AD-LDA replica) and streams
+    * docs through [[sweepDocument]]. Per-doc RNG streams keyed on
+    * (seed, docId, `stream`) make the sweep deterministic for a fixed
     * partitioning.
     *
     * The loop runs at the RDD layer: an iterative mapPartitions chain
@@ -133,25 +138,25 @@ object Gibbs {
     * DocState per iteration; the RDD caches plain JVM objects (this is the
     * sanctioned "genuine per-partition imperative logic" RDD case). */
   def sweepRdd(
-      docs: RDD[DocState], bcModel: Broadcast[Array[Long]],
+      docs: RDD[DocState], bcRows: Broadcast[Array[Long]], lo: Int, hi: Int,
       numWords: Int, numTopics: Int, alpha: Double, beta: Double,
-      seed: Long, iter: Int): RDD[DocState] = {
+      seed: Long, stream: Long): RDD[DocState] = {
     val k = numTopics
     docs.mapPartitions { it =>
-      val model = bcModel.value.clone() // task-local AD-LDA replica
+      val rows = bcRows.value.clone() // task-local AD-LDA replica
       val dist = new Array[Double](k)
       it.map { doc =>
         val topics = doc.topics.clone()
-        val rng = new SplitMix64(Rng.mix(seed, doc.docId, iter))
-        sweepDocument(doc.wordIds, doc.offsets, topics, doc.topicHistogram(k), model,
-          numWords, alpha, beta, train = true, rng, dist)
+        val rng = new SplitMix64(Rng.mix(seed, doc.docId, stream))
+        sweepDocument(doc.wordIds, doc.offsets, topics, doc.topicHistogram(k), rows,
+          lo, hi, numWords, alpha, beta, train = true, rng, dist)
         doc.copy(topics = topics)
       }
     }
   }
 
   /** Tree-combine depth for the model allreduce, sized to the traffic:
-    * one partial (V+1)×K model per partition flows to the combiner. Under
+    * one partial model slice per partition flows to the combiner. Under
     * 256 MB total the driver takes them directly (one stage); beyond that
     * an intermediate tree level caps driver ingress (the chunked-allreduce
     * concern of mpi_lda.cc:58-92). At sf0.1 (32 × 1.6 MB) this saves a
@@ -164,55 +169,76 @@ object Gibbs {
     * (M3 sampler.cc:34-45 + M4 mpi_lda.cc:94-111): per-partition flat
     * tally, tree-combined. Partition-count invariant (addition commutes). */
   def countModel(docs: Dataset[DocState], numWords: Int, numTopics: Int): Array[Long] =
-    countModelRdd(docs.rdd, numWords, numTopics)._1
+    countModelRdd(docs.rdd, 0, numWords, numTopics)._1
 
-  /** RDD core of [[countModel]] (the training loop's allreduce "up").
-    * With `likelihood = Some((pre, ll))`, where `pre` is the co-partitioned
-    * RDD `docs` was swept from, the same tasks also sum `ll` over `pre`'s
-    * docs and the sum rides the treeReduce: the pre-sweep log-likelihood
-    * (quirk #6) costs no extra job, and is exactly-once by construction (a
-    * task retry recomputes the same partial; contrast an accumulator
-    * updated in a transformation). Without it the sum is 0. */
+  /** RDD core of [[countModel]], over a word range (a training pass's
+    * allreduce "up"): the rows of the words in [lo, hi), then the global
+    * row n(k) over ALL occurrences — (hi − lo + 1)×K, the model slice
+    * layout of [[sweepDocument]].
+    *
+    * With `likelihood = Some((pre, ll))`, where `pre` is a co-partitioned
+    * RDD (the generation `docs` was swept from), the same tasks also fold
+    * `ll(doc, sum)` over `pre`'s docs of each partition from 0: the
+    * pre-sweep log-likelihood (quirk #6) costs no extra job, and is
+    * exactly-once by construction (a task retry recomputes the same
+    * partial; contrast an accumulator updated in a transformation). Each
+    * partition's sum rides the treeReduce in its own slot, and the slots
+    * are added in partition order, so the total does not depend on which
+    * task finished first. Without it the sum is 0. */
   def countModelRdd(
-      docs: RDD[DocState], numWords: Int, numTopics: Int,
-      likelihood: Option[(RDD[DocState], DocState => Double)] = None): (Array[Long], Double) = {
+      docs: RDD[DocState], lo: Int, hi: Int, numTopics: Int,
+      likelihood: Option[(RDD[DocState], (DocState, Double) => Double)] = None
+  ): (Array[Long], Double) = {
     val k = numTopics
-    val size = (numWords + 1) * k
-    val gOff = numWords * k
+    val size = (hi - lo + 1) * k
+    val gOff = (hi - lo) * k
+    val numParts = docs.getNumPartitions
     def tally(it: Iterator[DocState]): Array[Long] = {
       val acc = new Array[Long](size)
       it.foreach { doc =>
         var i = 0
         while (i < doc.wordIds.length) {
-          val wOff = doc.wordIds(i) * k
+          val w = doc.wordIds(i)
           var j = doc.offsets(i)
           val end = doc.offsets(i + 1)
-          while (j < end) {
-            val t = doc.topics(j)
-            acc(wOff + t) += 1
-            acc(gOff + t) += 1
-            j += 1
-          }
+          if (w >= lo && w < hi) {
+            val wOff = (w - lo) * k
+            while (j < end) {
+              val t = doc.topics(j)
+              acc(wOff + t) += 1
+              acc(gOff + t) += 1
+              j += 1
+            }
+          } else while (j < end) { acc(gOff + doc.topics(j)) += 1; j += 1 }
           i += 1
         }
       }
       acc
     }
     val partials = likelihood match {
-      case None => docs.mapPartitions(it => Iterator.single((tally(it), 0.0)))
+      case None => docs.mapPartitions(it => Iterator.single((tally(it), Array.emptyDoubleArray)))
       case Some((pre, ll)) => docs.zipPartitions(pre) { (it, preIt) =>
         val acc = tally(it)
         var sum = 0.0
-        preIt.foreach(d => sum += ll(d))
-        Iterator.single((acc, sum))
+        preIt.foreach(d => sum = ll(d, sum))
+        val slots = new Array[Double](numParts)
+        slots(TaskContext.getPartitionId()) = sum
+        Iterator.single((acc, slots))
       }
     }
-    partials.treeReduce({ case ((a, la), (b, lb)) =>
+    val (model, slots) = partials.treeReduce({ case ((a, la), (b, lb)) =>
       var i = 0
       while (i < a.length) { a(i) += b(i); i += 1 }
-      (a, la + lb)
-    }, depth = reduceDepth(docs.getNumPartitions, size * 8L))
+      i = 0
+      while (i < la.length) { la(i) += lb(i); i += 1 } // disjoint slots: exact
+      (a, la)
+    }, depth = reduceDepth(numParts, size * 8L))
+    (model, sumInOrder(slots))
   }
+
+  /** Left-to-right sum: per-partition partials added in partition order. */
+  private[lda] def sumInOrder(partials: Array[Double]): Double =
+    partials.foldLeft(0.0)(_ + _)
 
   /** Log-likelihood of a document's occurrences of words in [lo, hi)
     * (L1, sampler.cc:116-166) under the model slice `rows` of that range
@@ -257,16 +283,16 @@ object Gibbs {
       alpha: Double, beta: Double, numTopics: Int): Double =
     logLikelihood(doc, model, 0, numWords, numWords, alpha, beta, numTopics, 0.0)
 
-  /** Global log-likelihood: map + reduce (the MPI_Allreduce(MPI_DOUBLE) of
-    * mpi_lda.cc:228-229). */
+  /** Global log-likelihood: per-partition sums, added on the driver in
+    * partition order (the MPI_Allreduce(MPI_DOUBLE) of mpi_lda.cc:228-229,
+    * with a fixed summation order). */
   def corpusLikelihood(
       docs: Dataset[DocState], bcModel: Broadcast[Array[Long]],
-      numWords: Int, numTopics: Int, alpha: Double, beta: Double): Double = {
-    docs.rdd.mapPartitions { it =>
+      numWords: Int, numTopics: Int, alpha: Double, beta: Double): Double =
+    sumInOrder(docs.rdd.mapPartitions { it =>
       val model = bcModel.value
       var s = 0.0
       it.foreach(d => s += logLikelihood(d, model, numWords, alpha, beta, numTopics))
       Iterator.single(s)
-    }.treeReduce(_ + _, depth = 1) // partials are one Double each
-  }
+    }.collect())
 }

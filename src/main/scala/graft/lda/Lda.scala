@@ -7,26 +7,54 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
-/** Training iteration driver (SURVEY §3.4).
+/** The AD-LDA trainer (SURVEY §3.4): plda's one training iteration —
+  * sweep against a replica, then allreduce the counts (mpi_lda.cc:213-235,
+  * Newman et al.) — with the model placed in S word shards (the PLDA+
+  * data-placement idea, Liu et al., ACM TIST 2011, cited at the
+  * reference's README.md:232). S = 1 is plain flat training.
   *
-  * Per iteration — exactly the reference's MPI communication profile
-  * (mpi_lda.cc:213-235), re-expressed as Spark's aggregate/broadcast:
-  *   1. broadcast the model (allreduce "down");
-  *   2. optional pre-sweep corpus log-likelihood (quirk #6: the reported LL
-  *      describes the previous iteration's model);
-  *   3. `mapPartitions` Gibbs sweep — each task samples against its cloned
-  *      replica (AD-LDA staleness, quirk #2);
-  *   4. recount the model from the swept corpus via treeReduce (allreduce
-  *      "up"; = ParallelLDAModel::ComputeAndAllReduce, mpi_lda.cc:94-111);
-  *   5. post-burn-in: accumulate into the driver-side averaged model
-  *      (A1/A2, accumulative_model.cc:38-68) — the single-node `lda`
-  *      binary's semantics.
+  * The driver holds the flat (V+1)×K model. Iteration i runs one pass per
+  * word range [lo, hi) of [[shardBounds]], each pass ONE Spark job:
+  *   1. broadcast rows [lo, hi) of the driver model, then the global row
+  *      as it was at iteration start (at S = 1: the whole model, no copy);
+  *   2. `mapPartitions` Gibbs sweep of the range's occurrences — each task
+  *      samples against its cloned replica (AD-LDA staleness, quirk #2);
+  *   3. tally the swept corpus via treeReduce (allreduce "up";
+  *      = ParallelLDAModel::ComputeAndAllReduce, mpi_lda.cc:94-111): rows
+  *      [lo, hi) and the global row; optionally, in the same job, the
+  *      pre-sweep log-likelihood of the range, read from the
+  *      iteration-start generation (quirk #6: the reported LL describes
+  *      the previous iteration's model);
+  *   4. copy the tallied rows into the driver model (the global row after
+  *      the last pass).
+  * A pass only moves its own words' occurrences, so pass s still sees its
+  * rows and the global row as of iteration start: every shard samples
+  * against one-iteration-stale counts, the same staleness AD-LDA has
+  * across partitions. Post-burn-in, each iteration's model is added into
+  * the driver-side averaged model (A1/A2, accumulative_model.cc:38-68) —
+  * the single-node `lda` binary's semantics, at every S.
   *
-  * Lineage is cut with an eager localCheckpoint every 10 iterations; the
+  * Memory: the driver holds the whole model at every S; what S bounds is
+  * the per-task broadcast replica and the per-partition tally partial,
+  * (V/S + 1)×K longs each — the two costs that grow with V×K on
+  * executors and in treeReduce traffic.
+  *
+  * Lineage is cut with a localCheckpoint every 10 passes; each
   * superseded generation is unpersisted.
   */
 object LdaTrainer {
 
+  /** Training output. CACHE-LIFETIME CONTRACT (the repo-wide convention —
+    * see also [[graft.ext.Dedup.dupClustersDistributed]]):
+    *  - a Result-style return exposes `release()`; the CALLER calls it
+    *    once done consuming `docs`, which unpersists the backing cached
+    *    generation (`docs` is a map view — its own `unpersist` would be a
+    *    no-op on the backing RDD entry);
+    *  - a bare Dataset return that must survive its producer's internal
+    *    caches is handed back `localCheckpoint`ed: its blocks die with
+    *    the caller's reference (ContextCleaner on GC), never as a
+    *    CacheManager entry leaking per call. CacheLifetimeSpec asserts
+    *    both shapes leave `getPersistentRDDs` flat across repeated calls. */
   final case class Result(
       /** last-iteration raw counts, (V+1)×K flat (the `mpi_lda` output kind) */
       model: Array[Long],
@@ -34,9 +62,9 @@ object LdaTrainer {
       averaged: Array[Double],
       /** pre-sweep corpus log-likelihood per iteration (if requested) */
       likelihoods: Array[Double],
-      /** wall-clock per training iteration, ms (sweep + model recount
-        * treeReduce + accumulate) — the number BASELINE.md's per-iteration
-        * cost model asks to watch at scale */
+      /** wall-clock per training iteration, ms (all passes' sweeps and
+        * model recount treeReduces + accumulate) — the number BASELINE.md's
+        * per-iteration cost model asks to watch at scale */
       iterMillis: Array[Long],
       /** driver-side model broadcast time per iteration, ms (the
         * allreduce-"down" half of the communication profile) */
@@ -50,8 +78,12 @@ object LdaTrainer {
         * final corpus generation stays cached. */
       release: () => Unit)
 
-  def train(corpus: Dataset[DocState], numWords: Int, cfg: LdaConfig): Result =
-    trainFrom(corpus, numWords, cfg, startIter = 0,
+  /** `numShards` ≥ 1 sets S; 0 (the default) derives it from the model
+    * size ([[Lda.numShards]]). S ≥ 2 changes the chain (sharded RNG
+    * streams and staleness), not its distribution. */
+  def train(corpus: Dataset[DocState], numWords: Int, cfg: LdaConfig,
+      numShards: Int = 0): Result =
+    trainFrom(corpus, numWords, cfg, numShards, startIter = 0,
       accum0 = None, nAccum0 = 0, lls0 = Array.empty,
       iterMs0 = Array.empty, bcastMs0 = Array.empty, onCheckpoint = null)
 
@@ -71,15 +103,16 @@ object LdaTrainer {
     * likelihood trace, timing traces, iteration marker, canonical
     * partition count) is written under `dir`; a later call with the same
     * `dir` resumes from the newest checkpoint instead of restarting —
-    * the preemption-survival story for long runs. The corpus is pinned
-    * to [[canonicalLayout]] (one extra shuffle at chain start), making
-    * the resumed chain BYTE-IDENTICAL to an uninterrupted run with the
-    * same seed: sweep RNG streams key on (seed, docId, iter), model
-    * recounts are integer treeReduce sums, and the layout — the only
-    * remaining degree of freedom — is now a pure function of
+    * the preemption-survival story for long runs. The model is not
+    * stored: it is recounted from the doc assignments. The corpus is
+    * pinned to [[canonicalLayout]] (one extra shuffle at chain start),
+    * making the resumed chain BYTE-IDENTICAL to an uninterrupted run with
+    * the same seed and S: sweep RNG streams key on (seed, docId, iter,
+    * shard), model recounts are integer treeReduce sums, and the layout
+    * — the only remaining degree of freedom — is now a pure function of
     * (data, num_parts) on both paths. */
   def trainResumable(corpus: Dataset[DocState], numWords: Int, cfg: LdaConfig,
-      dir: String, every: Int): Result = {
+      dir: String, every: Int, numShards: Int = 0): Result = {
     require(every >= 1, "checkpoint cadence `every` must be >= 1")
     val spark = corpus.sparkSession
     def hook(p: Int) = (i: Int, d: Dataset[DocState], a: Array[Double], n: Int,
@@ -88,24 +121,100 @@ object LdaTrainer {
     TrainCheckpoint.load(spark, dir, numWords, cfg.numTopics) match {
       case Some(st) =>
         val p = if (st.numParts > 0) st.numParts else st.docs.rdd.getNumPartitions
-        trainFrom(canonicalLayout(st.docs, p), numWords, cfg, st.iter,
+        trainFrom(canonicalLayout(st.docs, p), numWords, cfg, numShards, st.iter,
           Some(st.accum), st.nAccum, st.lls, st.iterMs, st.bcastMs, hook(p))
       case None =>
         val p = corpus.rdd.getNumPartitions
-        trainFrom(canonicalLayout(corpus, p), numWords, cfg, 0, None, 0,
+        trainFrom(canonicalLayout(corpus, p), numWords, cfg, numShards, 0, None, 0,
           Array.empty, Array.empty, Array.empty, hook(p))
     }
   }
 
+  /** Shard s of S owns word ids in [lo, hi). Range (not hash) sharding:
+    * a shard's rows form one contiguous slice of the flat model. Both
+    * bounds clamp to V: with per = ⌈V/S⌉, trailing shards can start past
+    * V whenever S ∤ V (e.g. V=31, S=15 → per=3, shard 11 starts at 33) —
+    * those are EMPTY [V, V) shards, not negative slices. */
+  private[lda] def shardBounds(numWords: Int, numShards: Int, s: Int): (Int, Int) = {
+    val per = (numWords + numShards - 1) / numShards
+    (math.min(s * per, numWords), math.min((s + 1) * per, numWords))
+  }
+
+  /** Largest shard count with no empty trailing shards: with ⌈V/S⌉ rows
+    * per shard only ⌈V/⌈V/S⌉⌉ shards hold any words — iterating past that
+    * costs a full corpus pass per EMPTY shard. Two requested counts that
+    * normalize identically produce identical chains; [[shardBounds]] on
+    * the normalized count gives the same ranges as on the requested one.
+    * At least 1, also for V = 0. */
+  private[lda] def effectiveShards(numWords: Int, numShards: Int): Int = {
+    val per = math.max(1, (numWords + numShards - 1) / numShards)
+    math.max(1, (numWords + per - 1) / per)
+  }
+
+  /** One training iteration: `numShards` passes over the word ranges of
+    * [[shardBounds]] (see the object doc). `docs` is the iteration-start
+    * generation; it stays cached until the caller drops it. Returns the
+    * swept generation (persisted and materialized), the model after the
+    * iteration — `model` itself, updated in place, at S ≥ 2; the tallied
+    * array at S = 1, where `model` is the live broadcast value and is
+    * left untouched — the pre-sweep log-likelihood (0 unless
+    * `cfg.computeLikelihood`), and the broadcast time in ns. */
+  private[lda] def iteration(docs: RDD[DocState], model: Array[Long], numWords: Int,
+      cfg: LdaConfig, numShards: Int, iter: Int): (RDD[DocState], Array[Long], Double, Long) = {
+    val sc = docs.sparkContext
+    val k = cfg.numTopics
+    val global = numWords * k
+    var current = docs
+    var next = model
+    var ll = 0.0
+    var bcNanos = 0L
+    // `s` is a fresh val per pass: a task closure recomputed from lineage
+    // must key its RNG on its own shard, not on a shared loop variable
+    for (s <- 0 until numShards) {
+      val (lo, hi) = shardBounds(numWords, numShards, s)
+      val t0 = System.nanoTime()
+      val bc = sc.broadcast(
+        if (numShards == 1) model
+        else java.util.Arrays.copyOfRange(model, lo * k, hi * k) ++
+          java.util.Arrays.copyOfRange(model, global, global + k))
+      bcNanos += System.nanoTime() - t0
+      val stream = if (numShards == 1) iter.toLong else iter.toLong << 16 | s
+      val swept = Gibbs.sweepRdd(current, bc, lo, hi, numWords, k, cfg.alpha, cfg.beta,
+        cfg.seed, stream).persist(StorageLevel.MEMORY_AND_DISK)
+      // lineage cut every 10 passes, marked BEFORE the materializing
+      // action below (RDD.localCheckpoint must precede the first job);
+      // bounds recompute depth after executor loss
+      if ((iter.toLong * numShards + s + 1) % 10 == 0) swept.localCheckpoint()
+      val likelihood = if (!cfg.computeLikelihood) None else Some((docs,
+        (d: DocState, sum: Double) =>
+          if (numShards == 1)
+            sum + Gibbs.logLikelihood(d, bc.value, lo, hi, numWords, cfg.alpha, cfg.beta, k, 0.0)
+          else Gibbs.logLikelihood(d, bc.value, lo, hi, numWords, cfg.alpha, cfg.beta, k, sum)))
+      val (rows, passLL) = Gibbs.countModelRdd(swept, lo, hi, k, likelihood) // materializes
+      ll += passLL
+      if (numShards == 1) next = rows
+      else {
+        System.arraycopy(rows, 0, model, lo * k, (hi - lo) * k)
+        if (s == numShards - 1) System.arraycopy(rows, (hi - lo) * k, model, global, k)
+      }
+      if (current ne docs) current.unpersist(blocking = false)
+      current = swept
+      bc.unpersist(blocking = false)
+    }
+    (current, next, ll, bcNanos)
+  }
+
   private def trainFrom(corpus: Dataset[DocState], numWords: Int, cfg: LdaConfig,
-      startIter: Int, accum0: Option[Array[Double]], nAccum0: Int,
+      numShards: Int, startIter: Int, accum0: Option[Array[Double]], nAccum0: Int,
       lls0: Array[Double], iterMs0: Array[Long], bcastMs0: Array[Long],
       onCheckpoint: (Int, Dataset[DocState], Array[Double], Int, Array[Double],
         Array[Long], Array[Long]) => Unit): Result = {
+    require(numShards >= 0, "numShards must be >= 0 (0: derived from the model size)")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
     val k = cfg.numTopics
+    val nShards = effectiveShards(numWords,
+      if (numShards >= 1) numShards else Lda.numShards(numWords, k))
     // The loop lives at the RDD layer: per-partition imperative compute
     // with no relational structure — Catalyst has nothing to optimize,
     // and a Dataset persist would encoder-serialize every DocState each
@@ -121,8 +230,7 @@ object LdaTrainer {
     var docs = corpus.rdd.mapPartitions(it => it, preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
     docs.localCheckpoint()
-    var pinned: RDD[_] = docs // the currently-persisted generation
-    var model = Gibbs.countModelRdd(docs, numWords, k)._1
+    var model = Gibbs.countModelRdd(docs, 0, numWords, k)._1
     val accum = accum0.getOrElse(new Array[Double]((numWords + 1) * k))
     var nAccum = nAccum0
     // ArrayBuffer, NOT Array.newBuilder: the per-checkpoint snapshots below
@@ -141,33 +249,18 @@ object LdaTrainer {
     var iter = startIter
     while (iter < cfg.totalIterations) {
       val t0 = System.nanoTime()
-      val bc = sc.broadcast(model)
-      val tBc = System.nanoTime()
-      val swept = Gibbs.sweepRdd(docs, bc, numWords, k, cfg.alpha, cfg.beta,
-        cfg.seed, iter).persist(StorageLevel.MEMORY_AND_DISK)
-      // lineage cut every 10 iters, marked BEFORE the materializing
-      // action below (RDD.localCheckpoint must precede the first job);
-      // bounds recompute depth after executor loss
-      if ((iter + 1) % 10 == 0) swept.localCheckpoint()
-      // the pre-sweep LL (quirk #6: it describes the previous iteration's
-      // model) is summed from the still-cached pre-sweep docs by the
-      // tally's own tasks
-      val likelihood = if (!cfg.computeLikelihood) None else Some((docs,
-        (d: DocState) => Gibbs.logLikelihood(d, bc.value, numWords, cfg.alpha, cfg.beta, k)))
-      val (m, ll) = Gibbs.countModelRdd(swept, numWords, k, likelihood) // materializes
+      val (swept, m, ll, bcNanos) = iteration(docs, model, numWords, cfg, nShards, iter)
       model = m
       if (cfg.computeLikelihood) lls += ll
+      docs.unpersist(blocking = false)
       docs = swept
-      pinned.unpersist(blocking = false)
-      pinned = swept
-      bc.unpersist(blocking = false)
       if (iter >= cfg.burnInIterations) {
         var i = 0
         while (i < accum.length) { accum(i) += model(i); i += 1 }
         nAccum += 1
       }
       iterMs += (System.nanoTime() - t0) / 1000000L
-      bcastMs += (tBc - t0) / 1000000L
+      bcastMs += bcNanos / 1000000L
       iter += 1
       if (onCheckpoint != null)
         onCheckpoint(iter, spark.createDataset(docs), accum, nAccum,
@@ -177,7 +270,7 @@ object LdaTrainer {
       var i = 0
       while (i < accum.length) { accum(i) /= nAccum; i += 1 }
     }
-    val gen = pinned
+    val gen = docs
     Result(model, accum, lls.toArray, iterMs.toArray, bcastMs.toArray,
       spark.createDataset(docs), numWords,
       release = () => gen.unpersist(blocking = false))
@@ -239,90 +332,55 @@ object LdaInfer {
   * §2.4): `Lda(cfg).fit(documents)` → [[LdaModel]] → `.transform(docs)` /
   * `.topWords(n)` / `.describeTopics`. */
 final case class Lda(cfg: LdaConfig,
-    /** broadcast-path model-size ceiling; above it [[fit]] trains via
-      * [[ShardedLda]] — see [[Lda.BroadcastModelBytesMax]] for the
-      * measured default and [[Lda.shouldShard]] for the rule. */
+    /** model-size ceiling for one-shard training; above it [[fit]] trains
+      * with S ≥ 2 word shards — see [[Lda.BroadcastModelBytesMax]] for the
+      * measured default and [[Lda.numShards]] for the rule. */
     broadcastBytesMax: Long = Lda.BroadcastModelBytesMax) {
 
-  /** documents: DataFrame(doc_id, text). Auto-selects the training path
-    * on the model-size axis (the reference's own scaling law — its
-    * memory formula V×K×8, README.md:125 / model.cc:54): the flat
-    * broadcast path below [[broadcastBytesMax]], the word-sharded path
-    * above it. The sharded path's final counts are assembled into the
-    * same driver-side [[LdaModel]] (fit's contract is a local model;
-    * for models too big for ONE driver array, use [[ShardedLda]]
-    * directly and keep the model distributed). Sharded `averaged` is
-    * the raw final counts (the reference's mpi output kind, quirk #1 —
-    * that path has no burn-in accumulator). */
+  /** documents: DataFrame(doc_id, text). Trains with [[LdaTrainer]] at the
+    * shard count the model size calls for (the reference's own scaling
+    * law — its memory formula V×K×8, README.md:125 / model.cc:54): one
+    * shard up to [[broadcastBytesMax]], [[Lda.recommendedShards]] above
+    * it. Either way the model comes back as one driver-side array, with
+    * the burn-in-averaged model next to the final counts. */
   def fit(documents: DataFrame): LdaModel = {
     val toks = Corpus.tokenize(documents)
     val vocab = Corpus.sortedVocab(toks).cache()
     val numWords = vocab.count().toInt
     val corpus = Corpus.fromTokenIds(toks.join(broadcast(vocab), "tok")
       .select("doc_id", "word_id"), cfg.numTopics, cfg.seed)
-    if (Lda.shouldShard(numWords, cfg.numTopics, broadcastBytesMax)) {
-      val nShards = Lda.recommendedShards(numWords, cfg.numTopics)
-      // loud switch: the sharded path changes `averaged` semantics (raw
-      // final counts, no burn-in accumulator — the reference's mpi kind)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"Lda.fit: model ${Lda.modelBytes(numWords, cfg.numTopics)} B > " +
-          s"$broadcastBytesMax B — auto-switching to the sharded path " +
-          s"($nShards shards); `averaged` will be the raw final counts " +
-          "(no burn-in averaging)")
-      val result = ShardedLda.train(corpus, numWords, cfg, nShards)
-      val counts = new Array[Long]((numWords + 1) * cfg.numTopics)
-      // V-row collect of the final counts — bounded by the same driver
-      // array LdaModel itself holds, not by executor replica memory
-      result.modelRows.collect().foreach { wt =>
-        System.arraycopy(wt.counts, 0, counts, wt.wordId * cfg.numTopics,
-          cfg.numTopics)
-      }
-      // global topic row n(k) = column sums over the word rows (the
-      // flat layout's row V; the sharded model stores word rows only)
-      val global = numWords * cfg.numTopics
-      var w = 0
-      while (w < numWords) {
-        var k = 0
-        while (k < cfg.numTopics) {
-          counts(global + k) += counts(w * cfg.numTopics + k); k += 1
-        }
-        w += 1
-      }
-      result.release()
-      LdaModel(counts, counts.map(_.toDouble), result.likelihoods, vocab,
-        numWords, cfg)
-    } else {
-      val result = LdaTrainer.train(corpus, numWords, cfg)
-      // the model arrays are extracted; release the persisted final corpus
-      // generation (via release(), NOT docs.unpersist — docs can be a narrow
-      // view whose unpersist would be a no-op on the backing cache entry)
-      result.release()
-      LdaModel(result.model, result.averaged, result.likelihoods, vocab,
-        numWords, cfg)
-    }
+    val result = LdaTrainer.train(corpus, numWords, cfg,
+      Lda.numShards(numWords, cfg.numTopics, broadcastBytesMax))
+    // the model arrays are extracted; release the persisted final corpus
+    // generation (via release(), NOT docs.unpersist — docs can be a narrow
+    // view whose unpersist would be a no-op on the backing cache entry)
+    result.release()
+    LdaModel(result.model, result.averaged, result.likelihoods, vocab,
+      numWords, cfg)
   }
 }
 
 object Lda {
 
-  /** MEASURED broadcast→sharded crossover on the model-size axis
+  /** MEASURED one-shard → word-sharded crossover on the model-size axis
     * (NytKsweep r12, `BENCH_ksweep_r12.json` / BENCH.md round 12: the
     * published-scale corpus — 300k docs, V = 102,660, ~100M tokens —
-    * trained through BOTH paths at K ∈ {10, 32, 64, 100, 1000}).
+    * trained both ways at K ∈ {10, 32, 64, 100, 1000}, when the sharded
+    * path was a separate trainer keeping the model distributed).
     * Steady s/iter, local[32]: flat wins 1.9× at 8 MB (0.85 vs 1.62)
     * and 13% at 25 MB (2.02 vs 2.28), the two paths tie at 50 MB
     * (3.36 vs 3.44), sharded wins from 78 MB (4.53 vs 4.86) out to
     * 783 MB (44.2 vs 80.4 — where the flat path also needs
     * `spark.driver.maxResultSize` raised past its 1g default just to
     * run: treeReduce ships whole-model partials). 64 MB is the
-    * measured indifference point; the flat path's per-task clone and
-    * full-model allreduce grow with V×K while the sharded path's
-    * per-shard broadcasts stay bounded, so above this the sharded
-    * path is both faster and the only default-config-safe choice. */
+    * measured indifference point; one shard's per-task clone and
+    * full-model allreduce grow with V×K while S shards' per-pass
+    * broadcasts and partials stay bounded, so above this sharding is
+    * both faster and the only default-config-safe choice. */
   val BroadcastModelBytesMax: Long = 64L << 20
 
-  /** Per-shard broadcast target for the sharded path: big enough to
-    * amortize the per-shard job, small enough that per-task clones stay
+  /** Per-shard broadcast target for sharded training: big enough to
+    * amortize the per-pass job, small enough that per-task clones stay
     * trivial next to executor heaps. */
   val TargetShardBytes: Long = 64L << 20
 
@@ -330,7 +388,7 @@ object Lda {
   def modelBytes(numWords: Int, numTopics: Int): Long =
     (numWords + 1L) * numTopics * 8L
 
-  /** The auto-switch rule [[Lda.fit]] applies. */
+  /** Whether a model of this size trains with S ≥ 2 word shards. */
   def shouldShard(numWords: Int, numTopics: Int,
       thresholdBytes: Long = BroadcastModelBytesMax): Boolean =
     modelBytes(numWords, numTopics) > thresholdBytes
@@ -338,6 +396,13 @@ object Lda {
   def recommendedShards(numWords: Int, numTopics: Int): Int =
     math.max(2, math.ceil(
       modelBytes(numWords, numTopics).toDouble / TargetShardBytes).toInt)
+
+  /** The word-shard count S training uses for a model of this size: 1
+    * unless [[shouldShard]], else [[recommendedShards]]. */
+  def numShards(numWords: Int, numTopics: Int,
+      thresholdBytes: Long = BroadcastModelBytesMax): Int =
+    if (shouldShard(numWords, numTopics, thresholdBytes)) recommendedShards(numWords, numTopics)
+    else 1
 }
 
 final case class LdaModel(

@@ -1,9 +1,10 @@
 package graft.lda
 
-import java.io.{BufferedWriter, FileWriter}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 import java.math.{MathContext, RoundingMode, BigDecimal => JBigDecimal}
 import scala.collection.mutable.ArrayBuffer
-import scala.io.Source
+import scala.io.{Codec, Source}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -22,7 +23,8 @@ import org.apache.spark.sql.functions._
   *
   * The codec runs as plain loops over the V×K values: [[formatDouble]]
   * rounds with `BigDecimal`, and the reader splits lines without a regex
-  * and parses each value with `parseDouble`.
+  * and parses each value with `parseDouble`. Files are UTF-8, like the
+  * corpus, whatever the platform charset.
   *
   * The text model file is a driver-side artifact (V×K longs — ~8 MB at the
   * reference's NYTimes scale); [[writeCountsDistributed]] exports models
@@ -80,7 +82,7 @@ object ModelIO {
     }
 
   private def writeLines(indexToWord: Array[String], path: String)(row: (StringBuilder, Int) => Unit): Unit = {
-    val out = new BufferedWriter(new FileWriter(path))
+    val out = Files.newBufferedWriter(Paths.get(path), UTF_8)
     try {
       val sb = new StringBuilder
       var w = 0
@@ -120,7 +122,7 @@ object ModelIO {
     * line is a word and its values, and must have as many values as the
     * first such line. */
   private def readRows(path: String): (Array[String], Array[Array[Double]]) = {
-    val src = Source.fromFile(path)
+    val src = Source.fromFile(path)(Codec.UTF8)
     try {
       val words = ArrayBuffer.empty[String]
       val rows = ArrayBuffer.empty[Array[Double]]

@@ -3,7 +3,10 @@ package graft.lda
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, Row, SparkSession}
 
-/** Durable training-state store for [[LdaTrainer.trainResumable]].
+/** Durable training-state store for [[LdaTrainer.trainResumable]], at
+  * every word-shard count S. The model is not stored (resume recounts it
+  * from the doc assignments), and neither is S: a resume continues the
+  * same chain only with the S it was started with.
   *
   * Layout: `dir/ckpt_<iter>/{docs,accum,meta}` — doc assignments as
   * parquet (the only corpus-sized piece, written distributed), the

@@ -53,11 +53,12 @@ object LdaQueries {
       .orderBy("iteration")
   }
 
-  /** Word-sharded training path (SURVEY §7.4 risk 2 — the huge-V×K
-    * regime where the model can't broadcast whole): model as distributed
-    * rows, swept shard-at-a-time. Output: n(w,·) totals per word id,
-    * deterministic invariant view (row sum = word occurrence count, which
-    * IS oracle-checkable — it equals the corpus word frequency). */
+  /** Word-sharded training (SURVEY §7.4 risk 2 — the huge-V×K regime
+    * where the model can't broadcast whole): [[LdaTrainer]] at S = 2,
+    * each iteration two passes over word ranges. Output: n(w,·) totals
+    * per word id, deterministic invariant view (row sum = word occurrence
+    * count, which IS oracle-checkable — it equals the corpus word
+    * frequency). */
   def shardedWordTotals(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir).select("doc_id", "text")
@@ -65,22 +66,21 @@ object LdaQueries {
     val vocab = Corpus.sortedVocab(toks).cache()
     val numWords = vocab.count().toInt
     val corpus = Corpus.fromTokenIds(toks.join(org.apache.spark.sql.functions.broadcast(vocab), "tok").select("doc_id", "word_id"), 4, 42L)
-    // 2 iters × 2 shards exercises the full path (sweep, recount, shard
-    // broadcast); the conserved-totals oracle is iteration-count-invariant
-    val res = ShardedLda.train(corpus, numWords,
-      LdaConfig(numTopics = 4, alpha = 0.1, beta = 0.01,
+    // 2 iters × 2 shards exercises the full path (shard broadcast, sweep,
+    // ranged recount); the conserved-totals oracle is
+    // iteration-count-invariant
+    val k = 4
+    val res = LdaTrainer.train(corpus, numWords,
+      LdaConfig(numTopics = k, alpha = 0.1, beta = 0.01,
         totalIterations = 2, seed = 42L), numShards = 2)
-    // materialize the V-row totals (localCheckpoint: blocks die with the
-    // returned reference), then release the training generation — the
-    // Result cache-lifetime contract; without this every call leaks the
-    // final docs+model cache entries into a long-running session
-    val totals = res.modelRows.map(r => (r.wordId, r.counts.sum))
+    res.release()
+    // materialized (localCheckpoint) before the vocabulary cache goes
+    val totals = (0 until numWords).map(w => (w, res.model.slice(w * k, (w + 1) * k).sum))
       .toDF("word_id", "total")
       .join(vocab, "word_id")
       .select(col("tok"), col("total"))
       .orderBy("tok")
       .localCheckpoint(eager = true)
-    res.release()
     vocab.unpersist(blocking = false)
     totals
   }

@@ -1,7 +1,7 @@
 package graft
 
 /** The repo-wide cache-lifetime contract (scaladoc'd at
-  * [[graft.lda.ShardedLda.Result]]): operators that persist internal state
+  * [[graft.lda.LdaTrainer.Result]]): operators that persist internal state
   * either expose `release()` (Result-style returns) or hand back a
   * `localCheckpoint`ed Dataset whose blocks die with the caller's
   * reference. Either way, REPEATED calls must leave the session's
@@ -113,11 +113,13 @@ class CacheLifetimeSpec extends SparkSpec {
     val ds = spark.createDataset(docs)
     val cfg = graft.lda.LdaConfig(2, 0.1, 0.01, totalIterations = 2,
       burnInIterations = 0, seed = 5L)
-    graft.lda.ShardedLda.train(ds, 4, cfg, numShards = 2).release()
+    graft.lda.LdaTrainer.train(ds, 4, cfg, numShards = 2).release()
     val baseline = drainedBaseline()
     (1 to 5).foreach { _ =>
-      val res = graft.lda.ShardedLda.train(ds, 4, cfg, numShards = 2)
-      val inferred = graft.lda.ShardedLda.infer(ds, res.modelRows, 4, cfg, numShards = 2)
+      val res = graft.lda.LdaTrainer.train(ds, 4, cfg, numShards = 2)
+      val modelRows = spark.createDataset((0 until 4).map(w =>
+        graft.lda.WordTopics(w, res.model.slice(w * 2, (w + 1) * 2))))
+      val inferred = graft.lda.ShardedLda.infer(ds, modelRows, 4, cfg, numShards = 2)
       assert(inferred.count() == 40L)
       res.release()
     }

@@ -192,15 +192,17 @@ object NytTrain {
   }
 }
 
-/** Broadcast-vs-sharded crossover measurement on the MODEL-SIZE axis
+/** One-shard vs word-sharded crossover measurement on the MODEL-SIZE axis
   * (BASELINE.md's scaling law is the memory formula V×K×8 bytes,
   * reference README.md:125 / model.cc:54): trains the SAME corpus at a
-  * given K through BOTH [[graft.lda.LdaTrainer]] (flat broadcast model;
-  * every task clones it — the AD-LDA replica) and
-  * [[graft.lda.ShardedLda]] (S shard-bounded broadcasts per iteration),
-  * printing one JSON line per mode with per-iteration walls. The
-  * measured s/iter pair at K ∈ {10, 100, 1000} is what
-  * `Lda.fit`'s auto-switch threshold encodes.
+  * given K with [[graft.lda.LdaTrainer]] in one mode per run, printing
+  * one JSON line with per-iteration walls. `flat` is S = 1 (the whole
+  * model broadcast; every task clones it — the AD-LDA replica);
+  * `sharded:S` runs S word-shard passes per iteration, each broadcasting
+  * and tallying only (V/S + 1)×K longs. The measured s/iter pair at
+  * K ∈ {10, 100, 1000} is what [[graft.lda.Lda.numShards]]'s threshold
+  * encodes (measured in r12, when the sharded mode was a separate
+  * trainer).
   * Run: sbt "Test/runMain graft.NytKsweep /tmp/nyt/corpus <k> <iters>
   *   <flat|sharded:S> <out.json>"
   */
@@ -242,19 +244,15 @@ object NytKsweep {
       totalIterations = iters, burnInIterations = math.max(0, iters - 5),
       computeLikelihood = false, seed = 42L)
     val tTrain0 = System.nanoTime()
-    val (iterSec, bcastSec, shards) = mode match {
-      case "flat" =>
-        val r = graft.lda.LdaTrainer.train(corpus, numWords, cfg)
-        r.release()
-        (r.iterMillis.map(_ / 1000.0), r.bcastMillis.map(_ / 1000.0), 1)
-      case s if s.startsWith("sharded:") =>
-        val nSh = s.stripPrefix("sharded:").toInt
-        val r = graft.lda.ShardedLda.train(corpus, numWords, cfg, numShards = nSh)
-        r.modelRows.queryExecution.toRdd.count() // materialize before timing stops
-        r.release()
-        (r.iterMillis.map(_ / 1000.0), Array.empty[Double], nSh)
+    val shards = mode match {
+      case "flat" => 1
+      case s if s.startsWith("sharded:") => s.stripPrefix("sharded:").toInt
       case other => sys.error(s"mode must be flat or sharded:S, got $other")
     }
+    val r = graft.lda.LdaTrainer.train(corpus, numWords, cfg, numShards = shards)
+    r.release()
+    val iterSec = r.iterMillis.map(_ / 1000.0)
+    val bcastSec = r.bcastMillis.map(_ / 1000.0)
     val wall = (System.nanoTime() - tTrain0) / 1e9
     val steady = if (iterSec.length > 3) iterSec.drop(3) else iterSec
     val steadyMean = steady.sum / steady.length
@@ -263,9 +261,7 @@ object NytKsweep {
       s""""vocab":$numWords,"tokens":$nToks,"model_mb":$modelMb,""" +
       s""""iters":$iters,"train_wall_sec":${f"$wall%.1f"},""" +
       s""""iter_sec":[${iterSec.map(s => f"$s%.2f").mkString(",")}],""" +
-      (if (bcastSec.nonEmpty)
-        s""""bcast_sec":[${bcastSec.map(s => f"$s%.3f").mkString(",")}],"""
-       else "") +
+      s""""bcast_sec":[${bcastSec.map(s => f"$s%.3f").mkString(",")}],""" +
       s""""steady_iter_sec":${f"$steadyMean%.2f"}}"""
     println(json)
     val w = new java.io.PrintWriter(outJson)

@@ -288,11 +288,11 @@ object ScalingMain {
 
     // sharded LDA: vocab AND corpus grow m× together (prefixed replicas),
     // shard count grows with V — the huge-V regime where the model never
-    // broadcasts whole (SURVEY §7.4 risk 2). The infer leg drives
-    // ShardedLda.infer at ≥15 shards against the trained distributed
-    // model and checks token conservation (Σ per-doc averaged topic
-    // counts == corpus tokens) — the model is never materialized whole
-    // on either path.
+    // broadcasts whole (SURVEY §7.4 risk 2). Training runs S word-shard
+    // passes per iteration; the infer leg drives ShardedLda.infer at ≥15
+    // shards against the trained model as distributed rows and checks
+    // token conservation (Σ per-doc averaged topic counts == corpus
+    // tokens).
     println("mult |   tokens |  vocab | shards | train 2it | inf_shards | infer 2it | conserved")
     sweep("r6b") { m =>
       val docs = replicated(m)
@@ -906,14 +906,16 @@ object ScalingMain {
       val nTok = corpus.rdd.map(_.topics.length.toLong).reduce(_ + _)
       val shards = math.max(2, m / 2)
       val t0 = System.nanoTime()
-      val res = lda.ShardedLda.train(corpus, v,
+      val res = lda.LdaTrainer.train(corpus, v,
         lda.LdaConfig(numTopics = 4, alpha = 0.1, beta = 0.01,
           totalIterations = 2, seed = 42L), numShards = shards)
-      res.modelRows.count()
       val t = (System.nanoTime() - t0) / 1e9
       val infShards = math.min(v, math.max(15, shards))
+      val modelRows = spark.createDataset((0 until v).map(w =>
+        lda.WordTopics(w, res.model.slice(w * 4, (w + 1) * 4))))(
+        org.apache.spark.sql.Encoders.product[lda.WordTopics])
       val t1 = System.nanoTime()
-      val inferred = lda.ShardedLda.infer(corpus, res.modelRows, v,
+      val inferred = lda.ShardedLda.infer(corpus, modelRows, v,
         lda.LdaConfig(numTopics = 4, alpha = 0.1, beta = 0.01,
           totalIterations = 2, burnInIterations = 0, seed = 43L),
         numShards = infShards)

@@ -85,8 +85,8 @@ class GoldenChainSpec extends SparkSpec {
   }
 
   test("sharded training: model rows and likelihood trace") {
-    val r = ShardedLda.train(corpus, v, cfg.copy(computeLikelihood = true), numShards = 3)
-    assert(rows(r.modelRows.collect()) ==
+    val r = LdaTrainer.train(corpus, v, cfg.copy(computeLikelihood = true), numShards = 3)
+    assert(rows((0 until v).map(w => WordTopics(w, r.model.slice(w * k, (w + 1) * k))).toArray) ==
       "5d38838eeb2f2ae8f39f217cc54c94e26f0a49697555415f27ccb901dcc74efa")
     assert(doubles(r.likelihoods) ==
       "2ebfcefa12ca747572d238ae32be7091008e2933bb0b118f043b54a39cc52a98")

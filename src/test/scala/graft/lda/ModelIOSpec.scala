@@ -32,6 +32,28 @@ class ModelIOSpec extends SparkSpec {
     assert(back.sameElements(model)) // incl. recomputed global row
   }
 
+  test("model files are UTF-8 whatever the platform charset: non-ASCII words round-trip") {
+    val words = Array("z", "é", "😀", "ｚ", "ﬁ")
+    val k = 2
+    val counts = Array.tabulate((words.length + 1) * k)(i => (i % 7).toLong + 4)
+    for (t <- 0 until k) counts(words.length * k + t) = (0 until words.length).map(w => counts(w * k + t)).sum
+    val dir = Files.createTempDirectory("m")
+    def utf8(path: String) = new String(Files.readAllBytes(Paths.get(path)), "UTF-8")
+    val countsPath = dir.resolve("counts.txt").toString
+    ModelIO.writeCounts(counts, k, words, countsPath)
+    assert(utf8(countsPath).linesIterator.map(_.takeWhile(_ != '\t')).toSeq == words.toSeq)
+    val (back, wordsBack) = ModelIO.readModel(countsPath)
+    assert(wordsBack.sameElements(words) && back.sameElements(counts))
+    val avgPath = dir.resolve("avg.txt").toString
+    ModelIO.writeAveraged(counts.map(_ / 2.0), k, words, avgPath)
+    assert(ModelIO.readModel(avgPath)._2.sameElements(words))
+    val lines = ModelIO.viewModelLines(avgPath)
+    words.foreach(w => assert(lines.exists(_.startsWith(w + " ")), s"$w missing from the report"))
+    val viewPath = dir.resolve("view.txt").toString
+    graft.apps.ViewModelApp.main(Array(avgPath, viewPath))
+    assert(utf8(viewPath).linesIterator.toSeq == lines)
+  }
+
   test("averaged write uses C++ double formatting; read truncates to int64 (model.cc:126-127)") {
     val k = 2
     val words = Array("a", "b")

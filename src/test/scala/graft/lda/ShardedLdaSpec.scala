@@ -38,34 +38,36 @@ class ShardedLdaSpec extends SparkSpec {
     (0 until k).foreach(t => assert(g(t) == flat(v * k + t)))
   }
 
-  test("sweepIteration conserves per-word and total counts across shards") {
+  private val iterCfg = LdaConfig(k, 0.1, 0.01, totalIterations = 1, seed = 5L)
+
+  test("a 3-shard iteration conserves per-word and total counts across shards") {
     val docs = corpus(30)
     val before = ShardedLda.countModelRows(docs, k).collect()
       .map(r => r.wordId -> r.counts.sum).toMap
-    val swept = ShardedLda.sweepIteration(docs,
-      ShardedLda.countModelRows(docs, k), v, k, numShards = 3,
-      alpha = 0.1, beta = 0.01, seed = 5L, iter = 0)
+    val (sweptRdd, model, _, _) = LdaTrainer.iteration(docs.rdd,
+      Gibbs.countModel(docs, v, k), v, iterCfg, numShards = 3, iter = 0)
+    val swept = spark.createDataset(sweptRdd)
     val after = ShardedLda.countModelRows(swept, k).collect()
       .map(r => r.wordId -> r.counts.sum).toMap
     assert(before == after) // topic flips never change word totals
     val g = ShardedLda.globalRow(ShardedLda.countModelRows(swept, k), k)
     assert(g.sum == 30 * 9) // 9 occurrences per doc
     swept.collect().foreach(d => assert(d.topics.forall(t => t >= 0 && t < k)))
+    // the driver model assembled from the passes is the swept corpus's tally
+    assert(model.sameElements(Gibbs.countModel(swept, v, k)))
   }
 
   test("a shard pass recomputed after its cache is dropped resamples identically") {
     // each shard pass keys its RNG on its own shard index, so lineage
     // recompute (block loss, eviction) must replay the same draws
     val docs = corpus(30).rdd
-    val modelRows = ShardedLda.countModelRowsRdd(docs, k).persist()
-    val swept = ShardedLda.sweepIterationRdd(docs, modelRows, v, k, numShards = 3,
-      alpha = 0.1, beta = 0.01, seed = 5L, iter = 0, checkpointLast = false)
+    val (swept, _, _, _) = LdaTrainer.iteration(docs,
+      Gibbs.countModelRdd(docs, 0, v, k)._1, v, iterCfg, numShards = 3, iter = 0)
     def topics = swept.collect().sortBy(_.docId).map(_.topics.toSeq)
     val first = topics
     swept.unpersist(blocking = true)
     val changed = first.zip(topics).count { case (a, b) => a != b }
     assert(changed == 0, s"$changed of 30 docs resampled differently")
-    modelRows.unpersist(blocking = true)
   }
 
   test("sharded fold-in lineage does not grow with iterations (V=12, S=5 → 4 shards)") {
@@ -84,15 +86,15 @@ class ShardedLdaSpec extends SparkSpec {
   }
 
   test("sharded training is deterministic for fixed seed and shards") {
-    val a = ShardedLda.train(corpus(20), v,
+    val a = LdaTrainer.train(corpus(20), v,
       LdaConfig(k, 0.1, 0.01, totalIterations = 3, seed = 77L), numShards = 3)
-    val b = ShardedLda.train(corpus(20), v,
+    val b = LdaTrainer.train(corpus(20), v,
       LdaConfig(k, 0.1, 0.01, totalIterations = 3, seed = 77L), numShards = 3)
     val ta = a.docs.collect().sortBy(_.docId).map(_.topics.toSeq)
     val tb = b.docs.collect().sortBy(_.docId).map(_.topics.toSeq)
     assert(ta.toSeq == tb.toSeq)
     // different shard count → different (but valid) chain
-    val c = ShardedLda.train(corpus(20), v,
+    val c = LdaTrainer.train(corpus(20), v,
       LdaConfig(k, 0.1, 0.01, totalIterations = 3, seed = 77L), numShards = 2)
     assert(c.docs.collect().forall(_.topics.forall(t => t >= 0 && t < k)))
   }
@@ -181,11 +183,13 @@ class ShardedLdaSpec extends SparkSpec {
     // collectShard (shard 11 of 15 over V=31 at the 100× scaling run) —
     // bounds must clamp and the loops must skip the empty tail.
     val docs = corpus(20)
-    val res = ShardedLda.train(docs, v,
+    val res = LdaTrainer.train(docs, v,
       LdaConfig(k, 0.1, 0.01, totalIterations = 2, seed = 5L), numShards = 10)
-    val totals = res.modelRows.collect().map(_.counts.sum).sum
+    val rows = spark.createDataset((0 until v).map(w =>
+      WordTopics(w, res.model.slice(w * k, (w + 1) * k))))
+    val totals = rows.collect().map(_.counts.sum).sum
     assert(totals == 20 * 9) // word totals conserved through 10-shard sweeps
-    val inferred = ShardedLda.infer(docs, res.modelRows, v,
+    val inferred = ShardedLda.infer(docs, rows, v,
       LdaConfig(k, 0.1, 0.01, totalIterations = 2, burnInIterations = 0, seed = 6L),
       numShards = 10)
     val mass = inferred.collect()
@@ -199,8 +203,8 @@ class ShardedLdaSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-sharded-ckpt").toString
     val ds = corpus(20)
     val cfg8 = LdaConfig(k, 0.1, 0.01, totalIterations = 8, seed = 7L)
-    val full = ShardedLda.trainResumable(ds, v, cfg8, numShards = 3, dir, every = 4)
-    assert(full.modelRows.collect().map(_.counts.sum).sum == 20 * 9)
+    val full = LdaTrainer.trainResumable(ds, v, cfg8, dir, every = 4, numShards = 3)
+    assert(full.model.take(v * k).sum == 20 * 9)
     full.release()
     // ckpt_4 must exist and be complete; resuming twice from the same
     // copied checkpoint must give identical chains (deterministic resume)
@@ -211,17 +215,17 @@ class ShardedLdaSpec extends SparkSpec {
       else Files.copy(src.toPath, dst.toPath)
     }
     copy(new java.io.File(s"$dir/ckpt_4"), new java.io.File(s"$dir2/ckpt_4"))
-    val b = ShardedLda.trainResumable(ds, v, cfg8, numShards = 3, dir2, every = 100)
-    val mb = b.modelRows.collect().map(r => r.wordId -> r.counts.toSeq).toMap
+    val b = LdaTrainer.trainResumable(ds, v, cfg8, dir2, every = 100, numShards = 3)
+    val mb = b.model.toSeq
     // timing trace restored on resume: 4 checkpointed + 4 live iterations,
     // parallel to likelihoods (the Result field doc's contract)
     assert(b.iterMillis.length == 8)
     b.release()
-    val c = ShardedLda.trainResumable(ds, v, cfg8, numShards = 3, dir2, every = 100)
-    val mc = c.modelRows.collect().map(r => r.wordId -> r.counts.toSeq).toMap
+    val c = LdaTrainer.trainResumable(ds, v, cfg8, dir2, every = 100, numShards = 3)
+    val mc = c.model.toSeq
     c.release()
     assert(mb == mc)
-    assert(mb.values.map(_.sum).sum == 20 * 9) // resumed totals conserved
+    assert(mb.take(v * k).sum == 20 * 9) // resumed totals conserved
   }
 
   test("sharded resume is byte-identical to an uninterrupted run") {
@@ -229,14 +233,14 @@ class ShardedLdaSpec extends SparkSpec {
     val ds = corpus(20)
     val cfg8 = LdaConfig(k, 0.1, 0.01, totalIterations = 8, seed = 7L)
     val dirA = Files.createTempDirectory("graft-sharded-bi-a").toString
-    val a = ShardedLda.trainResumable(ds, v, cfg8, numShards = 3, dirA, every = 100)
-    val ma = a.modelRows.collect().map(r => r.wordId -> r.counts.toSeq).toMap
+    val a = LdaTrainer.trainResumable(ds, v, cfg8, dirA, every = 100, numShards = 3)
+    val ma = a.model.toSeq
     a.release()
     val dirB = Files.createTempDirectory("graft-sharded-bi-b").toString
-    ShardedLda.trainResumable(ds, v, cfg8.copy(totalIterations = 4),
-      numShards = 3, dirB, every = 2)
-    val b = ShardedLda.trainResumable(ds, v, cfg8, numShards = 3, dirB, every = 2)
-    val mb = b.modelRows.collect().map(r => r.wordId -> r.counts.toSeq).toMap
+    LdaTrainer.trainResumable(ds, v, cfg8.copy(totalIterations = 4),
+      dirB, every = 2, numShards = 3)
+    val b = LdaTrainer.trainResumable(ds, v, cfg8, dirB, every = 2, numShards = 3)
+    val mb = b.model.toSeq
     b.release()
     assert(ma == mb) // parquet round-trip re-pinned by canonicalLayout
   }
@@ -248,7 +252,7 @@ class ShardedLdaSpec extends SparkSpec {
       DocState.init(id, Array(base, base + 1, base + 2), Array(4, 3, 3), 2, seed = id)
     }
     val ds = spark.createDataset(docs).repartition(2)
-    val res = ShardedLda.train(ds, v,
+    val res = LdaTrainer.train(ds, v,
       LdaConfig(2, 0.1, 0.01, totalIterations = 12,
         computeLikelihood = true, seed = 3L), numShards = 3)
     val lls = res.likelihoods

@@ -1,0 +1,139 @@
+package graft.lda
+
+import graft.SparkSpec
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+/** The one training loop: S word-shard passes per iteration, one Spark
+  * job each; burn-in averaging at every S; likelihood sums that do not
+  * depend on task completion order. */
+class TrainLoopSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val k = 4
+  private val v = 12
+
+  private def corpus(n: Int, partitions: Int) = spark.createDataset(
+    spark.sparkContext.parallelize((0L until n.toLong).map { id =>
+      val ids = Array((id % 4).toInt, 4 + (id % 5).toInt, 9 + (id % 3).toInt)
+      DocState.init(id, ids, Array(3, 2, 4), k, seed = 11L)
+    }, partitions))
+
+  test("shard ranges of the requested and the effective shard count agree (V < 400)") {
+    for (nw <- 1 until 400; s <- 1 to nw) {
+      val eff = LdaTrainer.effectiveShards(nw, s)
+      val requested = (0 until s).map(LdaTrainer.shardBounds(nw, s, _)).filter(r => r._1 < r._2)
+      val effective = (0 until eff).map(LdaTrainer.shardBounds(nw, eff, _))
+      assert(requested == effective, s"V=$nw S=$s")
+    }
+    assert(LdaTrainer.effectiveShards(0, 1) == 1)
+    assert(LdaTrainer.shardBounds(0, 1, 0) == ((0, 0)))
+  }
+
+  /** Jobs the body runs, counted by a listener on a private job group. A
+    * marker job run after the body is seen last (the listener bus delivers
+    * in order), so every job of the body has been counted by then. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"train-loop-jobs-${System.nanoTime()}"
+    val marker = group + "-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith(group)).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobs counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains(marker), "listener never saw the marker job")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  for (s <- Seq(1, 3); ll <- Seq(false, true)) {
+    test(s"S = $s, computeLikelihood = $ll: one job per pass after the initial tally") {
+      val docs = corpus(30, 2)
+      val cfg = LdaConfig(k, 0.1, 0.01, totalIterations = 2, computeLikelihood = ll, seed = 5L)
+      val jobs = jobsOf(LdaTrainer.train(docs, v, cfg, numShards = s).release())
+      assert(jobs == 1 + 2 * s, s"$jobs jobs for 2 iterations at S = $s")
+    }
+  }
+
+  test("S = 3: averaged is the mean of the post-burn-in models") {
+    val docs = corpus(30, 2)
+    val cfg = LdaConfig(k, 0.1, 0.01, totalIterations = 4, burnInIterations = 2, seed = 9L)
+    def run(c: LdaConfig) = { val r = LdaTrainer.train(docs, v, c, numShards = 3); r.release(); r }
+    val full = run(cfg)
+    val m3 = run(cfg.copy(totalIterations = 3)).model
+    val m4 = full.model
+    assert(!m3.sameElements(m4), "the chain did not move between iterations 3 and 4")
+    assert(full.averaged.sameElements(m3.indices.map(i => (m3(i) + m4(i)) / 2.0)))
+  }
+
+  /** The model slice [lo, hi) + global row, as a pass broadcasts it. */
+  private def slice(model: Array[Long], lo: Int, hi: Int): Array[Long] =
+    model.slice(lo * k, hi * k) ++ model.slice(v * k, (v + 1) * k)
+
+  /** Log-likelihood of `docs` under `model`, summed on the driver: per
+    * partition (flat: doc sums added up; chained: word terms folded into
+    * one running sum), then partitions in index order, then shards. */
+  private def reference(docs: RDD[DocState], model: Array[Long], shards: Int,
+      chained: Boolean, cfg: LdaConfig): Double = {
+    val parts = docs.glom().collect()
+    var total = 0.0
+    for (s <- 0 until shards) {
+      val (lo, hi) = LdaTrainer.shardBounds(v, shards, s)
+      val rows = slice(model, lo, hi)
+      var shardSum = 0.0
+      parts.foreach { p =>
+        var acc = 0.0
+        p.foreach { d =>
+          acc =
+            if (chained) Gibbs.logLikelihood(d, rows, lo, hi, v, cfg.alpha, cfg.beta, k, acc)
+            else acc + Gibbs.logLikelihood(d, rows, lo, hi, v, cfg.alpha, cfg.beta, k, 0.0)
+        }
+        shardSum += acc
+      }
+      total += shardSum
+    }
+    total
+  }
+
+  test("likelihood sums add partition partials in partition order (8 partitions, 5 runs)") {
+    val docs = corpus(64, 8)
+    val cfg = LdaConfig(k, 0.1, 0.01, totalIterations = 3, computeLikelihood = true, seed = 21L)
+    val model0 = Gibbs.countModel(docs, v, k)
+    val rows0 = spark.createDataset((0 until v).map(w =>
+      WordTopics(w, model0.slice(w * k, (w + 1) * k))))
+    // iteration i's pre-sweep state is the state after i iterations
+    val trace = Seq(1, 3).map { s =>
+      s -> (0 until cfg.totalIterations).map { i =>
+        if (i == 0) reference(docs.rdd, model0, s, chained = s > 1, cfg)
+        else {
+          val r = LdaTrainer.train(docs, v, cfg.copy(totalIterations = i), numShards = s)
+          try reference(r.docs.rdd, r.model, s, chained = s > 1, cfg) finally r.release()
+        }
+      }
+    }.toMap
+    val corpusRef = reference(docs.rdd, model0, 1, chained = false, cfg)
+    val shardedRef = reference(docs.rdd, model0, 3, chained = true, cfg)
+    for (run <- 1 to 5) {
+      val bc = spark.sparkContext.broadcast(model0)
+      assert(Gibbs.corpusLikelihood(docs, bc, v, k, cfg.alpha, cfg.beta) == corpusRef, s"run $run")
+      bc.destroy()
+      assert(ShardedLda.shardedLikelihood(docs, rows0, v, cfg, numShards = 3) == shardedRef,
+        s"run $run")
+      for (s <- Seq(1, 3)) {
+        val r = LdaTrainer.train(docs, v, cfg, numShards = s)
+        r.release()
+        assert(r.likelihoods.toSeq == trace(s), s"run $run, S = $s")
+      }
+    }
+  }
+}
