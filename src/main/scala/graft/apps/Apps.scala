@@ -141,52 +141,53 @@ object InferApp {
 
   /** Session-preserving body (separated so specs can drive it).
     *
-    * The result sink is distributed end-to-end: formatting happens on the
-    * executors, the lines are range-partitioned by doc_id (so part-file
-    * order == input order), and the driver only STREAMS the ordered part
-    * files byte-by-byte into the single positional text file the reference
-    * format requires — it never holds the result set (or even the id set)
-    * in memory, so a 100×-corpus inference run stays executor-bound. */
+    * One narrow pass over the kept input lines, no shuffle: each task
+    * parses its lines, maps words through the broadcast dictionary
+    * (dropping OOV words — the semi-join of infer.cc:77-80), folds each
+    * line in as its own document, and formats the result line. A line
+    * with no in-vocabulary word still gets its K-zeros line, as in
+    * infer.cc:82-98, where the empty document's prob_dist stays zero: the
+    * output is positional, one line per kept input line. Partitions
+    * follow file order, so the part files, written in partition order,
+    * hold the lines in input order, and the driver only STREAMS them
+    * byte-by-byte into the single result file the reference format
+    * requires — it never holds the result set in memory, so a
+    * 100×-corpus inference run stays executor-bound. */
   def run(spark: SparkSession, f: Flags): Unit = {
-    import org.apache.spark.sql.functions.col
     val (model, words) = ModelIO.readModel(f.modelFile)
     val numWords = words.length
     val k = (model.length / (numWords + 1))
-    import spark.implicits._
+    val cfg = LdaConfig(k, f.alpha, f.beta, f.totalIterations, f.burnInIterations, seed = f.seed)
+    val sc = spark.sparkContext
     // the dictionary goes out as a broadcast map: a V-row vocabulary
     // DataFrame built on the driver is a LocalRelation the planner re-walks
-    val wordIds = spark.sparkContext.broadcast(words.zipWithIndex.toMap)
+    val wordIds = sc.broadcast(words.zipWithIndex.toMap)
+    val bcModel = sc.broadcast(model)
     try {
-      val bow = Corpus.readPldaText(spark, f.inferenceDataFile)
-        .as[(Long, String, Int)]
-        .flatMap { case (doc, tok, c) => wordIds.value.get(tok).map(w => (doc, w, c)) }
-        .toDF("doc_id", "word_id", "c")
-      val cfg = LdaConfig(k, f.alpha, f.beta, f.totalIterations, f.burnInIterations, seed = f.seed)
-      val corpus = Corpus.fromBow(bow, k, f.seed)
-      val results = LdaInfer.infer(corpus, model, numWords, cfg)
-      // output is positional: one line per kept input line, in input order —
-      // docs whose words are ALL out-of-vocabulary (dropped by the dictionary
-      // lookup) still get a K-zeros line, exactly like infer.cc:82-98 where the
-      // empty document's prob_dist stays zero
-      val lines = Corpus.pldaKeptDocIdsDF(spark, f.inferenceDataFile)
-        .join(results.toDF("doc_id", "topics"), Seq("doc_id"), "left")
-        .select(col("doc_id"), col("topics"))
-        .as[(Long, Option[Array[Double]])]
-        .map { case (id, t) =>
-          (id, t.getOrElse(new Array[Double](k)).map(ModelIO.formatDouble).mkString(" "))
+      val lines = Corpus.pldaKeptLines(spark, f.inferenceDataFile).mapPartitions { it =>
+        val dict = wordIds.value
+        val m = bcModel.value
+        val dist = new Array[Double](k)
+        it.map { case (line, docId) =>
+          // the doc Corpus.fromBow builds: (word id, count) pairs sorted,
+          // a word repeated within the line kept as repeated pairs
+          val wcs = Corpus.pldaPairs(line)
+            .flatMap { case (w, c) => dict.get(w).map(id => (id, c)) }.toArray.sorted
+          val doc = DocState.init(docId, wcs.map(_._1), wcs.map(_._2), k, f.seed)
+          LdaInfer.inferDoc(doc, m, numWords, cfg, dist).map(ModelIO.formatDouble).mkString(" ")
         }
-        .toDF("doc_id", "line")
-      val np = math.max(1, spark.sparkContext.defaultParallelism)
-      val partsDir = f.inferenceResultFile + ".parts"
-      lines.repartitionByRange(np, col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .select("line")
-        .write.mode("overwrite").text(partsDir)
-      mergeTextParts(spark, partsDir, f.inferenceResultFile)
-    } finally wordIds.destroy()
+      }
+      val partsDir = new org.apache.hadoop.fs.Path(f.inferenceResultFile + ".parts")
+      partsDir.getFileSystem(sc.hadoopConfiguration).delete(partsDir, true)
+      lines.saveAsTextFile(partsDir.toString)
+      mergeTextParts(spark, partsDir.toString, f.inferenceResultFile)
+    } finally {
+      wordIds.destroy()
+      bcModel.destroy()
+    }
   }
 
-  /** Concatenate a text-sink directory's part files (name order = range-
+  /** Concatenate a text-sink directory's part files (name order =
     * partition order = doc order) into one local file, streaming bytes in
     * constant memory; removes the part directory afterwards. */
   private def mergeTextParts(spark: SparkSession, dir: String, dest: String): Unit = {

@@ -1,5 +1,6 @@
 package graft.lda
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -147,42 +148,35 @@ object Corpus {
 
   /** Kept (non-empty, non-comment) lines with their file line number —
     * the ONE definition of the plda line filter (lda.cc:57-60), shared by
-    * [[readPldaText]] and [[pldaKeptDocIdsDF]] so the positional doc-id
-    * contract can never desynchronize between them. */
-  private def pldaKeptLines(spark: SparkSession, path: String) =
+    * [[readPldaText]] and `InferApp`'s fold-in, so the positional doc-id
+    * contract can never desynchronize between them. Partitions follow
+    * file order. */
+  private[graft] def pldaKeptLines(spark: SparkSession, path: String): RDD[(String, Long)] =
     spark.read.textFile(path).rdd
       .zipWithIndex()
       .filter { case (line, _) =>
         line.nonEmpty && line(0) != '#' && line(0) != '\r' && line(0) != '\n'
       }
 
+  /** The `word count` pairs of one kept plda line (A1 grammar,
+    * lda.cc:61-84), in line order, duplicates kept: counts that are not
+    * a positive Int are dropped, and a trailing unpaired token is ignored
+    * like `ss >> word >> count` stopping at EOF. */
+  private[graft] def pldaPairs(line: String): Iterator[(String, Int)] = {
+    val parts = ModelIO.fields(line)
+    Iterator.range(0, parts.length / 2 * 2, 2).flatMap { i =>
+      val cnt = try parts(i + 1).toInt catch { case _: NumberFormatException => 0 }
+      if (cnt > 0) Some((parts(i), cnt)) else None
+    }
+  }
+
   /** plda text-line corpus (A1 grammar: `word1 cnt1 word2 cnt2 …`; skip
     * empty/#/CR lines — lda.cc:56-84). doc_id = line number in file order. */
   def readPldaText(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     pldaKeptLines(spark, path)
-      .flatMap { case (line, docId) =>
-        val parts = line.trim.split("\\s+")
-        // word count pairs; a trailing unpaired token is ignored like
-        // `ss >> word >> count` stopping at EOF
-        (0 until parts.length / 2 * 2 by 2).flatMap { i =>
-          val cnt = try parts(i + 1).toInt catch { case _: NumberFormatException => 0 }
-          if (cnt > 0) Some((docId, parts(i), cnt)) else None
-        }
-      }
+      .flatMap { case (line, docId) => pldaPairs(line).map { case (w, c) => (docId, w, c) } }
       .toDF("doc_id", "tok", "c")
-  }
-
-  /** doc_id (file line number) of every KEPT line — non-empty, non-comment —
-    * regardless of whether any `word cnt` pair parses, as a
-    * DataFrame(doc_id). The inference output format is purely positional
-    * (infer.cc:63-99 writes one result line per kept input line, even when
-    * every word is OOV or zero-count), so InferApp's writer needs this
-    * pre-join id set to emit all-zeros lines for such docs — distributed,
-    * never a corpus-sized driver collect. */
-  def pldaKeptDocIdsDF(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    pldaKeptLines(spark, path).map(_._2).toDF("doc_id")
   }
 
   /** UCI bag-of-words (A4, testdata/format.py:5-31): docword triples joined

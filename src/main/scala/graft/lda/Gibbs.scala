@@ -37,11 +37,17 @@ import org.apache.spark.sql.Dataset
   * per-occurrence loop.
   *
   * Scale: the sweep is a `mapPartitions` over the doc states with a
-  * broadcast model slice — no shuffle. The tally is a per-partition
-  * count of the slice + `treeReduce` (Spark's allreduce idiom, =
-  * mpi_lda.cc:58-92's chunked MPI_Allreduce). Cost per pass: broadcast
-  * the slice down, same up — at one shard, identical to the reference's
-  * communication profile.
+  * broadcast model slice — no shuffle. The allreduce "up"
+  * ([[countDeltaRdd]]) is a per-partition count DELTA of the slice —
+  * only the entries the sweep changed, as sparse (index, change) pairs —
+  * combined with `treeReduce` (Spark's allreduce idiom, =
+  * mpi_lda.cc:58-92's chunked MPI_Allreduce) and added to the driver's
+  * model. plda allreduces the whole recounted model instead
+  * (mpi_lda.cc:94-111); adding exact integer deltas gives the same
+  * counts while shipping no more than the dense slice, and usually far
+  * less (parameter-server LDA synchronizes the same way, Smola &
+  * Narayanamurthy, VLDB 2010). In training, a full recount
+  * ([[countModelRdd]]) only builds the initial model.
   */
 object Gibbs {
 
@@ -156,12 +162,12 @@ object Gibbs {
   }
 
   /** Tree-combine depth for the model allreduce, sized to the traffic:
-    * one partial model slice per partition flows to the combiner. Under
-    * 256 MB total the driver takes them directly (one stage); beyond that
-    * an intermediate tree level caps driver ingress (the chunked-allreduce
-    * concern of mpi_lda.cc:58-92). At sf0.1 (32 × 1.6 MB) this saves a
-    * whole shuffle stage per training iteration; at 1000 executors with a
-    * 100 MB model it picks the tree. */
+    * at most one dense model slice per partition flows to the combiner.
+    * Under 256 MB total the driver takes them directly (one stage); beyond
+    * that an intermediate tree level caps driver ingress (the
+    * chunked-allreduce concern of mpi_lda.cc:58-92). At sf0.1
+    * (32 × 1.6 MB) this saves a whole shuffle stage per training
+    * iteration; at 1000 executors with a 100 MB model it picks the tree. */
   private def reduceDepth(numPartitions: Int, modelBytes: Long): Int =
     if (numPartitions.toLong * modelBytes <= (256L << 20)) 1 else 2
 
@@ -169,31 +175,16 @@ object Gibbs {
     * (M3 sampler.cc:34-45 + M4 mpi_lda.cc:94-111): per-partition flat
     * tally, tree-combined. Partition-count invariant (addition commutes). */
   def countModel(docs: Dataset[DocState], numWords: Int, numTopics: Int): Array[Long] =
-    countModelRdd(docs.rdd, 0, numWords, numTopics)._1
+    countModelRdd(docs.rdd, 0, numWords, numTopics)
 
-  /** RDD core of [[countModel]], over a word range (a training pass's
-    * allreduce "up"): the rows of the words in [lo, hi), then the global
-    * row n(k) over ALL occurrences — (hi − lo + 1)×K, the model slice
-    * layout of [[sweepDocument]].
-    *
-    * With `likelihood = Some((pre, ll))`, where `pre` is a co-partitioned
-    * RDD (the generation `docs` was swept from), the same tasks also fold
-    * `ll(doc, sum)` over `pre`'s docs of each partition from 0: the
-    * pre-sweep log-likelihood (quirk #6) costs no extra job, and is
-    * exactly-once by construction (a task retry recomputes the same
-    * partial; contrast an accumulator updated in a transformation). Each
-    * partition's sum rides the treeReduce in its own slot, and the slots
-    * are added in partition order, so the total does not depend on which
-    * task finished first. Without it the sum is 0. */
-  def countModelRdd(
-      docs: RDD[DocState], lo: Int, hi: Int, numTopics: Int,
-      likelihood: Option[(RDD[DocState], (DocState, Double) => Double)] = None
-  ): (Array[Long], Double) = {
+  /** RDD core of [[countModel]], over a word range: the rows of the words
+    * in [lo, hi), then the global row n(k) over ALL occurrences —
+    * (hi − lo + 1)×K, the model slice layout of [[sweepDocument]]. */
+  def countModelRdd(docs: RDD[DocState], lo: Int, hi: Int, numTopics: Int): Array[Long] = {
     val k = numTopics
     val size = (hi - lo + 1) * k
     val gOff = (hi - lo) * k
-    val numParts = docs.getNumPartitions
-    def tally(it: Iterator[DocState]): Array[Long] = {
+    docs.mapPartitions { it =>
       val acc = new Array[Long](size)
       it.foreach { doc =>
         var i = 0
@@ -213,27 +204,131 @@ object Gibbs {
           i += 1
         }
       }
-      acc
+      Iterator.single(acc)
+    }.treeReduce({ (a, b) =>
+      var i = 0
+      while (i < a.length) { a(i) += b(i); i += 1 }
+      a
+    }, depth = reduceDepth(docs.getNumPartitions, size * 8L))
+  }
+
+  /** A sparse count delta: one Long per changed entry of a model slice,
+    * the entry's index in the high 32 bits and its (nonzero) change in the
+    * low 32, sorted by index. */
+  private[lda] def packDelta(index: Int, change: Int): Long =
+    index.toLong << 32 | (change & 0xFFFFFFFFL)
+  private[lda] def deltaIndex(packed: Long): Int = (packed >>> 32).toInt
+  private[lda] def deltaChange(packed: Long): Int = packed.toInt
+
+  /** The count delta of one training pass over [lo, hi), on one
+    * partition: `swept` is the pass's output and `input` its input, the
+    * same docs in the same order. Only occurrences of words in the range
+    * move, so the delta covers the range's rows and the global row, in
+    * the model slice layout of [[sweepDocument]]. At most one entry per
+    * slice entry: never more than the dense slice. */
+  private[lda] def countDelta(swept: Iterator[DocState], input: Iterator[DocState],
+      lo: Int, hi: Int, numTopics: Int): Array[Long] = {
+    val k = numTopics
+    val gOff = (hi - lo) * k
+    val acc = new Array[Int](gOff + k)
+    swept.foreach { out =>
+      val in = input.next()
+      var i = 0
+      while (i < in.wordIds.length) {
+        val w = in.wordIds(i)
+        if (w >= lo && w < hi) {
+          val wOff = (w - lo) * k
+          var j = in.offsets(i)
+          val end = in.offsets(i + 1)
+          while (j < end) {
+            val a = in.topics(j)
+            val b = out.topics(j)
+            if (a != b) {
+              acc(wOff + a) -= 1; acc(gOff + a) -= 1
+              acc(wOff + b) += 1; acc(gOff + b) += 1
+            }
+            j += 1
+          }
+        }
+        i += 1
+      }
     }
+    var n = 0
+    var i = 0
+    while (i < acc.length) { if (acc(i) != 0) n += 1; i += 1 }
+    val packed = new Array[Long](n)
+    n = 0
+    i = 0
+    while (i < acc.length) {
+      if (acc(i) != 0) { packed(n) = packDelta(i, acc(i)); n += 1 }
+      i += 1
+    }
+    packed
+  }
+
+  /** Sum of two sparse deltas (a sorted merge; entries that cancel are
+    * dropped). Fails rather than wrap if a change leaves the Int range. */
+  private[lda] def addDeltas(a: Array[Long], b: Array[Long]): Array[Long] = {
+    val out = new Array[Long](a.length + b.length)
+    var i = 0
+    var j = 0
+    var n = 0
+    while (i < a.length || j < b.length) {
+      val ia = if (i < a.length) deltaIndex(a(i)) else Int.MaxValue
+      val ib = if (j < b.length) deltaIndex(b(j)) else Int.MaxValue
+      if (j == b.length || (i < a.length && ia < ib)) { out(n) = a(i); n += 1; i += 1 }
+      else if (i == a.length || ib < ia) { out(n) = b(j); n += 1; j += 1 }
+      else {
+        val c = Math.addExact(deltaChange(a(i)), deltaChange(b(j)))
+        if (c != 0) { out(n) = packDelta(ia, c); n += 1 }
+        i += 1
+        j += 1
+      }
+    }
+    if (n == out.length) out else java.util.Arrays.copyOf(out, n)
+  }
+
+  /** A training pass's allreduce "up" (ParallelLDAModel::
+    * ComputeAndAllReduce, mpi_lda.cc:94-111, shipped as a delta): ONE job
+    * that zips each swept partition with the pass's input partition,
+    * emits its sparse [[countDelta]] over [lo, hi), and combines the
+    * partials with `treeReduce`. The caller adds the sum to the model
+    * the pass sampled against. `swept` must derive from `input` by a
+    * per-doc map (as [[sweepRdd]] does) and `input` should be cached.
+    *
+    * With `likelihood = Some((pre, ll))`, where `pre` is a co-partitioned
+    * RDD (the generation the iteration started from), the same tasks also
+    * fold `ll(doc, sum)` over `pre`'s docs of each partition from 0: the
+    * pre-sweep log-likelihood (quirk #6) costs no extra job, and is
+    * exactly-once by construction (a task retry recomputes the same
+    * partial; contrast an accumulator updated in a transformation). Each
+    * partition's sum rides the treeReduce in its own slot, and the slots
+    * are added in partition order, so the total does not depend on which
+    * task finished first. Without it the sum is 0. */
+  def countDeltaRdd(
+      swept: RDD[DocState], input: RDD[DocState], lo: Int, hi: Int, numTopics: Int,
+      likelihood: Option[(RDD[DocState], (DocState, Double) => Double)] = None
+  ): (Array[Long], Double) = {
+    val numParts = swept.getNumPartitions
     val partials = likelihood match {
-      case None => docs.mapPartitions(it => Iterator.single((tally(it), Array.emptyDoubleArray)))
-      case Some((pre, ll)) => docs.zipPartitions(pre) { (it, preIt) =>
-        val acc = tally(it)
+      case None => swept.zipPartitions(input) { (out, in) =>
+        Iterator.single((countDelta(out, in, lo, hi, numTopics), Array.emptyDoubleArray))
+      }
+      case Some((pre, ll)) => swept.zipPartitions(input, pre) { (out, in, preIt) =>
+        val delta = countDelta(out, in, lo, hi, numTopics)
         var sum = 0.0
         preIt.foreach(d => sum = ll(d, sum))
         val slots = new Array[Double](numParts)
         slots(TaskContext.getPartitionId()) = sum
-        Iterator.single((acc, slots))
+        Iterator.single((delta, slots))
       }
     }
-    val (model, slots) = partials.treeReduce({ case ((a, la), (b, lb)) =>
+    val (delta, slots) = partials.treeReduce({ case ((a, la), (b, lb)) =>
       var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      i = 0
       while (i < la.length) { la(i) += lb(i); i += 1 } // disjoint slots: exact
-      (a, la)
-    }, depth = reduceDepth(numParts, size * 8L))
-    (model, sumInOrder(slots))
+      (addDeltas(a, b), la)
+    }, depth = reduceDepth(numParts, (hi - lo + 1) * numTopics * 8L))
+    (delta, sumInOrder(slots))
   }
 
   /** Left-to-right sum: per-partition partials added in partition order. */

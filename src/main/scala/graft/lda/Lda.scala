@@ -1,5 +1,6 @@
 package graft.lda
 
+import org.apache.spark.graftbridge.CheckpointBridge
 import org.apache.spark.rdd.RDD
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
@@ -19,14 +20,20 @@ import org.apache.spark.storage.StorageLevel
   *      as it was at iteration start (at S = 1: the whole model, no copy);
   *   2. `mapPartitions` Gibbs sweep of the range's occurrences — each task
   *      samples against its cloned replica (AD-LDA staleness, quirk #2);
-  *   3. tally the swept corpus via treeReduce (allreduce "up";
-  *      = ParallelLDAModel::ComputeAndAllReduce, mpi_lda.cc:94-111): rows
-  *      [lo, hi) and the global row; optionally, in the same job, the
+  *   3. allreduce "up" as a sparse count delta
+  *      ([[Gibbs.countDeltaRdd]]; plda allreduces the recounted model,
+  *      ParallelLDAModel::ComputeAndAllReduce, mpi_lda.cc:94-111): each
+  *      swept partition is zipped with the pass's input partition and
+  *      ships only the entries of rows [lo, hi) and of the global row that
+  *      the sweep changed, tree-combined; optionally, in the same job, the
   *      pre-sweep log-likelihood of the range, read from the
   *      iteration-start generation (quirk #6: the reported LL describes
   *      the previous iteration's model);
-  *   4. copy the tallied rows into the driver model (the global row after
-  *      the last pass).
+  *   4. add the delta into the driver model: rows [lo, hi) at once, the
+  *      global row after the last pass. At S = 1 the sum goes into a copy,
+  *      as the model array is the live broadcast value, which a task
+  *      recomputed from lineage must still read unchanged.
+  * Integer deltas make the result exactly the recounted model.
   * A pass only moves its own words' occurrences, so pass s still sees its
   * rows and the global row as of iteration start: every shard samples
   * against one-iteration-stale counts, the same staleness AD-LDA has
@@ -35,12 +42,12 @@ import org.apache.spark.storage.StorageLevel
   * the single-node `lda` binary's semantics, at every S.
   *
   * Memory: the driver holds the whole model at every S; what S bounds is
-  * the per-task broadcast replica and the per-partition tally partial,
-  * (V/S + 1)×K longs each — the two costs that grow with V×K on
-  * executors and in treeReduce traffic.
+  * the per-task broadcast replica, (V/S + 1)×K longs, and the
+  * per-partition delta partial, at most that many entries.
   *
   * Lineage is cut with a localCheckpoint every 10 passes; each
-  * superseded generation is unpersisted.
+  * superseded generation is unpersisted, except the newest checkpointed
+  * one, where every later generation's lineage ends ([[Generations]]).
   */
 object LdaTrainer {
 
@@ -63,7 +70,7 @@ object LdaTrainer {
       /** pre-sweep corpus log-likelihood per iteration (if requested) */
       likelihoods: Array[Double],
       /** wall-clock per training iteration, ms (all passes' sweeps and
-        * model recount treeReduces + accumulate) — the number BASELINE.md's
+        * count-delta treeReduces + accumulate) — the number BASELINE.md's
         * per-iteration cost model asks to watch at scale */
       iterMillis: Array[Long],
       /** driver-side model broadcast time per iteration, ms (the
@@ -108,7 +115,7 @@ object LdaTrainer {
     * pinned to [[canonicalLayout]] (one extra shuffle at chain start),
     * making the resumed chain BYTE-IDENTICAL to an uninterrupted run with
     * the same seed and S: sweep RNG streams key on (seed, docId, iter,
-    * shard), model recounts are integer treeReduce sums, and the layout
+    * shard), model updates are integer treeReduce sums, and the layout
     * — the only remaining degree of freedom — is now a pure function of
     * (data, num_parts) on both paths. */
   def trainResumable(corpus: Dataset[DocState], numWords: Int, cfg: LdaConfig,
@@ -151,21 +158,56 @@ object LdaTrainer {
     math.max(1, (numWords + per - 1) / per)
   }
 
+  /** The cached generations of one chain of doc states. A superseded
+    * generation is unpersisted, except the newest locally checkpointed
+    * one: every later generation's lineage ends in its blocks, so it stays
+    * cached until a newer checkpointed generation has been materialized,
+    * and [[release]] drops it together with the final generation. A
+    * checkpointed generation is dropped only once nothing can read it, so
+    * without `RDD.unpersist`'s warning that it cannot be recomputed. */
+  private[lda] final class Generations {
+    private var anchor: RDD[_] = null
+    private var anchorRetired = false
+
+    private def drop(gen: RDD[_]): Unit =
+      if (gen.isCheckpointed) CheckpointBridge.drop(gen) else gen.unpersist(blocking = false)
+
+    /** `gen` has just been materialized by a job. */
+    def materialized(gen: RDD[_]): Unit =
+      if (gen.isCheckpointed && (gen ne anchor)) {
+        if (anchor != null && anchorRetired) drop(anchor)
+        anchor = gen
+        anchorRetired = false
+      }
+
+    /** No pass reads `gen` any more. */
+    def retire(gen: RDD[_]): Unit =
+      if (gen eq anchor) anchorRetired = true else drop(gen)
+
+    /** Drops the final generation `last` and the checkpoint it rests on. */
+    def release(last: RDD[_]): Unit = {
+      drop(last)
+      if (anchor != null) drop(anchor)
+    }
+  }
+
   /** One training iteration: `numShards` passes over the word ranges of
     * [[shardBounds]] (see the object doc). `docs` is the iteration-start
-    * generation; it stays cached until the caller drops it. Returns the
-    * swept generation (persisted and materialized), the model after the
-    * iteration — `model` itself, updated in place, at S ≥ 2; the tallied
-    * array at S = 1, where `model` is the live broadcast value and is
-    * left untouched — the pre-sweep log-likelihood (0 unless
+    * generation; it stays cached until the caller retires it in `gens`.
+    * Returns the swept generation (persisted and materialized), the model
+    * after the iteration — `model` itself, updated in place, at S ≥ 2; an
+    * updated copy at S = 1, where `model` is the live broadcast value and
+    * is left untouched — the pre-sweep log-likelihood (0 unless
     * `cfg.computeLikelihood`), and the broadcast time in ns. */
   private[lda] def iteration(docs: RDD[DocState], model: Array[Long], numWords: Int,
-      cfg: LdaConfig, numShards: Int, iter: Int): (RDD[DocState], Array[Long], Double, Long) = {
+      cfg: LdaConfig, numShards: Int, iter: Int,
+      gens: Generations): (RDD[DocState], Array[Long], Double, Long) = {
     val sc = docs.sparkContext
     val k = cfg.numTopics
     val global = numWords * k
+    val next = if (numShards == 1) model.clone() else model
+    val globalDelta = new Array[Long](k)
     var current = docs
-    var next = model
     var ll = 0.0
     var bcNanos = 0L
     // `s` is a fresh val per pass: a task closure recomputed from lineage
@@ -190,17 +232,22 @@ object LdaTrainer {
           if (numShards == 1)
             sum + Gibbs.logLikelihood(d, bc.value, lo, hi, numWords, cfg.alpha, cfg.beta, k, 0.0)
           else Gibbs.logLikelihood(d, bc.value, lo, hi, numWords, cfg.alpha, cfg.beta, k, sum)))
-      val (rows, passLL) = Gibbs.countModelRdd(swept, lo, hi, k, likelihood) // materializes
+      val (delta, passLL) =
+        Gibbs.countDeltaRdd(swept, current, lo, hi, k, likelihood) // materializes
       ll += passLL
-      if (numShards == 1) next = rows
-      else {
-        System.arraycopy(rows, 0, model, lo * k, (hi - lo) * k)
-        if (s == numShards - 1) System.arraycopy(rows, (hi - lo) * k, model, global, k)
+      val gOff = (hi - lo) * k
+      delta.foreach { d =>
+        val i = Gibbs.deltaIndex(d)
+        if (i < gOff) next(lo * k + i) += Gibbs.deltaChange(d)
+        else globalDelta(i - gOff) += Gibbs.deltaChange(d)
       }
-      if (current ne docs) current.unpersist(blocking = false)
+      gens.materialized(swept)
+      if (current ne docs) gens.retire(current)
       current = swept
       bc.unpersist(blocking = false)
     }
+    var t = 0
+    while (t < k) { next(global + t) += globalDelta(t); t += 1 }
     (current, next, ll, bcNanos)
   }
 
@@ -230,7 +277,9 @@ object LdaTrainer {
     var docs = corpus.rdd.mapPartitions(it => it, preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
     docs.localCheckpoint()
-    var model = Gibbs.countModelRdd(docs, 0, numWords, k)._1
+    var model = Gibbs.countModelRdd(docs, 0, numWords, k)
+    val gens = new Generations
+    gens.materialized(docs)
     val accum = accum0.getOrElse(new Array[Double]((numWords + 1) * k))
     var nAccum = nAccum0
     // ArrayBuffer, NOT Array.newBuilder: the per-checkpoint snapshots below
@@ -249,10 +298,10 @@ object LdaTrainer {
     var iter = startIter
     while (iter < cfg.totalIterations) {
       val t0 = System.nanoTime()
-      val (swept, m, ll, bcNanos) = iteration(docs, model, numWords, cfg, nShards, iter)
+      val (swept, m, ll, bcNanos) = iteration(docs, model, numWords, cfg, nShards, iter, gens)
       model = m
       if (cfg.computeLikelihood) lls += ll
-      docs.unpersist(blocking = false)
+      gens.retire(docs)
       docs = swept
       if (iter >= cfg.burnInIterations) {
         var i = 0
@@ -273,7 +322,7 @@ object LdaTrainer {
     val gen = docs
     Result(model, accum, lls.toArray, iterMs.toArray, bcastMs.toArray,
       spark.createDataset(docs), numWords,
-      release = () => gen.unpersist(blocking = false))
+      release = () => gens.release(gen))
   }
 }
 

@@ -99,8 +99,8 @@ object ModelIO {
   private def isBlank(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
-  /** The fields of a model line: `line.trim.split("\\s+")` without the
-    * regex. */
+  /** The fields of a plda text line (model or corpus):
+    * `line.trim.split("\\s+")` without the regex. */
   private[lda] def fields(line: String): Array[String] = {
     var end = line.length
     while (end > 0 && line.charAt(end - 1) <= ' ') end -= 1

@@ -111,12 +111,14 @@ object ShardedLda {
     * [[LdaInfer.infer]]'s doc-major chains — statistically equivalent,
     * verified by planted-topic recovery (ShardedLdaSpec), not by hash.
     *
-    * Lifecycle: the returned Dataset is a map view over the final
-    * persisted+localCheckpointed state generation. Its blocks are
-    * released by the ContextCleaner once the caller drops the Dataset
-    * (standard RDD GC semantics); do NOT unpersist the backing RDD while
-    * still consuming the view — localCheckpoint truncated its lineage, so
-    * evicted blocks cannot be recomputed. */
+    * Lifecycle: superseded state generations are released as in training
+    * ([[LdaTrainer.Generations]]: the newest checkpointed one stays
+    * cached while later ones rest on it). The returned Dataset is a map
+    * view over the final persisted+localCheckpointed state generation.
+    * Its blocks are released by the ContextCleaner once the caller drops
+    * the Dataset (standard RDD GC semantics); do NOT unpersist the backing
+    * RDD while still consuming the view — localCheckpoint truncated its
+    * lineage, so evicted blocks cannot be recomputed. */
   def infer(docs0: Dataset[DocState], modelRows: Dataset[WordTopics],
       numWords: Int, cfg: LdaConfig, numShards: Int): Dataset[LdaInfer.DocTopics] = {
     val spark = docs0.sparkSession
@@ -132,6 +134,8 @@ object ShardedLda {
         .persist(StorageLevel.MEMORY_AND_DISK)
     state.localCheckpoint() // marked before the first job (count below)
     state.count()
+    val gens = new LdaTrainer.Generations
+    gens.materialized(state)
     val nShards = LdaTrainer.effectiveShards(numWords, numShards)
     for (iter <- 0 until cfg.totalIterations; s <- 0 until nShards) {
       val (lo, hi) = LdaTrainer.shardBounds(numWords, nShards, s)
@@ -165,7 +169,8 @@ object ShardedLda {
       // the materializing count
       if (s == nShards - 1) state.localCheckpoint()
       state.count() // materialize before releasing this shard's broadcast
-      prev.unpersist(blocking = false)
+      gens.materialized(state)
+      gens.retire(prev)
       bcShard.unpersist(blocking = false)
     }
     mrows.unpersist(blocking = false)

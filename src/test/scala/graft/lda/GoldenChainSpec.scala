@@ -25,9 +25,9 @@ class GoldenChainSpec extends SparkSpec {
   }
 
   /** 36 training docs in 2 fixed partitions: the AD-LDA chain depends on
-    * which docs share a task replica, and the likelihood reduces add
-    * per-partition partials in task completion order, which only two
-    * partials make order-free (a + b == b + a; three need not associate). */
+    * which docs share a task replica. (The likelihood reduces add
+    * per-partition partials in partition order, so the pins do not depend
+    * on which task finishes first.) */
   private def corpus = spark.createDataset(
     spark.sparkContext.parallelize(docs(0 until 36, seed = 11L), 2))
   private def held = spark.createDataset(

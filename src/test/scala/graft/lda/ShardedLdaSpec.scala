@@ -45,7 +45,8 @@ class ShardedLdaSpec extends SparkSpec {
     val before = ShardedLda.countModelRows(docs, k).collect()
       .map(r => r.wordId -> r.counts.sum).toMap
     val (sweptRdd, model, _, _) = LdaTrainer.iteration(docs.rdd,
-      Gibbs.countModel(docs, v, k), v, iterCfg, numShards = 3, iter = 0)
+      Gibbs.countModel(docs, v, k), v, iterCfg, numShards = 3, iter = 0,
+      new LdaTrainer.Generations)
     val swept = spark.createDataset(sweptRdd)
     val after = ShardedLda.countModelRows(swept, k).collect()
       .map(r => r.wordId -> r.counts.sum).toMap
@@ -57,12 +58,54 @@ class ShardedLdaSpec extends SparkSpec {
     assert(model.sameElements(Gibbs.countModel(swept, v, k)))
   }
 
+  for (s <- Seq(1, 3); ll <- Seq(false, true)) {
+    test(s"S = $s, computeLikelihood = $ll: the delta-updated model equals a fresh recount") {
+      val cfg = iterCfg.copy(totalIterations = 3, computeLikelihood = ll)
+      val gens = new LdaTrainer.Generations
+      var docs = corpus(30).rdd.persist()
+      var model = Gibbs.countModelRdd(docs, 0, v, k)
+      var moved = 0
+      for (iter <- 0 until cfg.totalIterations) {
+        val before = model.clone()
+        val (swept, next, passLL, _) = LdaTrainer.iteration(docs, model, v, cfg, s, iter, gens)
+        assert(next.sameElements(Gibbs.countModelRdd(swept, 0, v, k)), s"iteration $iter")
+        // at S = 1 the input model is the live broadcast value: untouched
+        if (s == 1) assert(model.sameElements(before))
+        assert(ll == (passLL != 0.0))
+        // pass p alone moves the occurrences of its words, so its partial
+        // on a partition is the delta of its range between the iteration's
+        // input and output: sorted distinct nonzero entries of the
+        // (hi − lo + 1)×K slice, so never more than the dense slice
+        for (p <- 0 until s) {
+          val (lo, hi) = LdaTrainer.shardBounds(v, s, p)
+          val topics = k
+          val size = (hi - lo + 1) * topics
+          swept.zipPartitions(docs)((o, i) => Iterator.single(Gibbs.countDelta(o, i, lo, hi, topics)))
+            .collect().foreach { d =>
+              val idx = d.map(Gibbs.deltaIndex)
+              assert(d.length <= size)
+              assert(idx.forall(i => i >= 0 && i < size))
+              assert(idx.indices.drop(1).forall(i => idx(i - 1) < idx(i)))
+              assert(d.forall(Gibbs.deltaChange(_) != 0))
+              moved += d.length
+            }
+        }
+        gens.retire(docs)
+        docs = swept
+        model = next
+      }
+      gens.release(docs)
+      assert(moved > 0, "no pass changed a count")
+    }
+  }
+
   test("a shard pass recomputed after its cache is dropped resamples identically") {
     // each shard pass keys its RNG on its own shard index, so lineage
     // recompute (block loss, eviction) must replay the same draws
     val docs = corpus(30).rdd
     val (swept, _, _, _) = LdaTrainer.iteration(docs,
-      Gibbs.countModelRdd(docs, 0, v, k)._1, v, iterCfg, numShards = 3, iter = 0)
+      Gibbs.countModelRdd(docs, 0, v, k), v, iterCfg, numShards = 3, iter = 0,
+      new LdaTrainer.Generations)
     def topics = swept.collect().sortBy(_.docId).map(_.topics.toSeq)
     val first = topics
     swept.unpersist(blocking = true)

@@ -76,6 +76,25 @@ class TrainLoopSpec extends SparkSpec {
     assert(full.averaged.sameElements(m3.indices.map(i => (m3(i) + m4(i)) / 2.0)))
   }
 
+  for (s <- Seq(1, 3)) {
+    test(s"S = $s: the final generation recomputes from the newest local checkpoint") {
+      // 12 iterations cross at least one checkpoint (every 10th pass) past
+      // the input copy; dropping the final generation's cache makes the
+      // recount recompute it through its lineage, which ends in that
+      // checkpointed generation
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val cfg = LdaConfig(k, 0.1, 0.01, totalIterations = 12, seed = 13L)
+      val r = LdaTrainer.train(corpus(30, 2), v, cfg, numShards = s)
+      try {
+        val cached = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+        cached.maxBy(_._1)._2.unpersist(blocking = true) // the final generation
+        assert(Gibbs.countModel(r.docs, v, k).sameElements(r.model))
+      } finally r.release()
+      assert(sc.getPersistentRDDs.keySet == before, "release() left a generation cached")
+    }
+  }
+
   /** The model slice [lo, hi) + global row, as a pass broadcasts it. */
   private def slice(model: Array[Long], lo: Int, hi: Int): Array[Long] =
     model.slice(lo * k, hi * k) ++ model.slice(v * k, (v + 1) * k)

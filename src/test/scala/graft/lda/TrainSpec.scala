@@ -16,6 +16,13 @@ class TrainSpec extends SparkSpec {
     }
   }
 
+  /** Docs of 20 words drawn uniformly from w0..w29: no topic structure,
+    * so a short chain keeps moving. */
+  private def unplantedDocs(n: Int): Seq[(Long, String)] = {
+    val rng = new SplitMix64(4051L)
+    (0L until n.toLong).map(id => (id, Seq.fill(20)(s"w${rng.nextInt(30)}").mkString(" ")))
+  }
+
   private val cfg = LdaConfig(numTopics = 2, alpha = 0.1, beta = 0.01,
     totalIterations = 20, burnInIterations = 10, computeLikelihood = true, seed = 11L)
 
@@ -38,30 +45,36 @@ class TrainSpec extends SparkSpec {
       thresholdBytes = 8L * 1024 * 1024))
     assert(Lda.shouldShard(numWords = 1024, numTopics = 1024,
       thresholdBytes = 8L * 1024 * 1024))
-    // force the switch on the fixture (threshold 1 byte) and prove the
-    // SHARDED chain ran: fit's model equals a direct sharded
-    // LdaTrainer.train on the identically-built corpus. (No inequality vs
-    // the flat chain — on this planted fixture both chains legitimately
-    // converge to the same final counts, so outcome-inequality
-    // over-constrains.)
-    val docsDf = plantedDocs(60).toDF("doc_id", "text")
-    val sharded = Lda(cfg, broadcastBytesMax = 1L).fit(docsDf)
+    // force the switch (threshold 1 byte) on a fixture whose chain still
+    // moves over the whole run, so the flat and the sharded chain end in
+    // different counts and averaged differs from the final counts: fit's
+    // output must be the S = 2 chain's, and not the S = 1 chain's
+    val mcfg = LdaConfig(numTopics = 4, alpha = 0.1, beta = 0.01,
+      totalIterations = 6, burnInIterations = 3, seed = 19L)
+    val docsDf = unplantedDocs(40).toDF("doc_id", "text")
+    val sharded = Lda(mcfg, broadcastBytesMax = 1L).fit(docsDf)
     val toks = Corpus.tokenize(docsDf)
     val vocab = Corpus.sortedVocab(toks).cache()
     val v = vocab.count().toInt
     val corpus = Corpus.fromTokenIds(
       toks.join(org.apache.spark.sql.functions.broadcast(vocab), "tok")
-        .select("doc_id", "word_id"), cfg.numTopics, cfg.seed)
-    val direct = LdaTrainer.train(corpus, v, cfg, Lda.recommendedShards(v, cfg.numTopics))
-    direct.release()
-    assert(sharded.counts.sameElements(direct.model), "fit did not run the sharded chain")
+        .select("doc_id", "word_id"), mcfg.numTopics, mcfg.seed)
+    def direct(s: Int) = { val r = LdaTrainer.train(corpus, v, mcfg, s); r.release(); r }
+    val s = Lda.recommendedShards(v, mcfg.numTopics)
+    assert(s == 2)
+    val shardedRef = direct(s)
+    val flatRef = direct(1)
+    vocab.unpersist()
+    assert(!flatRef.model.sameElements(shardedRef.model), "fixture cannot tell S = 1 from S = 2")
+    assert(!shardedRef.averaged.sameElements(shardedRef.model.map(_.toDouble)),
+      "the chain is stationary over the burn-in window")
+    assert(sharded.counts.sameElements(shardedRef.model), "fit did not run the sharded chain")
+    assert(!sharded.counts.sameElements(flatRef.model), "fit ran the flat chain")
     // one output kind at every S: averaged is the burn-in accumulator
-    // mean (quirk #1 single-node kind) of the sharded chain (this planted
-    // chain is stationary over the burn-in window, so here it also equals
-    // the final counts; TrainLoopSpec checks the mean where it moves)
-    assert(sharded.averaged.sameElements(direct.averaged))
+    // mean (quirk #1 single-node kind) of the sharded chain
+    assert(sharded.averaged.sameElements(shardedRef.averaged))
     // invariants hold on the auto-switched path too
-    assert((0 until cfg.numTopics).map(t => sharded.counts(v * cfg.numTopics + t)).sum == 60L * 30L)
+    assert((0 until mcfg.numTopics).map(t => sharded.counts(v * mcfg.numTopics + t)).sum == 40L * 20L)
   }
 
   test("model invariants hold after training") {
