@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main (BASELINE.md protocol): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line. A warmup pass (q01 + a small
@@ -60,12 +61,12 @@ object Bench {
     // table family (documents/lineitem via q01/q25, events via q17,
     // embeddings + the native DotProduct expression via q23) so every
     // timed query measures steady state, not first-table costs
-    try {
-      SparkEntry.queries.get("q01_scan_project").foreach(_(spark, sfDir).count())
-      SparkEntry.queries.get("q25_scan_agg").foreach(_(spark, sfDir).count())
-      SparkEntry.queries.get("q17_time_agg").foreach(_(spark, sfDir).count())
-      SparkEntry.queries.get("q23_cosine_topk").foreach(_(spark, sfDir).count())
-    } catch { case _: Throwable => }
+    Seq("q01_scan_project", "q25_scan_agg", "q17_time_agg", "q23_cosine_topk").foreach { name =>
+      try SparkEntry.queries.get(name).foreach(_(spark, sfDir).count())
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
+      }
+    }
 
     // dev filter: SPARK_GRAFT_QUERIES=q1,q2 restricts the run (driver sets none)
     val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSet)
@@ -96,7 +97,7 @@ object Bench {
         try {
           fn(spark, sfDir).count()
           Some(name -> (System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           failed += name
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           None
@@ -127,13 +128,7 @@ object Bench {
     // cold = fresh JVM over a fresh fixture read (the default for a
     // driver run); a caller doing warm A/B re-runs marks them explicitly
     val mode = sys.env.getOrElse("GRAFT_BENCH_MODE", "cold")
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => "\\u%04x".format(c.toInt)
-        case c => c.toString
-      } + "\""
+    def jstr(s: String): String = "\"" + CacheLog.esc(s) + "\""
     val extraConfJson =
       if (extraConf.isEmpty) ""
       else extraConf.map { case (k, v) => jstr(k) + ":" + jstr(v) }
@@ -147,7 +142,7 @@ object Bench {
       java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(fullPath))
       java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath),
         s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${results.size},"failed":$failedJson,"relational_b3_sec":${f(b3)},$hostMeta,"cache_builds":${CacheLog.asJson},"queries":${qmap(results, f)},"sf":"$sfDir"}""" + "\n")
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] $fullPath write failed: $e")
     }
     println(s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${results.size},"failed":$failedJson,"relational_b3_sec":${f(b3)},"queries":${qmap(top, f2)},"sf":"$sfDir"}""")

@@ -23,7 +23,8 @@ object CacheLog {
     if (q.nonEmpty) builds.putIfAbsent(cache, q)
   }
 
-  private def esc(s: String): String =
+  /** Escapes quotes, backslashes and control characters for a JSON string body. */
+  private[graft] def esc(s: String): String =
     s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

@@ -7,8 +7,9 @@ import org.apache.spark.sql.Dataset
 
 /** Collapsed-Gibbs kernel (the only genuinely custom compute in the engine;
   * everything relational is Spark built-ins — SURVEY.md §4.3). Every LDA
-  * path — training at any word-shard count, fold-in, and the distributed
-  * model's fold-in and likelihood in [[ShardedLda]] — samples and scores
+  * path — training at any word-shard count ([[LdaTrainer]]), fold-in
+  * ([[LdaInfer]]) and corpus likelihood ([[corpusLikelihood]], or the
+  * in-pass likelihood of [[LdaTrainer.iteration]]) — samples and scores
   * through the one full conditional, per-document sampling loop and
   * per-document log-likelihood below.
   *

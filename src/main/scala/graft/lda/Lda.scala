@@ -329,7 +329,15 @@ object LdaTrainer {
 /** Fold-in inference for unseen documents with a frozen model (I1,
   * infer.cc:37-101). Each document's chain is independent given the frozen
   * model, so ALL its iterations run inside one `mapPartitions` pass — one
-  * Spark job total, embarrassingly parallel, no per-iteration barrier. */
+  * Spark job total, embarrassingly parallel, no per-iteration barrier.
+  *
+  * This is the program's one fold-in: [[LdaModel.transform]], `InferApp`
+  * and `lda_infer_topics` all run [[inferDoc]] over the driver model,
+  * broadcast whole. Memory: one (V+1)×K array of longs per executor — the
+  * sweep runs with `train = false`, so tasks read the broadcast value and
+  * never clone it. There is no fold-in over a model kept as distributed
+  * rows with a bounded per-task replica: training always returns the model
+  * on the driver, so no caller holds a model too large to broadcast. */
 object LdaInfer {
 
   final case class DocTopics(docId: Long, topics: Array[Double])

@@ -5,8 +5,6 @@ import java.nio.file.{Files, Paths}
 import java.math.{MathContext, RoundingMode, BigDecimal => JBigDecimal}
 import scala.collection.mutable.ArrayBuffer
 import scala.io.{Codec, Source}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Model (de)serialization with byte parity to the reference's text format
   * (A2 in FIXTURES.md): one word per line, `word<TAB>c1 c2 … cK\n`.
@@ -27,8 +25,7 @@ import org.apache.spark.sql.functions._
   * corpus, whatever the platform charset.
   *
   * The text model file is a driver-side artifact (V×K longs — ~8 MB at the
-  * reference's NYTimes scale); [[writeCountsDistributed]] exports models
-  * too large to collect.
+  * reference's NYTimes scale), written and read on the driver.
   */
 object ModelIO {
 
@@ -193,24 +190,5 @@ object ModelIO {
       Seq("", s"TOPIC:  $t ${pyFloat(mass)}", "") ++
         kept.sorted(byValueThenWordDesc).map(w => s"${words(w)} ${pyFloat(rows(w)(t))}")
     }
-  }
-
-  /** Distributed plda-format text export for models too large to collect
-    * (the [[ShardedLda]] path): formats each `word\tc1 … cK` line on the
-    * executors and writes with a global sort on word_id — Spark's range
-    * partitioning makes part-file lexicographic order equal global word
-    * order, so `cat part-*` (or any in-order reader) reproduces the exact
-    * byte stream [[writeCounts]] would emit. Every vocab word must have a
-    * model row (true by construction — the vocabulary is built from the
-    * corpus). Reload at scale via the parquet form; the text form is for
-    * interop with the reference's tooling. */
-  def writeCountsDistributed(modelRows: org.apache.spark.sql.Dataset[WordTopics],
-      vocab: DataFrame, path: String): Unit = {
-    modelRows.toDF("word_id", "counts")
-      .join(vocab, "word_id")
-      .orderBy("word_id")
-      .select(concat(col("tok"), lit("\t"),
-        array_join(col("counts"), " ")).as("value"))
-      .write.mode("overwrite").text(path)
   }
 }

@@ -5,6 +5,7 @@ import graft.ext.{Blocklist, Dedup, Drift, Experiment, FeaturePrep, Graph, Unigr
 import graft.sources.Formats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Extension-operator queries (SURVEY §2.4 / north-star LLM-pipeline
   * surface), every one carrying a DuckDB hash oracle. The trick
@@ -1463,14 +1464,17 @@ object ExtQueries {
   private def deleteRecursively(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
+      val walk = java.nio.file.Files.walk(p)
+      try walk.iterator().asScala.toSeq.reverse.foreach(f => java.nio.file.Files.deleteIfExists(f))
+      finally walk.close()
     }
+  /** Best-effort [[deleteRecursively]]: a failure is logged, not thrown. */
+  private def tryDeleteRecursively(p: java.nio.file.Path): Unit =
+    try deleteRecursively(p)
+    catch { case NonFatal(e) => System.err.println(s"[graft] could not delete $p: $e") }
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      streamDirs.values.foreach { p =>
-        try deleteRecursively(p) catch { case _: Throwable => () }
-      }))
+      streamDirs.values.foreach(tryDeleteRecursively)))
   }
 
   /** State/shuffle partition count for a streaming query, derived from
@@ -1526,7 +1530,10 @@ object ExtQueries {
       val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
       Option(fs.globStatus(hp)).getOrElse(Array.empty)
         .map(st => fs.getContentSummary(st.getPath).getLength).sum
-    } catch { case _: Throwable => 0L }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[graft] cannot size stream source $p: $e")
+      0L
+    }
 
   private def runStream(df: DataFrame, name: String, mode: String): DataFrame = {
     val s = df.sparkSession
@@ -1534,7 +1541,7 @@ object ExtQueries {
       s"runStream supports complete/append output modes, got $mode")
     val tmp = java.nio.file.Files.createTempDirectory(s"graft-stream-$name-")
     streamDirs.put(name, tmp)
-      .foreach(old => try deleteRecursively(old) catch { case _: Throwable => () })
+      .foreach(tryDeleteRecursively)
     val dir = tmp.toString + "/out"
     @volatile var schema: org.apache.spark.sql.types.StructType = df.schema
     val writeMode = if (mode == "complete") "overwrite" else "append"
@@ -1983,13 +1990,7 @@ object ExtQueries {
   private def scratchDir(tag: String): String =
     scratchCache.getOrElseUpdate(tag, {
       val p = java.nio.file.Files.createTempDirectory(s"graft_$tag")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        if (Files.exists(p))
-          Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-            .forEach(f => Files.deleteIfExists(f))
-      }))
+      Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(p)))
       p.toString
     })
 

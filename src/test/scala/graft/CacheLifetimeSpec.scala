@@ -105,7 +105,7 @@ class CacheLifetimeSpec extends SparkSpec {
     eventuallyFlat(baseline)
   }
 
-  test("ShardedLda train+infer with release(): registry flat across 5 calls") {
+  test("S = 2 train + LdaInfer.infer with release(): registry flat across 5 calls") {
     import spark.implicits._
     val docs = (0L until 40L).map { id =>
       graft.lda.DocState.init(id, Array(0, 1, 2, 3), Array(2, 1, 1, 2), 2, seed = id)
@@ -117,9 +117,7 @@ class CacheLifetimeSpec extends SparkSpec {
     val baseline = drainedBaseline()
     (1 to 5).foreach { _ =>
       val res = graft.lda.LdaTrainer.train(ds, 4, cfg, numShards = 2)
-      val modelRows = spark.createDataset((0 until 4).map(w =>
-        graft.lda.WordTopics(w, res.model.slice(w * 2, (w + 1) * 2))))
-      val inferred = graft.lda.ShardedLda.infer(ds, modelRows, 4, cfg, numShards = 2)
+      val inferred = graft.lda.LdaInfer.infer(ds, res.model, 4, cfg)
       assert(inferred.count() == 40L)
       res.release()
     }

@@ -286,14 +286,9 @@ object ScalingMain {
       docs.unpersist(blocking = true)
     }
 
-    // sharded LDA: vocab AND corpus grow m× together (prefixed replicas),
-    // shard count grows with V — the huge-V regime where the model never
-    // broadcasts whole (SURVEY §7.4 risk 2). Training runs S word-shard
-    // passes per iteration; the infer leg drives ShardedLda.infer at ≥15
-    // shards against the trained model as distributed rows and checks
-    // token conservation (Σ per-doc averaged topic counts == corpus
-    // tokens).
-    println("mult |   tokens |  vocab | shards | train 2it | inf_shards | infer 2it | conserved")
+    // session-2 ops: containment join, source overlap (exact and KMV),
+    // normalized dedup and Unigram training over replicated docs
+    println("mult |     docs | containment (pairs)     | src_ovl | src_kmv | norm_dd | unigram")
     sweep("r6b") { m =>
       val docs = replicated(m)
         .withColumn("source", concat(lit("src"), col("doc_id") % 20))
@@ -894,6 +889,13 @@ object ScalingMain {
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
     }
 
+    // word-sharded LDA: vocab AND corpus grow m× together (prefixed
+    // replicas), shard count grows with V (SURVEY §7.4 risk 2). Training
+    // runs S word-shard passes per iteration; the infer leg folds the
+    // corpus in through LdaInfer.infer against the trained driver model
+    // and checks token conservation (Σ per-doc averaged topic counts ==
+    // corpus tokens).
+    println("mult |   tokens |  vocab | shards | train 2it | infer 2it | conserved")
     sweep("lda") { m =>
       val docs = replicated(m)
       val toks = lda.Corpus.tokenize(docs)
@@ -910,20 +912,15 @@ object ScalingMain {
         lda.LdaConfig(numTopics = 4, alpha = 0.1, beta = 0.01,
           totalIterations = 2, seed = 42L), numShards = shards)
       val t = (System.nanoTime() - t0) / 1e9
-      val infShards = math.min(v, math.max(15, shards))
-      val modelRows = spark.createDataset((0 until v).map(w =>
-        lda.WordTopics(w, res.model.slice(w * 4, (w + 1) * 4))))(
-        org.apache.spark.sql.Encoders.product[lda.WordTopics])
       val t1 = System.nanoTime()
-      val inferred = lda.ShardedLda.infer(corpus, modelRows, v,
+      val inferred = lda.LdaInfer.infer(corpus, res.model, v,
         lda.LdaConfig(numTopics = 4, alpha = 0.1, beta = 0.01,
-          totalIterations = 2, burnInIterations = 0, seed = 43L),
-        numShards = infShards)
+          totalIterations = 2, burnInIterations = 0, seed = 43L))
       val tokSum = inferred.rdd.map(_.topics.sum).reduce(_ + _)
       val tInf = (System.nanoTime() - t1) / 1e9
       val conserved = math.abs(tokSum - nTok) / nTok < 1e-9
       assert(conserved, f"token conservation broken: $tokSum%.3f vs $nTok")
-      println(f"$m%4d | $nTok%8d | $v%6d | $shards%6d | $t%9.2f | $infShards%10d | $tInf%9.2f | $conserved")
+      println(f"$m%4d | $nTok%8d | $v%6d | $shards%6d | $t%9.2f | $tInf%9.2f | $conserved")
       res.release()
       corpus.unpersist(blocking = true); vocab.unpersist(blocking = true)
     }

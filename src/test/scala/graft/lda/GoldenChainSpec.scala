@@ -9,7 +9,7 @@ import java.security.MessageDigest
   * seeded corpus with a fixed partitioning. The determinism specs elsewhere
   * only check that two runs agree, which a change to the sampler would pass
   * as long as it changed every run alike; these pins fail on any change to
-  * the flat sweep, the fold-in, the sharded sweep, the model tally or either
+  * the flat sweep, the fold-in, the sharded sweep, the model tally or the
   * likelihood. Counts and topic averages are exact; the likelihood pins also
   * assume the JVM's `Math.log`. */
 class GoldenChainSpec extends SparkSpec {
@@ -49,8 +49,9 @@ class GoldenChainSpec extends SparkSpec {
   private def docTopics(out: Array[LdaInfer.DocTopics]) = sha { o =>
     out.sortBy(_.docId).foreach { d => o.writeLong(d.docId); d.topics.foreach(o.writeDouble) }
   }
-  private def rows(out: Array[WordTopics]) = sha { o =>
-    out.sortBy(_.wordId).foreach { r => o.writeInt(r.wordId); r.counts.foreach(o.writeLong) }
+  /** The V word rows of a flat model, each as its word id then its K counts. */
+  private def rows(model: Array[Long]) = sha { o =>
+    (0 until v).foreach { w => o.writeInt(w); (0 until k).foreach(t => o.writeLong(model(w * k + t))) }
   }
 
   private lazy val flat = {
@@ -86,22 +87,11 @@ class GoldenChainSpec extends SparkSpec {
 
   test("sharded training: model rows and likelihood trace") {
     val r = LdaTrainer.train(corpus, v, cfg.copy(computeLikelihood = true), numShards = 3)
-    assert(rows((0 until v).map(w => WordTopics(w, r.model.slice(w * k, (w + 1) * k))).toArray) ==
+    assert(rows(r.model) ==
       "5d38838eeb2f2ae8f39f217cc54c94e26f0a49697555415f27ccb901dcc74efa")
     assert(doubles(r.likelihoods) ==
       "2ebfcefa12ca747572d238ae32be7091008e2933bb0b118f043b54a39cc52a98")
     r.release()
-  }
-
-  /** The flat-trained model as distributed rows. */
-  private def trainedRows = spark.createDataset((0 until v).map(w =>
-    WordTopics(w, flat.model.slice(w * k, (w + 1) * k))))
-
-  test("sharded fold-in: ShardedLda.infer output at 3 and 5 (→ 4) shards") {
-    assert(docTopics(ShardedLda.infer(held, trainedRows, v, cfg, numShards = 3).collect()) ==
-      "e851d3ac24e620935d349ac93ede0425b6c15eaaf27be57a38950b5b377f3070")
-    assert(docTopics(ShardedLda.infer(held, trainedRows, v, cfg, numShards = 5).collect()) ==
-      "bb68683863c9c7cf5280dbd5e850fb4a0483b39f23a61435a7137fe965046333")
   }
 
   test("corpusLikelihood on the trained model") {
@@ -109,15 +99,5 @@ class GoldenChainSpec extends SparkSpec {
     assert(doubles(Array(Gibbs.corpusLikelihood(corpus, bc, v, k, cfg.alpha, cfg.beta))) ==
       "ff0fe4e187a1c9ccb7c150355ec4c6a4ddd708c1fbcbc47ff5a0ab4966311163")
     bc.destroy()
-  }
-
-  test("shardedLikelihood on the trained model, byte-budget and explicit shard counts") {
-    val modelRows = trainedRows
-    val c = cfg.copy(computeLikelihood = true)
-    assert(doubles(Array(
-      ShardedLda.shardedLikelihood(corpus, modelRows, v, c),
-      ShardedLda.shardedLikelihood(corpus, modelRows, v, c, numShards = 3),
-      ShardedLda.shardedLikelihood(corpus, modelRows, v, c, numShards = 5))) ==
-      "789e1b14348cba6be2d0e332bb9e2c4b75b8aa40d108374a7498a61f2da9f2e7")
   }
 }

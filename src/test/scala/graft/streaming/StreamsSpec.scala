@@ -458,10 +458,14 @@ class StreamsSpec extends SparkSpec {
       // nonexistent path sizes as 0 (caller keeps the session default)
       assert(graft.queries.ExtQueries.sourceBytes(
         spark, root.toString + "/nope") == 0L)
+      // a path no file system can open sizes as 0 instead of throwing
+      assert(graft.queries.ExtQueries.sourceBytes(spark, "nosuchfs://host/x") == 0L)
     } finally {
       def rm(p: java.nio.file.Path): Unit = {
-        if (java.nio.file.Files.isDirectory(p))
-          java.nio.file.Files.list(p).forEach(rm(_))
+        if (java.nio.file.Files.isDirectory(p)) {
+          val entries = java.nio.file.Files.list(p)
+          try entries.forEach(rm(_)) finally entries.close()
+        }
         java.nio.file.Files.deleteIfExists(p)
       }
       rm(root)
