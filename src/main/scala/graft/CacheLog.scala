@@ -6,18 +6,18 @@ package graft
   * entry that reads it, which means the FIRST entry to touch a cache
   * pays the build inside its own timing — in bench output that
   * first-touch entry looks like a regression unless the build is named.
-  * [[Bench]] sets [[currentQuery]] around each timed entry and each
-  * cache's getOrElseUpdate thunk calls [[built]] on a miss, so
-  * BENCH_full.json can carry a `cache_builds` map: cache name → the
-  * entry whose time includes that build. */
+  * [[Bench]] sets [[currentQuery]] around each timed entry and
+  * [[SessionMemo]] calls [[built]] on a miss, so BENCH_full.json can
+  * carry a `cache_builds` map: cache name → the entry whose time
+  * includes that build. */
 object CacheLog {
   @volatile var currentQuery: String = ""
 
   /** cache name → first query that built it (this process). */
   val builds = scala.collection.concurrent.TrieMap[String, String]()
 
-  /** Record a cache build; call from inside the build thunk so only a
-    * real miss logs. No-op outside an attributed run. */
+  /** Record a cache build ([[SessionMemo]] calls it on a real miss
+    * only). No-op outside an attributed run. */
   def built(cache: String): Unit = {
     val q = currentQuery
     if (q.nonEmpty) builds.putIfAbsent(cache, q)

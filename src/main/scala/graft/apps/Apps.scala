@@ -113,6 +113,7 @@ object TrainApp {
           .select("doc_id", "word_id", "c")
         val corpus = Corpus.fromBow(bow, cfg.numTopics, cfg.seed)
         val r = LdaTrainer.train(corpus, numWords, cfg)
+        r.release()
         LdaModel(r.model, r.averaged, r.likelihoods, vocab, numWords, cfg)
       }
     // console parity with lda.cc:127/135: the iteration line prints every
@@ -121,10 +122,13 @@ object TrainApp {
       println(s"Iteration $i ...")
       if (f.computeLikelihood) println(s"Loglikelihood: ${model.likelihoods(i)}")
     }
-    if (f.outputMode == "final_counts")
-      ModelIO.writeCounts(model.counts, cfg.numTopics, model.indexToWord, f.modelFile)
-    else
-      ModelIO.writeAveraged(model.averaged, cfg.numTopics, model.indexToWord, f.modelFile)
+    // the vocabulary stays cached until the model file is written
+    try {
+      if (f.outputMode == "final_counts")
+        ModelIO.writeCounts(model.counts, cfg.numTopics, model.indexToWord, f.modelFile)
+      else
+        ModelIO.writeAveraged(model.averaged, cfg.numTopics, model.indexToWord, f.modelFile)
+    } finally model.vocab.unpersist(blocking = false)
   }
 }
 

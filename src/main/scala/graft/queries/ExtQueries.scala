@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.ext.{Blocklist, Dedup, Drift, Experiment, FeaturePrep, Graph, Unigram, Incremental, Layout, LinearModel, Multimodal, Profile, RankStats, Retrieval, ScaleJoins, Similarity, Sketches, Spectral, SuffixArray, Temporal, TextAnalysis}
 import graft.sources.Formats
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -19,32 +19,19 @@ object ExtQueries {
     * by every downstream dedup stage (pairs report, clustering) — the same
     * compute-once-reuse shape a production pipeline uses: banding the
     * corpus is the expensive step, and both the report and the connected
-    * components read the SAME candidate table. Mirrors LdaQueries.fitted. */
-  private val candCache = scala.collection.concurrent.TrieMap[String, DataFrame]()
+    * components read the SAME candidate table ([[graft.SessionMemo]]). */
   private def candidates(s: SparkSession, d: String): DataFrame =
-    candCache.getOrElseUpdate(sessionKey(s, d), {
-      graft.CacheLog.built("candCache")
+    SessionMemo(s, d, "candCache") {
       Dedup.minhashCandidates(Tables.documents(s, d))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
-  /** Session-qualified cache key: cached DataFrames / checkpoints belong
-    * to ONE SparkContext — a second session in the same JVM must rebuild
-    * rather than inherit handles into a stopped context (the same
-    * failure mode the bucketedPair tableExists guard closes). */
-  private def sessionKey(s: SparkSession, d: String): String =
-    java.lang.System.identityHashCode(s.sparkContext).toHexString + ":" + d
-
-  /** Fixture-table row count, one count job per (fixture dir, table) per
-    * JVM — every volume-derived knob (kmeansKFor, lshBitsFor,
+  /** Fixture-table row count, one count job per (session, fixture dir,
+    * table) — every volume-derived knob (kmeansKFor, lshBitsFor,
     * suffixSliceMod, the exact-sketch capacity) reads the SAME immutable
-    * fixture table, so each repeated `.count()` was a redundant scan
-    * (keyed by dir alone: a plain parquet count survives session
-    * restarts, unlike cached DataFrames). */
-  private val countCache = scala.collection.concurrent.TrieMap[String, Long]()
+    * fixture table, so each repeated `.count()` was a redundant scan. */
   private def tableCount(s: SparkSession, d: String, name: String): Long =
-    countCache.getOrElseUpdate(d + "#" + name,
-      Tables.table(s, d, name).count())
+    SessionMemo(s, d, s"count:$name")(Tables.table(s, d, name).count())
 
   def minhashPairs(s: SparkSession, d: String): DataFrame =
     candidates(s, d).orderBy("doc_a", "doc_b")
@@ -125,13 +112,11 @@ object ExtQueries {
     * (B-cubed, Rand/ARI, NMI) — same compute-once shape as
     * [[candidates]]: training the clustering is the expensive step,
     * every eval reads the SAME assignment table. */
-  private val clusterCache = scala.collection.concurrent.TrieMap[String, DataFrame]()
   private def clusterAssign(s: SparkSession, d: String): DataFrame =
-    clusterCache.getOrElseUpdate(sessionKey(s, d), {
-      graft.CacheLog.built("clusterCache")
+    SessionMemo(s, d, "clusterCache") {
       Similarity.kmeans(Tables.embeddings(s, d), k = 8, iters = 1)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   def kmeansAssign(s: SparkSession, d: String): DataFrame =
     clusterAssign(s, d).orderBy("vec_id")
@@ -220,15 +205,9 @@ object ExtQueries {
 
   /** Shared PQ subspace codebooks: pqTopK and ivfPqTopK train IDENTICAL
     * books (probe-all parity depends on it), so the battery trains the
-    * m lloyd runs once — pure data (m·k·dim doubles), so keyed by
-    * fixture dir alone, like probeWCache. */
-  private val pqBooksCache =
-    scala.collection.concurrent.TrieMap[String, Seq[Seq[(Int, Array[Double], Double)]]]()
+    * m lloyd runs once (m·k·dim doubles). */
   private def pqBooks(s: SparkSession, d: String): Seq[Seq[(Int, Array[Double], Double)]] =
-    pqBooksCache.getOrElseUpdate(d, {
-      graft.CacheLog.built("pqBooksCache")
-      Similarity.pqCodebooks(Tables.embeddings(s, d))
-    })
+    SessionMemo(s, d, "pqBooksCache")(Similarity.pqCodebooks(Tables.embeddings(s, d)))
 
   /** Temperature-α=0.5 mixture allocation of a 100k-token budget across
     * sources — exact Hamilton apportionment (Σ alloc = 100000). */
@@ -237,37 +216,30 @@ object ExtQueries {
       .orderBy("stratum")
 
   /** One BPE training per fixture dir, shared by the merge-table and
-    * piece-vocabulary queries (the candidates/fitted memo pattern —
-    * training is the expensive step, both reports read the result). */
-  private val bpeCache =
-    scala.collection.concurrent.TrieMap[String, (Seq[(Int, String, String, Long)], DataFrame)]()
+    * piece-vocabulary queries ([[graft.SessionMemo]] — training is the
+    * expensive step, both reports read the result). */
   private def bpeTrained(s: SparkSession, d: String) =
-    bpeCache.getOrElseUpdate(sessionKey(s, d), {
-      graft.CacheLog.built("bpeCache")
+    SessionMemo(s, d, "bpeCache") {
       val (m, v) = graft.ext.Bpe.train(Tables.documents(s, d), 10)
       (m, v.localCheckpoint(true))
-    })
+    }
 
   /** Shared WordPiece piece table per fixture (vocab mining is the
     * expensive step; the vocab dump and the encoder read the SAME table
-    * — the bpeTrained memo pattern). */
-  private val wpCache = scala.collection.concurrent.TrieMap[String, DataFrame]()
+    * through [[graft.SessionMemo]]). */
   private def wpVocab(s: SparkSession, d: String): DataFrame =
-    wpCache.getOrElseUpdate(sessionKey(s, d), {
-      graft.CacheLog.built("wpCache")
+    SessionMemo(s, d, "wpCache") {
       graft.ext.Wordpiece.vocab(Tables.documents(s, d)).localCheckpoint(true)
-    })
+    }
 
   /** Encoded word table, shared by the encode dump and the fertility
     * report (the piece table is the same `wpVocab`; the greedy matcher
     * runs once per fixture). */
-  private val wpEncCache = scala.collection.concurrent.TrieMap[String, DataFrame]()
   private def wpEncoded(s: SparkSession, d: String): DataFrame =
-    wpEncCache.getOrElseUpdate(sessionKey(s, d), {
-      graft.CacheLog.built("wpEncCache")
+    SessionMemo(s, d, "wpEncCache") {
       graft.ext.Wordpiece.encode(Tables.documents(s, d), wpVocab(s, d))
         .localCheckpoint(true)
-    })
+    }
 
   /** Frequency-mined WordPiece piece table (top-50 multi-char pieces per
     * form + the single-char coverage floor). */
@@ -428,7 +400,7 @@ object ExtQueries {
 
   /** Suffix-rank table on a volume-derived doc slice, built once per
     * fixture dir and shared by ext_suffix_array AND ext_longest_repeat
-    * (the candCache pattern) — the prefix-doubling rounds are the
+    * ([[graft.SessionMemo]]) — the prefix-doubling rounds are the
     * battery's single most expensive build, and both entries read the
     * identical table.
     *
@@ -440,7 +412,6 @@ object ExtQueries {
     * corpus and the tail is a single-task ordered write. m = 10 at every
     * fixture scale AND the sf1 twin (50k docs / 10 = 5000), so committed
     * artifacts are untouched; sf10's 500k docs step to m = 100. */
-  private val saCache = scala.collection.concurrent.TrieMap[String, DataFrame]()
   // slice-derivation constants, shared verbatim by suffixSliceMod and its
   // SQL twin below (interpolated, not restated — a changed bound that only
   // one side followed would desync exactly at sweep scales)
@@ -463,11 +434,10 @@ object ExtQueries {
     docs.where(col("doc_id") % suffixSliceMod(tableCount(s, d, "documents")) === 0)
   }
   private def sharedSuffixRanks(s: SparkSession, d: String): DataFrame =
-    saCache.getOrElseUpdate(sessionKey(s, d), {
-      graft.CacheLog.built("saCache")
+    SessionMemo(s, d, "saCache") {
       SuffixArray.suffixRanks(suffixSlice(s, d))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Corpus-wide suffix ranks on a 10% doc slice (prefix doubling is
     * ~log(maxlen) global sort rounds — the slice keeps the battery entry
@@ -956,19 +926,16 @@ object ExtQueries {
   def adamicAdarQ(s: SparkSession, d: String): DataFrame =
     Graph.adamicAdar(coActivityEdges(s, d))
 
-  private val coActCache = scala.collection.concurrent.TrieMap[String, DataFrame]()
-
   /** The user co-activity pair graph both graph entries consume (edge =
     * two users sharing ≥4 distinct (epoch-hour, type) cells), built
-    * once per (session, fixture) and persisted — the [[candidates]]
-    * memoization pattern: Adamic–Adar and k-core pay the self-join
+    * once per (session, fixture) and persisted through
+    * [[graft.SessionMemo]]: Adamic–Adar and k-core pay the self-join
     * once between them. */
   private def coActivityEdges(s: SparkSession, d: String): DataFrame =
-    coActCache.getOrElseUpdate(sessionKey(s, d), {
-      graft.CacheLog.built("coActCache")
+    SessionMemo(s, d, "coActCache") {
       buildCoActivityEdges(s, d)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   private def buildCoActivityEdges(s: SparkSession, d: String): DataFrame = {
     // pinnedByKey on the cell key: the self-join's per-cell pair fan-out
@@ -1990,7 +1957,7 @@ object ExtQueries {
   private def scratchDir(tag: String): String =
     scratchCache.getOrElseUpdate(tag, {
       val p = java.nio.file.Files.createTempDirectory(s"graft_$tag")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(p)))
+      Runtime.getRuntime.addShutdownHook(new Thread(() => tryDeleteRecursively(p)))
       p.toString
     })
 
@@ -2062,15 +2029,11 @@ object ExtQueries {
       .orderBy("doc_a", "doc_b")
 
   /** Rarest-first ordered shingle-set table, built once per fixture dir
-    * and shared by the set-similarity AND containment joins (the
-    * candCache pattern) — in a real pipeline both verifiers read the same
-    * ordered-set build, so the battery should pay for it once too. */
-  private val shingleSetCache = scala.collection.concurrent.TrieMap[String, DataFrame]()
+    * and shared by the set-similarity AND containment joins
+    * ([[graft.SessionMemo]]) — in a real pipeline both verifiers read the
+    * same ordered-set build, so the battery should pay for it once too. */
   private def orderedSets(s: SparkSession, d: String): DataFrame =
-    shingleSetCache.getOrElseUpdate(sessionKey(s, d), {
-      graft.CacheLog.built("shingleSetCache")
-      Dedup.orderedShingleSets(Tables.documents(s, d))
-    })
+    SessionMemo(s, d, "shingleSetCache")(Dedup.orderedShingleSets(Tables.documents(s, d)))
 
   /** Exact Jaccard ≥ 0.5 pairs over distinct 3-shingle sets via the
     * prefix-filtered set-similarity join. The oracle verifies
@@ -2404,19 +2367,16 @@ object ExtQueries {
   /** Probe weights trained once per fixture dir and shared by
     * ext_linear_probe AND ext_probe_auc — the training is fixed-point GD
     * (partitioning-invariant, so the value is a pure function of the
-    * data; plain doubles carry no session handles). Both queries read
-    * the same 16-iteration model, as a real train→score→eval pipeline
-    * would. */
-  private val probeWCache = scala.collection.concurrent.TrieMap[String, Seq[Double]]()
+    * data). Both queries read the same 16-iteration model, as a real
+    * train→score→eval pipeline would. */
   private def trainedProbe(s: SparkSession, d: String): Seq[Double] =
-    probeWCache.getOrElseUpdate(d, {
-      graft.CacheLog.built("probeWCache")
+    SessionMemo(s, d, "probeWCache") {
       val f = probeFeatures(s, d)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try LinearModel.trainLinearProbe(f, Seq("x1", "x2", "x3"), "y",
         lr = 0.8, iters = 16).toSeq
       finally f.unpersist(false)
-    })
+    }
 
   def linearProbeQ(s: SparkSession, d: String): DataFrame = {
     val w = trainedProbe(s, d)
@@ -2636,11 +2596,10 @@ object ExtQueries {
 
   /** Build (once per session per fixture dir) the bucketed
     * orders/lineitem pair — both hash-bucketed by order key into the same
-    * bucket count, so joins/aggs on that key need no exchange. The
-    * readiness cache is JVM-wide but the tables live in the per-session
-    * in-memory catalog, so a cache hit is only trusted when BOTH tables
-    * still exist in THIS session's catalog — otherwise rebuild. */
-  private val bucketedReady = scala.collection.concurrent.TrieMap[String, (String, String)]()
+    * bucket count, so joins/aggs on that key need no exchange. The tables
+    * live in the session catalog, so a memo hit is only trusted when BOTH
+    * tables still exist there — otherwise rebuild (the names are a
+    * function of `d`, so the memoized pair stays right). */
   private def bucketedPair(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     def build(): (String, String) = {
       val tag = d.replaceAll("[^a-zA-Z0-9]", "_")
@@ -2657,12 +2616,8 @@ object ExtQueries {
       Layout.rebuildBucketed(l, nl, "l_orderkey", nb)
       (no, nl)
     }
-    val cached = bucketedReady.getOrElseUpdate(d,
-      { graft.CacheLog.built("bucketedTables"); build() })
-    val (to, tl) =
-      if (s.catalog.tableExists(cached._1) && s.catalog.tableExists(cached._2))
-        cached
-      else { val fresh = build(); bucketedReady.put(d, fresh); fresh }
+    val (to, tl) = SessionMemo(s, d, "bucketedTables")(build())
+    if (!s.catalog.tableExists(to) || !s.catalog.tableExists(tl)) build()
     (s.table(to), s.table(tl))
   }
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.lda._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,20 +11,15 @@ import org.apache.spark.sql.functions._
   * determinism + invariant + planted-topic statistical specs. */
 object LdaQueries {
 
-  private val cache = scala.collection.concurrent.TrieMap[String, LdaModel]()
-
-  // key carries the SparkContext identity: a model's RDD/broadcast
-  // handles die with their context, so a second session in one JVM
-  // refits instead of inheriting them (the ExtQueries.sessionKey rule)
+  // one fit per session: the model's cached vocabulary dies with its
+  // context, so a second session refits (the SessionMemo key rule)
   private def fitted(s: SparkSession, dir: String): LdaModel =
-    cache.getOrElseUpdate(
-      java.lang.System.identityHashCode(s.sparkContext).toHexString + ":" + dir, {
-      graft.CacheLog.built("ldaFitted")
+    SessionMemo(s, dir, "ldaFitted") {
       val docs = Tables.documents(s, dir).select("doc_id", "text")
       Lda(LdaConfig(numTopics = 4, alpha = 0.1, beta = 0.01,
         totalIterations = 10, burnInIterations = 5,
         computeLikelihood = true, seed = 42L)).fit(docs)
-    })
+    }
 
   /** Top-10 words per topic from a 10-iteration K=4 fit on `documents`. */
   def trainTopWords(s: SparkSession, dir: String): DataFrame =

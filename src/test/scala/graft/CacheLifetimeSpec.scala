@@ -144,4 +144,79 @@ class CacheLifetimeSpec extends SparkSpec {
     }
     eventuallyFlat(baseline)
   }
+
+  test("TrainApp.run from plda text and from parquet: registry flat across 5 calls") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-trainapp")
+    val text = dir.resolve("corpus.txt")
+    val model = dir.resolve("model.txt")
+    java.nio.file.Files.writeString(text, "alpha 2 beta 1\nbeta 3 gamma 1\nalpha 1 gamma 2\n")
+    val base = graft.apps.Flags(numTopics = 2, alpha = 0.1, beta = 0.01,
+      modelFile = model.toString, burnInIterations = 1, totalIterations = 3)
+    def callAll(): Unit =
+      for (in <- Seq(text.toString, sf() + "/documents.parquet"))
+        graft.apps.TrainApp.run(spark, base.copy(trainingDataFile = in))
+    try {
+      callAll()
+      val baseline = drainedBaseline()
+      (1 to 5).foreach(_ => callAll())
+      eventuallyFlat(baseline)
+    } finally Seq(text, model, dir).foreach(java.nio.file.Files.deleteIfExists)
+  }
+
+  test("SessionMemo builds once per (context, dir, name) and returns the same value") {
+    var builds = 0
+    def get(dir: String, name: String): AnyRef =
+      SessionMemo(spark, dir, name) { builds += 1; new Object }
+    val a = get("memo-spec/a", "memoSpec")
+    assert(get("memo-spec/a", "memoSpec") eq a)
+    assert(builds == 1)
+    val b = get("memo-spec/b", "memoSpec")
+    val c = get("memo-spec/a", "memoSpec2")
+    assert(builds == 3)
+    assert((b ne a) && (c ne a) && (b ne c))
+    assert(get("memo-spec/b", "memoSpec") eq b)
+    assert(builds == 3)
+  }
+
+  test("SessionMemo attributes a build to the current query on a miss only") {
+    val name = "memoSpec:attribution"
+    try {
+      CacheLog.currentQuery = ""
+      SessionMemo(spark, "memo-spec/attr-a", name)(1)
+      CacheLog.currentQuery = "hit_query"
+      SessionMemo(spark, "memo-spec/attr-a", name)(2)
+      assert(!CacheLog.builds.contains(name), "a hit was attributed")
+      CacheLog.currentQuery = "miss_query"
+      SessionMemo(spark, "memo-spec/attr-b", name)(3)
+      assert(CacheLog.builds.get(name).contains("miss_query"))
+    } finally {
+      CacheLog.currentQuery = ""
+      CacheLog.builds.remove(name)
+    }
+  }
+
+  // stops the shared session, so it runs last; it leaves a live session
+  // behind, which later suites pick up through SparkSpec.session()
+  test("SessionMemo drops a stopped context's entries; the next session rebuilds") {
+    var builds = 0
+    def get(s: org.apache.spark.sql.SparkSession): Array[Byte] =
+      SessionMemo(s, "memo-spec/release", "memoSpec") { builds += 1; new Array[Byte](1024) }
+    // a frame of its own: no stack slot of this test may keep the value
+    def firstSession(): java.lang.ref.WeakReference[Array[Byte]] = {
+      val v = get(spark)
+      assert(get(spark) eq v)
+      new java.lang.ref.WeakReference(v)
+    }
+    val old = firstSession()
+    spark.stop()
+    val fresh = SparkSpec.session()
+    assert(!fresh.sparkContext.isStopped)
+    val again = get(fresh)
+    assert(builds == 2)
+    val end = System.currentTimeMillis + 30000
+    while (!old.refersTo(null) && System.currentTimeMillis < end) { System.gc(); Thread.sleep(100) }
+    assert(old.refersTo(null), "the stopped context's value is still reachable")
+    assert(get(fresh) eq again)
+    assert(builds == 2)
+  }
 }

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs (one per suite, lazily). */
-trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
+object SparkSpec {
+  /** The live spec session, or a new one if the last was stopped. */
+  def session(): SparkSession = {
     val s = graft.GraftSession.builder("graft-test", shufflePartitions = Some(4))
       .master("local[4]")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
@@ -14,6 +14,11 @@ trait SparkSpec extends AnyFunSuite {
     graft.functions.GraftExtensions.register(s)
     s
   }
+}
+
+/** Shared local session for specs (one per suite, lazily). */
+trait SparkSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = SparkSpec.session()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 }
