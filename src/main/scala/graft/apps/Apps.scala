@@ -163,20 +163,27 @@ object InferApp {
     val k = (model.length / (numWords + 1))
     val cfg = LdaConfig(k, f.alpha, f.beta, f.totalIterations, f.burnInIterations, seed = f.seed)
     val sc = spark.sparkContext
-    // the dictionary goes out as a broadcast map: a V-row vocabulary
-    // DataFrame built on the driver is a LocalRelation the planner re-walks
-    val wordIds = sc.broadcast(words.zipWithIndex.toMap)
+    // the dictionary goes out as the broadcast word array (a V-row
+    // vocabulary DataFrame built on the driver is a LocalRelation the
+    // planner re-walks; a broadcast Scala Map costs a SizeEstimator walk
+    // of its V entries on the driver), and each task indexes it once. A
+    // word the model file repeats maps to its last row.
+    val bcWords = sc.broadcast(words)
     val bcModel = sc.broadcast(model)
     try {
       val lines = Corpus.pldaKeptLines(spark, f.inferenceDataFile).mapPartitions { it =>
-        val dict = wordIds.value
+        val ws = bcWords.value
+        val dict = new java.util.HashMap[String, Integer](ws.length * 2)
+        var w = 0
+        while (w < ws.length) { dict.put(ws(w), w); w += 1 }
         val m = bcModel.value
         val dist = new Array[Double](k)
         it.map { case (line, docId) =>
           // the doc Corpus.fromBow builds: (word id, count) pairs sorted,
           // a word repeated within the line kept as repeated pairs
           val wcs = Corpus.pldaPairs(line)
-            .flatMap { case (w, c) => dict.get(w).map(id => (id, c)) }.toArray.sorted
+            .flatMap { case (w, c) => Option(dict.get(w)).map(id => (id.intValue, c)) }
+            .toArray.sorted
           val doc = DocState.init(docId, wcs.map(_._1), wcs.map(_._2), k, f.seed)
           LdaInfer.inferDoc(doc, m, numWords, cfg, dist).map(ModelIO.formatDouble).mkString(" ")
         }
@@ -186,7 +193,7 @@ object InferApp {
       lines.saveAsTextFile(partsDir.toString)
       mergeTextParts(spark, partsDir.toString, f.inferenceResultFile)
     } finally {
-      wordIds.destroy()
+      bcWords.destroy()
       bcModel.destroy()
     }
   }

@@ -143,16 +143,22 @@ object Layout {
     val wh = java.net.URI.create(s.conf.get("spark.sql.warehouse.dir"))
     (localPath(loc), localPath(wh)) match {
       case (Some(dir), Some(whDir))
-          if dir.normalize.startsWith(whDir.normalize) &&
-            java.nio.file.Files.exists(dir) =>
-        import java.util.Comparator
-        java.nio.file.Files.walk(dir)
-          .sorted(Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
+          if dir.normalize.startsWith(whDir.normalize) =>
+        deleteRecursively(dir)
       case _ => () // non-local or outside the warehouse: DROP TABLE suffices
     }
     writeBucketed(df, table, key, nBuckets)
   }
+
+  /** Deletes a local file tree, children before parents; a missing path is
+    * a no-op. The directory stream is closed however the walk ends. */
+  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      import scala.jdk.CollectionConverters._
+      val walk = java.nio.file.Files.walk(p)
+      try walk.iterator().asScala.toSeq.reverse.foreach(f => java.nio.file.Files.deleteIfExists(f))
+      finally walk.close()
+    }
 
   /** Hive-style partitioned parquet write: one directory per value of
     * `partCol`. The complementary read path prunes whole directories from

@@ -1,9 +1,10 @@
 package graft.lda
 
-import org.apache.spark.TaskContext
+import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
+import scala.reflect.ClassTag
 
 /** Collapsed-Gibbs kernel (the only genuinely custom compute in the engine;
   * everything relational is Spark built-ins — SURVEY.md §4.3). Every LDA
@@ -38,17 +39,26 @@ import org.apache.spark.sql.Dataset
   * per-occurrence loop.
   *
   * Scale: the sweep is a `mapPartitions` over the doc states with a
-  * broadcast model slice — no shuffle. The allreduce "up"
+  * broadcast model slice — no shuffle. The training loop keeps each
+  * generation as one `Array[DocState]` block per partition, so the sweep
+  * and the tallies below take blocks. The allreduce "up"
   * ([[countDeltaRdd]]) is a per-partition count DELTA of the slice —
   * only the entries the sweep changed, as sparse (index, change) pairs —
-  * combined with `treeReduce` (Spark's allreduce idiom, =
-  * mpi_lda.cc:58-92's chunked MPI_Allreduce) and added to the driver's
-  * model. plda allreduces the whole recounted model instead
-  * (mpi_lda.cc:94-111); adding exact integer deltas gives the same
+  * merged on the driver as each task's partial arrives ([[allreduce]],
+  * one bare `runJob`, = mpi_lda.cc:58-92's chunked MPI_Allreduce) and
+  * added to the driver's model. plda allreduces the whole recounted model
+  * instead (mpi_lda.cc:94-111); adding exact integer deltas gives the same
   * counts while shipping no more than the dense slice, and usually far
   * less (parameter-server LDA synchronizes the same way, Smola &
   * Narayanamurthy, VLDB 2010). In training, a full recount
   * ([[countModelRdd]]) only builds the initial model.
+  *
+  * The allreduce calls `SparkContext.runJob` itself, with functions
+  * defined here, rather than Spark's tree reduction: `ClosureCleaner`
+  * re-reads the class file that defines each closure it cleans, and the
+  * tree reduction (`treeAggregate` → `fold` → `runJob`) cleans about six
+  * closures defined in `RDD` or `SparkContext`, classes ten times the
+  * size of this one, on every pass.
   */
 object Gibbs {
 
@@ -133,11 +143,11 @@ object Gibbs {
       alpha, beta, train, rng, dist)
 
   /** Distributed training sweep of the occurrences of words in [lo, hi):
-    * one `mapPartitions` over the doc states. Each task clones the
+    * one `mapPartitions` over the doc-state blocks. Each task clones the
     * broadcast model slice once (its local AD-LDA replica) and streams
-    * docs through [[sweepDocument]]. Per-doc RNG streams keyed on
-    * (seed, docId, `stream`) make the sweep deterministic for a fixed
-    * partitioning.
+    * docs through [[sweepDocument]] into a new block. Per-doc RNG streams
+    * keyed on (seed, docId, `stream`) make the sweep deterministic for a
+    * fixed partitioning.
     *
     * The loop runs at the RDD layer: an iterative mapPartitions chain
     * gains nothing from Catalyst (no relational structure to optimize)
@@ -145,49 +155,75 @@ object Gibbs {
     * DocState per iteration; the RDD caches plain JVM objects (this is the
     * sanctioned "genuine per-partition imperative logic" RDD case). */
   def sweepRdd(
-      docs: RDD[DocState], bcRows: Broadcast[Array[Long]], lo: Int, hi: Int,
+      docs: RDD[Array[DocState]], bcRows: Broadcast[Array[Long]], lo: Int, hi: Int,
       numWords: Int, numTopics: Int, alpha: Double, beta: Double,
-      seed: Long, stream: Long): RDD[DocState] = {
+      seed: Long, stream: Long): RDD[Array[DocState]] = {
     val k = numTopics
     docs.mapPartitions { it =>
       val rows = bcRows.value.clone() // task-local AD-LDA replica
       val dist = new Array[Double](k)
-      it.map { doc =>
+      it.map(_.map { doc =>
         val topics = doc.topics.clone()
         val rng = new SplitMix64(Rng.mix(seed, doc.docId, stream))
         sweepDocument(doc.wordIds, doc.offsets, topics, doc.topicHistogram(k), rows,
           lo, hi, numWords, alpha, beta, train = true, rng, dist)
         doc.copy(topics = topics)
-      }
+      })
     }
   }
 
-  /** Tree-combine depth for the model allreduce, sized to the traffic:
-    * at most one dense model slice per partition flows to the combiner.
-    * Under 256 MB total the driver takes them directly (one stage); beyond
-    * that an intermediate tree level caps driver ingress (the
-    * chunked-allreduce concern of mpi_lda.cc:58-92). At sf0.1
-    * (32 × 1.6 MB) this saves a whole shuffle stage per training
-    * iteration; at 1000 executors with a 100 MB model it picks the tree. */
-  private def reduceDepth(numPartitions: Int, modelBytes: Long): Int =
-    if (numPartitions.toLong * modelBytes <= (256L << 20)) 1 else 2
+  /** Driver ingress up to which the allreduce merges every partition's
+    * partial on the driver directly (one stage). Beyond it
+    * ([[allreduce]]) one executor-side combine level caps driver ingress
+    * (the chunked-allreduce concern of mpi_lda.cc:58-92). At sf0.1
+    * (32 × 1.6 MB) this saves a whole shuffle stage per training pass; at
+    * 1000 executors with a 100 MB model it picks the combine level. */
+  private[lda] val DriverIngressBytes: Long = 256L << 20
+
+  /** The allreduce of one partial per partition, each at most
+    * `partialBytes`: ONE job, a bare `runJob` whose result handler merges
+    * each partial into the running sum as it arrives (`merge` may update
+    * its first argument in place; it must be associative and
+    * commutative). When the partials outgrow `ingressMax`, groups of about
+    * √n partitions are first merged on the executors — the one
+    * intermediate level `treeAggregate` adds at depth 2, with its grouping
+    * and its rule for when a level pays — and the driver merges the group
+    * sums. Fails on an RDD with no partitions, as Spark's `reduce` does. */
+  private def allreduce[P: ClassTag](partials: RDD[P], partialBytes: Long, ingressMax: Long)(
+      merge: (P, P) => P): P = {
+    val n = partials.getNumPartitions
+    val scale = math.max(math.ceil(math.sqrt(n.toDouble)).toInt, 2)
+    val groups = n / scale
+    val level =
+      if (n.toLong * partialBytes <= ingressMax || n <= scale + (n + scale - 1) / scale) partials
+      else partials.mapPartitionsWithIndex((i, it) => it.map(p => (i % groups, p)))
+        .reduceByKey(new HashPartitioner(groups), merge).values
+    var acc: Option[P] = None
+    partials.sparkContext.runJob(level,
+      (_: TaskContext, it: Iterator[P]) => it.reduceLeft(merge),
+      (_: Int, p: P) => acc = Some(acc.fold(p)(merge(_, p))))
+    acc.getOrElse(throw new UnsupportedOperationException("allreduce of no partitions"))
+  }
 
   /** Recount n(w,k)/n(k) from assignments and allreduce
     * (M3 sampler.cc:34-45 + M4 mpi_lda.cc:94-111): per-partition flat
-    * tally, tree-combined. Partition-count invariant (addition commutes). */
+    * tally, merged by [[allreduce]]. Partition-count invariant (addition
+    * commutes). */
   def countModel(docs: Dataset[DocState], numWords: Int, numTopics: Int): Array[Long] =
-    countModelRdd(docs.rdd, 0, numWords, numTopics)
+    countModelRdd(docs.rdd.glom(), 0, numWords, numTopics)
 
-  /** RDD core of [[countModel]], over a word range: the rows of the words
-    * in [lo, hi), then the global row n(k) over ALL occurrences —
-    * (hi − lo + 1)×K, the model slice layout of [[sweepDocument]]. */
-  def countModelRdd(docs: RDD[DocState], lo: Int, hi: Int, numTopics: Int): Array[Long] = {
+  /** RDD core of [[countModel]], over doc-state blocks and a word range:
+    * the rows of the words in [lo, hi), then the global row n(k) over ALL
+    * occurrences — (hi − lo + 1)×K, the model slice layout of
+    * [[sweepDocument]]. `ingressMax` bounds the driver's ingress ([[allreduce]]). */
+  def countModelRdd(docs: RDD[Array[DocState]], lo: Int, hi: Int, numTopics: Int,
+      ingressMax: Long = DriverIngressBytes): Array[Long] = {
     val k = numTopics
     val size = (hi - lo + 1) * k
     val gOff = (hi - lo) * k
-    docs.mapPartitions { it =>
+    val partials = docs.mapPartitions { it =>
       val acc = new Array[Long](size)
-      it.foreach { doc =>
+      it.foreach(_.foreach { doc =>
         var i = 0
         while (i < doc.wordIds.length) {
           val w = doc.wordIds(i)
@@ -204,13 +240,14 @@ object Gibbs {
           } else while (j < end) { acc(gOff + doc.topics(j)) += 1; j += 1 }
           i += 1
         }
-      }
+      })
       Iterator.single(acc)
-    }.treeReduce({ (a, b) =>
+    }
+    allreduce(partials, size * 8L, ingressMax) { (a, b) =>
       var i = 0
       while (i < a.length) { a(i) += b(i); i += 1 }
       a
-    }, depth = reduceDepth(docs.getNumPartitions, size * 8L))
+    }
   }
 
   /** A sparse count delta: one Long per changed entry of a model slice,
@@ -222,18 +259,20 @@ object Gibbs {
   private[lda] def deltaChange(packed: Long): Int = packed.toInt
 
   /** The count delta of one training pass over [lo, hi), on one
-    * partition: `swept` is the pass's output and `input` its input, the
-    * same docs in the same order. Only occurrences of words in the range
-    * move, so the delta covers the range's rows and the global row, in
-    * the model slice layout of [[sweepDocument]]. At most one entry per
-    * slice entry: never more than the dense slice. */
-  private[lda] def countDelta(swept: Iterator[DocState], input: Iterator[DocState],
+    * partition: `swept` is the pass's output block and `input` its input
+    * block, the same docs in the same order. Only occurrences of words in
+    * the range move, so the delta covers the range's rows and the global
+    * row, in the model slice layout of [[sweepDocument]]. At most one
+    * entry per slice entry: never more than the dense slice. */
+  private[lda] def countDelta(swept: Array[DocState], input: Array[DocState],
       lo: Int, hi: Int, numTopics: Int): Array[Long] = {
     val k = numTopics
     val gOff = (hi - lo) * k
     val acc = new Array[Int](gOff + k)
-    swept.foreach { out =>
-      val in = input.next()
+    var d = 0
+    while (d < swept.length) {
+      val out = swept(d)
+      val in = input(d)
       var i = 0
       while (i < in.wordIds.length) {
         val w = in.wordIds(i)
@@ -253,6 +292,7 @@ object Gibbs {
         }
         i += 1
       }
+      d += 1
     }
     var n = 0
     var i = 0
@@ -291,11 +331,12 @@ object Gibbs {
 
   /** A training pass's allreduce "up" (ParallelLDAModel::
     * ComputeAndAllReduce, mpi_lda.cc:94-111, shipped as a delta): ONE job
-    * that zips each swept partition with the pass's input partition,
-    * emits its sparse [[countDelta]] over [lo, hi), and combines the
-    * partials with `treeReduce`. The caller adds the sum to the model
-    * the pass sampled against. `swept` must derive from `input` by a
-    * per-doc map (as [[sweepRdd]] does) and `input` should be cached.
+    * that zips each swept block with the pass's input block, emits its
+    * sparse [[countDelta]] over [lo, hi), and sums the partials with
+    * [[allreduce]]. The caller adds the sum to the model the pass sampled
+    * against. `swept` must derive from `input` by a per-doc map (as
+    * [[sweepRdd]] does) and `input` should be cached. `ingressMax` bounds
+    * the driver's ingress.
     *
     * With `likelihood = Some((pre, ll))`, where `pre` is a co-partitioned
     * RDD (the generation the iteration started from), the same tasks also
@@ -303,32 +344,36 @@ object Gibbs {
     * pre-sweep log-likelihood (quirk #6) costs no extra job, and is
     * exactly-once by construction (a task retry recomputes the same
     * partial; contrast an accumulator updated in a transformation). Each
-    * partition's sum rides the treeReduce in its own slot, and the slots
+    * partition's sum rides the allreduce in its own slot, and the slots
     * are added in partition order, so the total does not depend on which
     * task finished first. Without it the sum is 0. */
   def countDeltaRdd(
-      swept: RDD[DocState], input: RDD[DocState], lo: Int, hi: Int, numTopics: Int,
-      likelihood: Option[(RDD[DocState], (DocState, Double) => Double)] = None
+      swept: RDD[Array[DocState]], input: RDD[Array[DocState]], lo: Int, hi: Int,
+      numTopics: Int,
+      likelihood: Option[(RDD[Array[DocState]], (DocState, Double) => Double)] = None,
+      ingressMax: Long = DriverIngressBytes
   ): (Array[Long], Double) = {
     val numParts = swept.getNumPartitions
     val partials = likelihood match {
       case None => swept.zipPartitions(input) { (out, in) =>
-        Iterator.single((countDelta(out, in, lo, hi, numTopics), Array.emptyDoubleArray))
+        Iterator.single((countDelta(out.next(), in.next(), lo, hi, numTopics),
+          Array.emptyDoubleArray))
       }
       case Some((pre, ll)) => swept.zipPartitions(input, pre) { (out, in, preIt) =>
-        val delta = countDelta(out, in, lo, hi, numTopics)
+        val delta = countDelta(out.next(), in.next(), lo, hi, numTopics)
         var sum = 0.0
-        preIt.foreach(d => sum = ll(d, sum))
+        preIt.foreach(_.foreach(d => sum = ll(d, sum)))
         val slots = new Array[Double](numParts)
         slots(TaskContext.getPartitionId()) = sum
         Iterator.single((delta, slots))
       }
     }
-    val (delta, slots) = partials.treeReduce({ case ((a, la), (b, lb)) =>
-      var i = 0
-      while (i < la.length) { la(i) += lb(i); i += 1 } // disjoint slots: exact
-      (addDeltas(a, b), la)
-    }, depth = reduceDepth(numParts, (hi - lo + 1) * numTopics * 8L))
+    val (delta, slots) = allreduce(partials, (hi - lo + 1) * numTopics * 8L, ingressMax) {
+      case ((a, la), (b, lb)) =>
+        var i = 0
+        while (i < la.length) { la(i) += lb(i); i += 1 } // disjoint slots: exact
+        (addDeltas(a, b), la)
+    }
     (delta, sumInOrder(slots))
   }
 

@@ -25,10 +25,11 @@ import org.apache.spark.storage.StorageLevel
   *      ParallelLDAModel::ComputeAndAllReduce, mpi_lda.cc:94-111): each
   *      swept partition is zipped with the pass's input partition and
   *      ships only the entries of rows [lo, hi) and of the global row that
-  *      the sweep changed, tree-combined; optionally, in the same job, the
-  *      pre-sweep log-likelihood of the range, read from the
-  *      iteration-start generation (quirk #6: the reported LL describes
-  *      the previous iteration's model);
+  *      the sweep changed, merged on the driver as each task finishes
+  *      (one bare `runJob`); optionally, in the same job, the pre-sweep
+  *      log-likelihood of the range, read from the iteration-start
+  *      generation (quirk #6: the reported LL describes the previous
+  *      iteration's model);
   *   4. add the delta into the driver model: rows [lo, hi) at once, the
   *      global row after the last pass. At S = 1 the sum goes into a copy,
   *      as the model array is the live broadcast value, which a task
@@ -44,6 +45,16 @@ import org.apache.spark.storage.StorageLevel
   * Memory: the driver holds the whole model at every S; what S bounds is
   * the per-task broadcast replica, (V/S + 1)×K longs, and the
   * per-partition delta partial, at most that many entries.
+  *
+  * A generation is cached as ONE `Array[DocState]` block per partition
+  * (`glom` of the input, then a block-to-block sweep), not one record per
+  * doc. Spark caches a partition as one block either way, and unrolls it
+  * whole either way, so the memory held is the same plus one reference
+  * per doc; what changes is that `MemoryStore` sizes one object per
+  * partition (`SizeEstimator` samples a large array) instead of
+  * re-estimating its growing record buffer dozens of times per partition
+  * on every pass. [[Result.docs]] and the checkpoint hook still see a
+  * `Dataset[DocState]`, a flattening view over the blocks.
   *
   * Lineage is cut with a localCheckpoint every 10 passes; each
   * superseded generation is unpersisted, except the newest checkpointed
@@ -69,14 +80,16 @@ object LdaTrainer {
       averaged: Array[Double],
       /** pre-sweep corpus log-likelihood per iteration (if requested) */
       likelihoods: Array[Double],
-      /** wall-clock per training iteration, ms (all passes' sweeps and
-        * count-delta treeReduces + accumulate) — the number BASELINE.md's
-        * per-iteration cost model asks to watch at scale */
+      /** wall-clock per training iteration, ms (all passes' broadcasts,
+        * sweeps and count-delta allreduces, each pass one `runJob`, plus
+        * the driver-side delta add and burn-in accumulate) — the number
+        * BASELINE.md's per-iteration cost model asks to watch at scale */
       iterMillis: Array[Long],
       /** driver-side model broadcast time per iteration, ms (the
         * allreduce-"down" half of the communication profile) */
       bcastMillis: Array[Long],
-      /** final doc states (a view over the persisted generation) */
+      /** final doc states (a flattening view over the persisted
+        * generation's per-partition blocks) */
       docs: Dataset[DocState],
       numWords: Int,
       /** Unpersists the cached generation backing `docs` (the loop's
@@ -115,9 +128,11 @@ object LdaTrainer {
     * pinned to [[canonicalLayout]] (one extra shuffle at chain start),
     * making the resumed chain BYTE-IDENTICAL to an uninterrupted run with
     * the same seed and S: sweep RNG streams key on (seed, docId, iter,
-    * shard), model updates are integer treeReduce sums, and the layout
-    * — the only remaining degree of freedom — is now a pure function of
-    * (data, num_parts) on both paths. */
+    * shard), model updates are integer sums (exact in any merge order,
+    * so also across the per-task arrival order of the allreduce), and
+    * the layout — the only remaining degree of freedom — is now a pure
+    * function of (data, num_parts) on both paths. The hook sees each
+    * generation as a `Dataset[DocState]` view over its cached blocks. */
   def trainResumable(corpus: Dataset[DocState], numWords: Int, cfg: LdaConfig,
       dir: String, every: Int, numShards: Int = 0): Result = {
     require(every >= 1, "checkpoint cadence `every` must be >= 1")
@@ -193,15 +208,18 @@ object LdaTrainer {
 
   /** One training iteration: `numShards` passes over the word ranges of
     * [[shardBounds]] (see the object doc). `docs` is the iteration-start
-    * generation; it stays cached until the caller retires it in `gens`.
-    * Returns the swept generation (persisted and materialized), the model
-    * after the iteration — `model` itself, updated in place, at S ≥ 2; an
-    * updated copy at S = 1, where `model` is the live broadcast value and
-    * is left untouched — the pre-sweep log-likelihood (0 unless
-    * `cfg.computeLikelihood`), and the broadcast time in ns. */
-  private[lda] def iteration(docs: RDD[DocState], model: Array[Long], numWords: Int,
-      cfg: LdaConfig, numShards: Int, iter: Int,
-      gens: Generations): (RDD[DocState], Array[Long], Double, Long) = {
+    * generation, one block per partition; it stays cached until the
+    * caller retires it in `gens`. Returns the swept generation (persisted
+    * and materialized), the model after the iteration — `model` itself,
+    * updated in place, at S ≥ 2; an updated copy at S = 1, where `model`
+    * is the live broadcast value and is left untouched — the pre-sweep
+    * log-likelihood (0 unless `cfg.computeLikelihood`), and the broadcast
+    * time in ns. `ingressMax` bounds the allreduce's driver ingress
+    * ([[Gibbs.DriverIngressBytes]]). */
+  private[lda] def iteration(docs: RDD[Array[DocState]], model: Array[Long], numWords: Int,
+      cfg: LdaConfig, numShards: Int, iter: Int, gens: Generations,
+      ingressMax: Long = Gibbs.DriverIngressBytes
+  ): (RDD[Array[DocState]], Array[Long], Double, Long) = {
     val sc = docs.sparkContext
     val k = cfg.numTopics
     val global = numWords * k
@@ -232,8 +250,8 @@ object LdaTrainer {
           if (numShards == 1)
             sum + Gibbs.logLikelihood(d, bc.value, lo, hi, numWords, cfg.alpha, cfg.beta, k, 0.0)
           else Gibbs.logLikelihood(d, bc.value, lo, hi, numWords, cfg.alpha, cfg.beta, k, sum)))
-      val (delta, passLL) =
-        Gibbs.countDeltaRdd(swept, current, lo, hi, k, likelihood) // materializes
+      val (delta, passLL) = // materializes
+        Gibbs.countDeltaRdd(swept, current, lo, hi, k, likelihood, ingressMax)
       ll += passLL
       val gOff = (hi - lo) * k
       delta.foreach { d =>
@@ -259,6 +277,7 @@ object LdaTrainer {
     require(numShards >= 0, "numShards must be >= 0 (0: derived from the model size)")
     val spark = corpus.sparkSession
     import spark.implicits._
+    def view(gen: RDD[Array[DocState]]) = spark.createDataset(gen.flatMap(_.iterator))
     val k = cfg.numTopics
     val nShards = effectiveShards(numWords,
       if (numShards >= 1) numShards else Lda.numShards(numWords, k))
@@ -266,16 +285,16 @@ object LdaTrainer {
     // with no relational structure — Catalyst has nothing to optimize,
     // and a Dataset persist would encoder-serialize every DocState each
     // iteration (measured 3× slower at sf0.1); the RDD caches plain JVM
-    // objects. localCheckpoint up front truncates the INPUT's lineage
+    // objects, one block array per partition (see the object doc).
+    // localCheckpoint up front truncates the INPUT's lineage
     // (continue-training would otherwise drag the prior chain along) —
     // marked before the first job so the first materialization checkpoints.
-    // The persist/checkpoint marks go on a PRIVATE identity-mapPartitions
-    // copy, never on corpus.rdd itself: Dataset.rdd is a lazy val shared
-    // by every consumer of the Dataset, and marking it would truncate the
-    // caller's lineage — a second fit() on the same Dataset would then
-    // read unpersisted checkpoint blocks and fail.
-    var docs = corpus.rdd.mapPartitions(it => it, preservesPartitioning = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // The persist/checkpoint marks go on a PRIVATE `glom` copy, never on
+    // corpus.rdd itself: Dataset.rdd is a lazy val shared by every
+    // consumer of the Dataset, and marking it would truncate the caller's
+    // lineage — a second fit() on the same Dataset would then read
+    // unpersisted checkpoint blocks and fail.
+    var docs = corpus.rdd.glom().persist(StorageLevel.MEMORY_AND_DISK)
     docs.localCheckpoint()
     var model = Gibbs.countModelRdd(docs, 0, numWords, k)
     val gens = new Generations
@@ -312,7 +331,7 @@ object LdaTrainer {
       bcastMs += bcNanos / 1000000L
       iter += 1
       if (onCheckpoint != null)
-        onCheckpoint(iter, spark.createDataset(docs), accum, nAccum,
+        onCheckpoint(iter, view(docs), accum, nAccum,
           lls.toArray, iterMs.toArray, bcastMs.toArray)
     }
     if (nAccum > 0) {
@@ -321,7 +340,7 @@ object LdaTrainer {
     }
     val gen = docs
     Result(model, accum, lls.toArray, iterMs.toArray, bcastMs.toArray,
-      spark.createDataset(docs), numWords,
+      view(docs), numWords,
       release = () => gens.release(gen))
   }
 }

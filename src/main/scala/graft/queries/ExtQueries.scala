@@ -1428,16 +1428,10 @@ object ExtQueries {
     * r14 sf10 sweep left ~10M-row parquet dirs behind per rep). */
   private val streamDirs =
     scala.collection.concurrent.TrieMap[String, java.nio.file.Path]()
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(p)
-      try walk.iterator().asScala.toSeq.reverse.foreach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
-  /** Best-effort [[deleteRecursively]]: a failure is logged, not thrown. */
+  /** Best-effort [[Layout.deleteRecursively]]: a failure is logged, not
+    * thrown. */
   private def tryDeleteRecursively(p: java.nio.file.Path): Unit =
-    try deleteRecursively(p)
+    try Layout.deleteRecursively(p)
     catch { case NonFatal(e) => System.err.println(s"[graft] could not delete $p: $e") }
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>

@@ -101,6 +101,20 @@ class AppsSpec extends SparkSpec {
     assert(lines(2).split(" ").map(_.toDouble).sum == 2.0)
   }
 
+  test("InferApp folds a word the model file repeats in against its last row") {
+    // alpha's first row is all topic 0, its last all topic 1: every
+    // occurrence of alpha settles in the topic of the row the dictionary
+    // maps it to
+    val model = tmp("repeated-model", "alpha 1000 0\nbeta 500 500\nalpha 0 1000\n")
+    val inferIn = tmp("repeated-infer", "alpha 4\n")
+    val resultFile = Files.createTempFile("graft-infer-repeated", ".txt").toString
+    InferApp.run(spark, Flags(numTopics = 2, alpha = 0.1, beta = 0.01,
+      modelFile = model, inferenceDataFile = inferIn,
+      inferenceResultFile = resultFile,
+      burnInIterations = 1, totalIterations = 3))
+    assert(Files.readString(java.nio.file.Path.of(resultFile)) == "0 4\n")
+  }
+
   test("PipelineApp writes split-partitioned parquet matching cleanCorpus") {
     val out = Files.createTempDirectory("graft-pipeline").toString
     PipelineApp.run(spark, Array(sf() + "/documents.parquet", out))

@@ -29,9 +29,9 @@ class ShardedLdaSpec extends SparkSpec {
   test("a 3-shard iteration conserves per-word and total counts across shards") {
     val docs = corpus(30)
     val model0 = Gibbs.countModel(docs, v, k)
-    val (sweptRdd, model, _, _) = LdaTrainer.iteration(docs.rdd,
+    val (sweptRdd, model, _, _) = LdaTrainer.iteration(docs.rdd.glom(),
       model0, v, iterCfg, numShards = 3, iter = 0, new LdaTrainer.Generations)
-    val swept = spark.createDataset(sweptRdd)
+    val swept = spark.createDataset(sweptRdd.flatMap(_.iterator))
     val recount = Gibbs.countModel(swept, v, k)
     // topic flips never change word totals (row sums)
     assert(wordTotals(model0) == wordTotals(recount))
@@ -45,7 +45,7 @@ class ShardedLdaSpec extends SparkSpec {
     test(s"S = $s, computeLikelihood = $ll: the delta-updated model equals a fresh recount") {
       val cfg = iterCfg.copy(totalIterations = 3, computeLikelihood = ll)
       val gens = new LdaTrainer.Generations
-      var docs = corpus(30).rdd.persist()
+      var docs = corpus(30).rdd.glom().persist()
       var model = Gibbs.countModelRdd(docs, 0, v, k)
       var moved = 0
       for (iter <- 0 until cfg.totalIterations) {
@@ -63,7 +63,9 @@ class ShardedLdaSpec extends SparkSpec {
           val (lo, hi) = LdaTrainer.shardBounds(v, s, p)
           val topics = k
           val size = (hi - lo + 1) * topics
-          swept.zipPartitions(docs)((o, i) => Iterator.single(Gibbs.countDelta(o, i, lo, hi, topics)))
+          swept.zipPartitions(docs) { (o, i) =>
+            Iterator.single(Gibbs.countDelta(o.next(), i.next(), lo, hi, topics))
+          }
             .collect().foreach { d =>
               val idx = d.map(Gibbs.deltaIndex)
               assert(d.length <= size)
@@ -85,11 +87,11 @@ class ShardedLdaSpec extends SparkSpec {
   test("a shard pass recomputed after its cache is dropped resamples identically") {
     // each shard pass keys its RNG on its own shard index, so lineage
     // recompute (block loss, eviction) must replay the same draws
-    val docs = corpus(30).rdd
+    val docs = corpus(30).rdd.glom()
     val (swept, _, _, _) = LdaTrainer.iteration(docs,
       Gibbs.countModelRdd(docs, 0, v, k), v, iterCfg, numShards = 3, iter = 0,
       new LdaTrainer.Generations)
-    def topics = swept.collect().sortBy(_.docId).map(_.topics.toSeq)
+    def topics = swept.collect().flatten.sortBy(_.docId).map(_.topics.toSeq)
     val first = topics
     swept.unpersist(blocking = true)
     val changed = first.zip(topics).count { case (a, b) => a != b }

@@ -3,6 +3,7 @@ package graft.lda
 import graft.SparkSpec
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
 
 /** The one training loop: S word-shard passes per iteration, one Spark
   * job each; burn-in averaging at every S; likelihood sums that do not
@@ -30,18 +31,19 @@ class TrainLoopSpec extends SparkSpec {
     assert(LdaTrainer.shardBounds(0, 1, 0) == ((0, 0)))
   }
 
-  /** Jobs the body runs, counted by a listener on a private job group. A
-    * marker job run after the body is seen last (the listener bus delivers
-    * in order), so every job of the body has been counted by then. */
-  private def jobsOf(body: => Unit): Int = {
+  /** The stage count of each job the body runs, counted by a listener on
+    * a private job group. A marker job run after the body is seen last
+    * (the listener bus delivers in order), so every job of the body has
+    * been counted by then. */
+  private def jobStages(body: => Unit): Seq[Int] = {
     val sc = spark.sparkContext
     val group = s"train-loop-jobs-${System.nanoTime()}"
     val marker = group + "-marker"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .filter(_.startsWith(group)).foreach(seen.add)
+          .filter(_.startsWith(group)).foreach(g => seen.add((g, e.stageInfos.size)))
     }
     sc.addSparkListener(listener)
     try {
@@ -50,11 +52,14 @@ class TrainLoopSpec extends SparkSpec {
       sc.setJobGroup(marker, "marker")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.contains(marker), "listener never saw the marker job")
-      seen.toArray.count(_ == group)
+      def markerSeen = seen.asScala.exists(_._1 == marker)
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(markerSeen, "listener never saw the marker job")
+      seen.asScala.toSeq.collect { case (`group`, stages) => stages }
     } finally sc.removeSparkListener(listener)
   }
+
+  private def jobsOf(body: => Unit): Int = jobStages(body).size
 
   for (s <- Seq(1, 3); ll <- Seq(false, true)) {
     test(s"S = $s, computeLikelihood = $ll: one job per pass after the initial tally") {
@@ -62,6 +67,44 @@ class TrainLoopSpec extends SparkSpec {
       val cfg = LdaConfig(k, 0.1, 0.01, totalIterations = 2, computeLikelihood = ll, seed = 5L)
       val jobs = jobsOf(LdaTrainer.train(docs, v, cfg, numShards = s).release())
       assert(jobs == 1 + 2 * s, s"$jobs jobs for 2 iterations at S = $s")
+    }
+  }
+
+  for (s <- Seq(1, 3); ll <- Seq(false, true)) {
+    test(s"S = $s, computeLikelihood = $ll: an executor-side combine level (depth 2) " +
+        "gives the same models, likelihoods and topics as depth 1") {
+      // 8 partitions: the depth-2 rule (treeAggregate's) merges them in 2
+      // groups of 4 on the executors before the driver merges the groups
+      val cfg = LdaConfig(k, 0.1, 0.01, totalIterations = 3, computeLikelihood = ll, seed = 17L)
+      def run(ingressMax: Long) = {
+        val gens = new LdaTrainer.Generations
+        var docs = corpus(64, 8).rdd.glom().persist()
+        var model = Gibbs.countModelRdd(docs, 0, v, k, ingressMax)
+        val trace = Seq.newBuilder[(Seq[Long], Double)]
+        trace += ((model.toSeq, 0.0))
+        for (iter <- 0 until cfg.totalIterations) {
+          val (swept, next, passLL, _) =
+            LdaTrainer.iteration(docs, model, v, cfg, s, iter, gens, ingressMax)
+          trace += ((next.toSeq, passLL))
+          gens.retire(docs)
+          docs = swept
+          model = next
+        }
+        val topics = docs.collect().flatten.map(d => d.docId -> d.topics.toSeq).toSeq
+        gens.release(docs)
+        (trace.result(), topics)
+      }
+      var depth1: (Seq[(Seq[Long], Double)], Seq[(Long, Seq[Int])]) = null
+      var depth2: (Seq[(Seq[Long], Double)], Seq[(Long, Seq[Int])]) = null
+      val stages1 = jobStages { depth1 = run(Gibbs.DriverIngressBytes) }
+      val stages2 = jobStages { depth2 = run(0L) }
+      // the initial tally and one job per pass, then the final collect
+      assert(stages1 == Seq.fill(1 + 3 * s)(1) :+ 1)
+      assert(stages2 == Seq.fill(1 + 3 * s)(2) :+ 1, "no combine stage ran at depth 2")
+      assert(depth2._1 == depth1._1)
+      assert(depth2._2 == depth1._2)
+      assert(depth1._1.map(_._1).distinct.size == depth1._1.size, "the chain did not move")
+      assert(ll == depth1._1.drop(1).forall(_._2 != 0.0))
     }
   }
 
