@@ -24,7 +24,8 @@ object Flags {
   def parse(args: Array[String]): Flags = {
     var f = Flags()
     var i = 0
-    while (i < args.length - 1) {
+    while (i < args.length) {
+      if (i + 1 == args.length) sys.error(s"flag ${args(i)} has no value")
       val v = args(i + 1)
       args(i) match {
         case "--num_topics" => f = f.copy(numTopics = v.toInt)

@@ -16,14 +16,29 @@ import org.apache.spark.sql.functions._
 object Corpus {
 
   /** Sorted-vocabulary build (V2, mpi_lda.cc:197-207): distinct tokens,
-    * lexicographic rank as dense id. Default vocabulary semantics (the
-    * deterministic one — SURVEY §2.2 quirk #3).
+    * rank in UTF-8 byte order (= Spark SQL's string collation) as dense
+    * id. Default vocabulary semantics (the deterministic one — SURVEY §2.2
+    * quirk #3).
     *
-    * The default path is the distributed sortBy+zipWithIndex ranking
-    * ([[sortedVocabLarge]]): no single-partition WindowExec anywhere, so a
-    * 100M-type vocab never funnels through one task. The window form is
-    * kept as [[sortedVocabWindowed]] for fixture-scale parity tests. */
-  def sortedVocab(tokens: DataFrame): DataFrame = sortedVocabLarge(tokens)
+    * The dense rank comes from `sortBy + zipWithIndex`: no
+    * single-partition WindowExec anywhere, so a 100M-type vocab never
+    * funnels through one task (zipWithIndex runs one extra job to count
+    * partition sizes; ranges stay distributed). Word ids remain Int (the
+    * `DocState`/model layout bound): V beyond Int.MaxValue fails fast
+    * rather than wrapping. The window form is kept as
+    * [[sortedVocabWindowed]] for fixture-scale parity tests. */
+  def sortedVocab(tokens: DataFrame): DataFrame = {
+    val spark = tokens.sparkSession
+    import spark.implicits._
+    tokens.select("tok").distinct().as[String].rdd
+      .sortBy(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))(unsignedBytes, implicitly)
+      .zipWithIndex()
+      .map { case (t, i) =>
+        require(i <= Int.MaxValue, s"vocabulary exceeds Int word-id space at '$t'")
+        (t, i.toInt)
+      }
+      .toDF("tok", "word_id")
+  }
 
   /** Window-ranked variant of [[sortedVocab]] — identical (tok, word_id)
     * mapping, but the dense rank is a global `row_number` window, i.e. the
@@ -45,31 +60,11 @@ object Corpus {
   private[graft] val unsignedBytes: Ordering[Array[Byte]] =
     (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.compareUnsigned(x, y)
 
-  /** Sorted-vocabulary build for the huge-V regime: same (tok, word_id)
-    * mapping as [[sortedVocab]] — including UTF-8 byte collation — but
-    * the dense rank comes from `sortBy + zipWithIndex` instead of a
-    * single-partition window, so a very large V never funnels through one
-    * task. (zipWithIndex runs one extra job to count partition sizes;
-    * ranges stay distributed.) Word ids remain Int (the `DocState`/model
-    * layout bound): V beyond Int.MaxValue fails fast rather than wrapping. */
-  def sortedVocabLarge(tokens: DataFrame): DataFrame = {
-    val spark = tokens.sparkSession
-    import spark.implicits._
-    tokens.select("tok").distinct().as[String].rdd
-      .sortBy(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))(unsignedBytes, implicitly)
-      .zipWithIndex()
-      .map { case (t, i) =>
-        require(i <= Int.MaxValue, s"vocabulary exceeds Int word-id space at '$t'")
-        (t, i.toInt)
-      }
-      .toDF("tok", "word_id")
-  }
-
   /** First-seen-order vocabulary (V1, lda.cc:70-77) — parity mode for the
     * reference's single-node binary. Requires (doc_id, pos)-ordered input;
     * id = rank of first (doc_id, pos) appearance.
     *
-    * Same two-job distributed ranking as [[sortedVocabLarge]] (the first
+    * Same two-job distributed ranking as [[sortedVocab]] (the first
     * appearance per token is a proper parallel groupBy; the dense rank is
     * sortBy+zipWithIndex on the tiny distinct set) — no single-partition
     * WindowExec in this path either. */

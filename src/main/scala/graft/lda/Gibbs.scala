@@ -6,6 +6,16 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 import scala.reflect.ClassTag
 
+/** One partition of a training generation: its docs, and the sparse
+  * count delta of the model slice that the pass which swept them made
+  * ([[Gibbs.packDelta]] entries). The initial generation's blocks carry
+  * no delta. Only the pass's allreduce ([[Gibbs.sumDeltas]]) reads it. */
+private[lda] final case class Block(docs: Array[DocState], delta: Array[Long])
+
+private[lda] object Block {
+  def initial(docs: Array[DocState]): Block = Block(docs, Array.emptyLongArray)
+}
+
 /** Collapsed-Gibbs kernel (the only genuinely custom compute in the engine;
   * everything relational is Spark built-ins — SURVEY.md §4.3). Every LDA
   * path — training at any word-shard count ([[LdaTrainer]]), fold-in
@@ -38,18 +48,20 @@ import scala.reflect.ClassTag
   * one distribution buffer per partition and allocates nothing in the
   * per-occurrence loop.
   *
-  * Scale: the sweep is a `mapPartitions` over the doc states with a
-  * broadcast model slice — no shuffle. The training loop keeps each
-  * generation as one `Array[DocState]` block per partition, so the sweep
-  * and the tallies below take blocks. The allreduce "up"
-  * ([[countDeltaRdd]]) is a per-partition count DELTA of the slice —
-  * only the entries the sweep changed, as sparse (index, change) pairs —
-  * merged on the driver as each task's partial arrives ([[allreduce]],
-  * one bare `runJob`, = mpi_lda.cc:58-92's chunked MPI_Allreduce) and
-  * added to the driver's model. plda allreduces the whole recounted model
-  * instead (mpi_lda.cc:94-111); adding exact integer deltas gives the same
-  * counts while shipping no more than the dense slice, and usually far
-  * less (parameter-server LDA synchronizes the same way, Smola &
+  * Scale: the sweep maps blocks to blocks with a broadcast model slice —
+  * no shuffle. The training loop keeps each generation as one [[Block]]
+  * per partition: a partition's docs, plus what the pass that swept them
+  * changed. A swept block carries its task's count DELTA of the slice
+  * ([[sweepRdd]]: the replica minus the broadcast slice, only the
+  * entries the sweep changed, as sparse (index, change) pairs), which is
+  * the allreduce "up" ([[sumDeltas]]): a narrow map of the swept
+  * generation, merged on the driver as each task's partial arrives
+  * ([[allreduce]], one bare
+  * `runJob`, = mpi_lda.cc:58-92's chunked MPI_Allreduce) and added to the
+  * driver's model. plda allreduces the whole recounted model instead
+  * (mpi_lda.cc:94-111); adding exact integer deltas gives the same counts
+  * while shipping no more than the dense slice, and usually far less
+  * (parameter-server LDA ships the replica's change the same way, Smola &
   * Narayanamurthy, VLDB 2010). In training, a full recount
   * ([[countModelRdd]]) only builds the initial model.
   *
@@ -142,34 +154,81 @@ object Gibbs {
     sweepDocument(wordIds, offsets, topics, docTopics, model, 0, numWords, numWords,
       alpha, beta, train, rng, dist)
 
-  /** Distributed training sweep of the occurrences of words in [lo, hi):
-    * one `mapPartitions` over the doc-state blocks. Each task clones the
-    * broadcast model slice once (its local AD-LDA replica) and streams
-    * docs through [[sweepDocument]] into a new block. Per-doc RNG streams
-    * keyed on (seed, docId, `stream`) make the sweep deterministic for a
-    * fixed partitioning.
+  /** Distributed training sweep of the occurrences of words in [lo, hi),
+    * block to block. Each block is swept against its own clone of the
+    * broadcast model slice (its local AD-LDA replica), then the clone's
+    * change, `rows − bcRows.value`, becomes the new block's
+    * [[Block.delta]]: the pass's allreduce input ([[sumDeltas]]), found
+    * without reading either block again. Per-doc RNG streams keyed on
+    * (seed, docId, `stream`) make the sweep deterministic for a fixed
+    * partitioning.
     *
-    * The loop runs at the RDD layer: an iterative mapPartitions chain
+    * The loop runs at the RDD layer: an iterative chain of block maps
     * gains nothing from Catalyst (no relational structure to optimize)
     * and a Dataset persist would pay encoder serialization of every
     * DocState per iteration; the RDD caches plain JVM objects (this is the
     * sanctioned "genuine per-partition imperative logic" RDD case). */
-  def sweepRdd(
-      docs: RDD[Array[DocState]], bcRows: Broadcast[Array[Long]], lo: Int, hi: Int,
+  private[lda] def sweepRdd(
+      blocks: RDD[Block], bcRows: Broadcast[Array[Long]], lo: Int, hi: Int,
       numWords: Int, numTopics: Int, alpha: Double, beta: Double,
-      seed: Long, stream: Long): RDD[Array[DocState]] = {
+      seed: Long, stream: Long): RDD[Block] = {
     val k = numTopics
-    docs.mapPartitions { it =>
-      val rows = bcRows.value.clone() // task-local AD-LDA replica
+    blocks.map { in =>
+      val base = bcRows.value
+      val rows = base.clone() // task-local AD-LDA replica
       val dist = new Array[Double](k)
-      it.map(_.map { doc =>
+      val docs = in.docs.map { doc =>
         val topics = doc.topics.clone()
         val rng = new SplitMix64(Rng.mix(seed, doc.docId, stream))
         sweepDocument(doc.wordIds, doc.offsets, topics, doc.topicHistogram(k), rows,
           lo, hi, numWords, alpha, beta, train = true, rng, dist)
         doc.copy(topics = topics)
-      })
+      }
+      Block(docs, deltaOf(rows, base))
     }
+  }
+
+  /** A training pass's allreduce "up" (ParallelLDAModel::
+    * ComputeAndAllReduce, mpi_lda.cc:94-111, shipped as a delta): ONE job
+    * that sums the swept blocks' [[Block.delta]]s with [[allreduce]],
+    * materializing `swept` (persist it first). The caller adds the sum to
+    * the model the pass sampled against. `ingressMax` bounds the driver's
+    * ingress.
+    *
+    * With `likelihood = Some((pre, ll))`, where `pre` is a co-partitioned
+    * RDD (the generation the iteration started from), the same tasks also
+    * fold `ll(doc, sum)` over `pre`'s docs of each partition from 0: the
+    * pre-sweep log-likelihood (quirk #6) costs no extra job, and is
+    * exactly-once by construction (a task retry recomputes the same
+    * partial; contrast an accumulator updated in a transformation). `pre`
+    * is zipped in here, in the job's own throwaway RDD, so it never enters
+    * `swept`'s lineage, which must end in the newest checkpoint
+    * ([[LdaTrainer.Generations]]). Each partition's sum rides the
+    * allreduce in its own slot, and the slots are added in partition
+    * order, so the total does not depend on which task finished first.
+    * Without it the sum is 0. */
+  private[lda] def sumDeltas(swept: RDD[Block], lo: Int, hi: Int, numTopics: Int,
+      likelihood: Option[(RDD[Block], (DocState, Double) => Double)], ingressMax: Long
+  ): (Array[Long], Double) = {
+    val numParts = swept.getNumPartitions
+    val partials = likelihood match {
+      case None => swept.map(b => (b.delta, Array.emptyDoubleArray))
+      case Some((pre, ll)) => swept.zipPartitions(pre) { (out, preIt) =>
+        val delta = out.next().delta
+        var sum = 0.0
+        preIt.next().docs.foreach(d => sum = ll(d, sum))
+        val slots = new Array[Double](numParts)
+        slots(TaskContext.getPartitionId()) = sum
+        Iterator.single((delta, slots))
+      }
+    }
+    val (delta, slots) = allreduce(partials, (hi - lo + 1) * numTopics * 8L, ingressMax) {
+      case ((a, la), (b, lb)) =>
+        var i = 0
+        while (i < la.length) { la(i) += lb(i); i += 1 } // disjoint slots: exact
+        (addDeltas(a, b), la)
+    }
+    (delta, sumInOrder(slots))
   }
 
   /** Driver ingress up to which the allreduce merges every partition's
@@ -210,20 +269,20 @@ object Gibbs {
     * tally, merged by [[allreduce]]. Partition-count invariant (addition
     * commutes). */
   def countModel(docs: Dataset[DocState], numWords: Int, numTopics: Int): Array[Long] =
-    countModelRdd(docs.rdd.glom(), 0, numWords, numTopics)
+    countModelRdd(docs.rdd.glom().map(Block.initial), 0, numWords, numTopics)
 
-  /** RDD core of [[countModel]], over doc-state blocks and a word range:
+  /** RDD core of [[countModel]], over a generation and a word range:
     * the rows of the words in [lo, hi), then the global row n(k) over ALL
     * occurrences — (hi − lo + 1)×K, the model slice layout of
     * [[sweepDocument]]. `ingressMax` bounds the driver's ingress ([[allreduce]]). */
-  def countModelRdd(docs: RDD[Array[DocState]], lo: Int, hi: Int, numTopics: Int,
+  private[lda] def countModelRdd(docs: RDD[Block], lo: Int, hi: Int, numTopics: Int,
       ingressMax: Long = DriverIngressBytes): Array[Long] = {
     val k = numTopics
     val size = (hi - lo + 1) * k
     val gOff = (hi - lo) * k
     val partials = docs.mapPartitions { it =>
       val acc = new Array[Long](size)
-      it.foreach(_.foreach { doc =>
+      it.foreach(_.docs.foreach { doc =>
         var i = 0
         while (i < doc.wordIds.length) {
           val w = doc.wordIds(i)
@@ -258,53 +317,21 @@ object Gibbs {
   private[lda] def deltaIndex(packed: Long): Int = (packed >>> 32).toInt
   private[lda] def deltaChange(packed: Long): Int = packed.toInt
 
-  /** The count delta of one training pass over [lo, hi), on one
-    * partition: `swept` is the pass's output block and `input` its input
-    * block, the same docs in the same order. Only occurrences of words in
-    * the range move, so the delta covers the range's rows and the global
-    * row, in the model slice layout of [[sweepDocument]]. At most one
-    * entry per slice entry: never more than the dense slice. */
-  private[lda] def countDelta(swept: Array[DocState], input: Array[DocState],
-      lo: Int, hi: Int, numTopics: Int): Array[Long] = {
-    val k = numTopics
-    val gOff = (hi - lo) * k
-    val acc = new Array[Int](gOff + k)
-    var d = 0
-    while (d < swept.length) {
-      val out = swept(d)
-      val in = input(d)
-      var i = 0
-      while (i < in.wordIds.length) {
-        val w = in.wordIds(i)
-        if (w >= lo && w < hi) {
-          val wOff = (w - lo) * k
-          var j = in.offsets(i)
-          val end = in.offsets(i + 1)
-          while (j < end) {
-            val a = in.topics(j)
-            val b = out.topics(j)
-            if (a != b) {
-              acc(wOff + a) -= 1; acc(gOff + a) -= 1
-              acc(wOff + b) += 1; acc(gOff + b) += 1
-            }
-            j += 1
-          }
-        }
-        i += 1
-      }
-      d += 1
-    }
+  /** The sparse delta `after − before` of two model slices: at most one
+    * entry per slice entry, so never more than the dense slice. */
+  private def deltaOf(after: Array[Long], before: Array[Long]): Array[Long] = {
+    var packed = new Array[Long](64)
     var n = 0
     var i = 0
-    while (i < acc.length) { if (acc(i) != 0) n += 1; i += 1 }
-    val packed = new Array[Long](n)
-    n = 0
-    i = 0
-    while (i < acc.length) {
-      if (acc(i) != 0) { packed(n) = packDelta(i, acc(i)); n += 1 }
+    while (i < after.length) {
+      if (after(i) != before(i)) {
+        if (n == packed.length) packed = java.util.Arrays.copyOf(packed, 2 * n)
+        packed(n) = packDelta(i, Math.toIntExact(after(i) - before(i)))
+        n += 1
+      }
       i += 1
     }
-    packed
+    java.util.Arrays.copyOf(packed, n)
   }
 
   /** Sum of two sparse deltas (a sorted merge; entries that cancel are
@@ -327,54 +354,6 @@ object Gibbs {
       }
     }
     if (n == out.length) out else java.util.Arrays.copyOf(out, n)
-  }
-
-  /** A training pass's allreduce "up" (ParallelLDAModel::
-    * ComputeAndAllReduce, mpi_lda.cc:94-111, shipped as a delta): ONE job
-    * that zips each swept block with the pass's input block, emits its
-    * sparse [[countDelta]] over [lo, hi), and sums the partials with
-    * [[allreduce]]. The caller adds the sum to the model the pass sampled
-    * against. `swept` must derive from `input` by a per-doc map (as
-    * [[sweepRdd]] does) and `input` should be cached. `ingressMax` bounds
-    * the driver's ingress.
-    *
-    * With `likelihood = Some((pre, ll))`, where `pre` is a co-partitioned
-    * RDD (the generation the iteration started from), the same tasks also
-    * fold `ll(doc, sum)` over `pre`'s docs of each partition from 0: the
-    * pre-sweep log-likelihood (quirk #6) costs no extra job, and is
-    * exactly-once by construction (a task retry recomputes the same
-    * partial; contrast an accumulator updated in a transformation). Each
-    * partition's sum rides the allreduce in its own slot, and the slots
-    * are added in partition order, so the total does not depend on which
-    * task finished first. Without it the sum is 0. */
-  def countDeltaRdd(
-      swept: RDD[Array[DocState]], input: RDD[Array[DocState]], lo: Int, hi: Int,
-      numTopics: Int,
-      likelihood: Option[(RDD[Array[DocState]], (DocState, Double) => Double)] = None,
-      ingressMax: Long = DriverIngressBytes
-  ): (Array[Long], Double) = {
-    val numParts = swept.getNumPartitions
-    val partials = likelihood match {
-      case None => swept.zipPartitions(input) { (out, in) =>
-        Iterator.single((countDelta(out.next(), in.next(), lo, hi, numTopics),
-          Array.emptyDoubleArray))
-      }
-      case Some((pre, ll)) => swept.zipPartitions(input, pre) { (out, in, preIt) =>
-        val delta = countDelta(out.next(), in.next(), lo, hi, numTopics)
-        var sum = 0.0
-        preIt.foreach(_.foreach(d => sum = ll(d, sum)))
-        val slots = new Array[Double](numParts)
-        slots(TaskContext.getPartitionId()) = sum
-        Iterator.single((delta, slots))
-      }
-    }
-    val (delta, slots) = allreduce(partials, (hi - lo + 1) * numTopics * 8L, ingressMax) {
-      case ((a, la), (b, lb)) =>
-        var i = 0
-        while (i < la.length) { la(i) += lb(i); i += 1 } // disjoint slots: exact
-        (addDeltas(a, b), la)
-    }
-    (delta, sumInOrder(slots))
   }
 
   /** Left-to-right sum: per-partition partials added in partition order. */

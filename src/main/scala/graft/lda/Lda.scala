@@ -18,15 +18,17 @@ import org.apache.spark.storage.StorageLevel
   * word range [lo, hi) of [[shardBounds]], each pass ONE Spark job:
   *   1. broadcast rows [lo, hi) of the driver model, then the global row
   *      as it was at iteration start (at S = 1: the whole model, no copy);
-  *   2. `mapPartitions` Gibbs sweep of the range's occurrences — each task
-  *      samples against its cloned replica (AD-LDA staleness, quirk #2);
-  *   3. allreduce "up" as a sparse count delta
-  *      ([[Gibbs.countDeltaRdd]]; plda allreduces the recounted model,
-  *      ParallelLDAModel::ComputeAndAllReduce, mpi_lda.cc:94-111): each
-  *      swept partition is zipped with the pass's input partition and
-  *      ships only the entries of rows [lo, hi) and of the global row that
-  *      the sweep changed, merged on the driver as each task finishes
-  *      (one bare `runJob`); optionally, in the same job, the pre-sweep
+  *   2. Gibbs sweep of the range's occurrences, block to block
+  *      ([[Gibbs.sweepRdd]]) — each task samples against its cloned
+  *      replica (AD-LDA staleness, quirk #2), and its new block carries
+  *      the replica's change: the sparse count delta of rows [lo, hi) and
+  *      of the global row;
+  *   3. allreduce "up" of those deltas ([[Gibbs.sumDeltas]]; plda
+  *      allreduces the recounted model, ParallelLDAModel::
+  *      ComputeAndAllReduce, mpi_lda.cc:94-111): a narrow map of the
+  *      persisted swept generation, merged on the driver as each task
+  *      finishes (one bare `runJob`, which also materializes the
+  *      generation); optionally, in the same tasks, the pre-sweep
   *      log-likelihood of the range, read from the iteration-start
   *      generation (quirk #6: the reported LL describes the previous
   *      iteration's model);
@@ -44,11 +46,21 @@ import org.apache.spark.storage.StorageLevel
   *
   * Memory: the driver holds the whole model at every S; what S bounds is
   * the per-task broadcast replica, (V/S + 1)×K longs, and the
-  * per-partition delta partial, at most that many entries.
+  * per-partition delta partial, at most that many entries. A cached block
+  * keeps its pass's delta for as long as its generation stays cached:
+  * per block at most the dense slice, and at most 4 entries per topic
+  * flip (3 MB at V = 38,007, K = 10; about 0.5 MB per task in perfbench's
+  * `nyt_k10` workload). Up to three generations are live at once (the
+  * iteration-start one, the pass's input and its output; two at S = 1),
+  * plus the newest checkpointed one, each P blocks over P partitions, so
+  * the deltas add at most 4 × P dense slices to the cache, spilled to
+  * disk with the docs under MEMORY_AND_DISK. Early iterations on a
+  * large-V corpus flip the most topics, when this can exceed the
+  * generation's topic assignments themselves.
   *
-  * A generation is cached as ONE `Array[DocState]` block per partition
-  * (`glom` of the input, then a block-to-block sweep), not one record per
-  * doc. Spark caches a partition as one block either way, and unrolls it
+  * A generation is cached as ONE [[Block]] per partition (`glom` of the
+  * input, then a block-to-block sweep), not one record per doc. Spark
+  * caches a partition as one block either way, and unrolls it
   * whole either way, so the memory held is the same plus one reference
   * per doc; what changes is that `MemoryStore` sizes one object per
   * partition (`SizeEstimator` samples a large array) instead of
@@ -81,8 +93,9 @@ object LdaTrainer {
       /** pre-sweep corpus log-likelihood per iteration (if requested) */
       likelihoods: Array[Double],
       /** wall-clock per training iteration, ms (all passes' broadcasts,
-        * sweeps and count-delta allreduces, each pass one `runJob`, plus
-        * the driver-side delta add and burn-in accumulate) — the number
+        * and their sweeps with the allreduce of the swept blocks' deltas,
+        * each pass one `runJob`, plus the driver-side delta add and
+        * burn-in accumulate) — the number
         * BASELINE.md's per-iteration cost model asks to watch at scale */
       iterMillis: Array[Long],
       /** driver-side model broadcast time per iteration, ms (the
@@ -216,10 +229,10 @@ object LdaTrainer {
     * log-likelihood (0 unless `cfg.computeLikelihood`), and the broadcast
     * time in ns. `ingressMax` bounds the allreduce's driver ingress
     * ([[Gibbs.DriverIngressBytes]]). */
-  private[lda] def iteration(docs: RDD[Array[DocState]], model: Array[Long], numWords: Int,
+  private[lda] def iteration(docs: RDD[Block], model: Array[Long], numWords: Int,
       cfg: LdaConfig, numShards: Int, iter: Int, gens: Generations,
       ingressMax: Long = Gibbs.DriverIngressBytes
-  ): (RDD[Array[DocState]], Array[Long], Double, Long) = {
+  ): (RDD[Block], Array[Long], Double, Long) = {
     val sc = docs.sparkContext
     val k = cfg.numTopics
     val global = numWords * k
@@ -251,7 +264,7 @@ object LdaTrainer {
             sum + Gibbs.logLikelihood(d, bc.value, lo, hi, numWords, cfg.alpha, cfg.beta, k, 0.0)
           else Gibbs.logLikelihood(d, bc.value, lo, hi, numWords, cfg.alpha, cfg.beta, k, sum)))
       val (delta, passLL) = // materializes
-        Gibbs.countDeltaRdd(swept, current, lo, hi, k, likelihood, ingressMax)
+        Gibbs.sumDeltas(swept, lo, hi, k, likelihood, ingressMax)
       ll += passLL
       val gOff = (hi - lo) * k
       delta.foreach { d =>
@@ -277,7 +290,7 @@ object LdaTrainer {
     require(numShards >= 0, "numShards must be >= 0 (0: derived from the model size)")
     val spark = corpus.sparkSession
     import spark.implicits._
-    def view(gen: RDD[Array[DocState]]) = spark.createDataset(gen.flatMap(_.iterator))
+    def view(gen: RDD[Block]) = spark.createDataset(gen.flatMap(_.docs.iterator))
     val k = cfg.numTopics
     val nShards = effectiveShards(numWords,
       if (numShards >= 1) numShards else Lda.numShards(numWords, k))
@@ -289,12 +302,12 @@ object LdaTrainer {
     // localCheckpoint up front truncates the INPUT's lineage
     // (continue-training would otherwise drag the prior chain along) —
     // marked before the first job so the first materialization checkpoints.
-    // The persist/checkpoint marks go on a PRIVATE `glom` copy, never on
+    // The persist/checkpoint marks go on a PRIVATE block copy, never on
     // corpus.rdd itself: Dataset.rdd is a lazy val shared by every
     // consumer of the Dataset, and marking it would truncate the caller's
     // lineage — a second fit() on the same Dataset would then read
     // unpersisted checkpoint blocks and fail.
-    var docs = corpus.rdd.glom().persist(StorageLevel.MEMORY_AND_DISK)
+    var docs = corpus.rdd.glom().map(Block.initial).persist(StorageLevel.MEMORY_AND_DISK)
     docs.localCheckpoint()
     var model = Gibbs.countModelRdd(docs, 0, numWords, k)
     val gens = new Generations
@@ -446,13 +459,14 @@ object Lda {
     * Steady s/iter, local[32]: flat wins 1.9× at 8 MB (0.85 vs 1.62)
     * and 13% at 25 MB (2.02 vs 2.28), the two paths tie at 50 MB
     * (3.36 vs 3.44), sharded wins from 78 MB (4.53 vs 4.86) out to
-    * 783 MB (44.2 vs 80.4 — where the flat path also needs
+    * 783 MB (44.2 vs 80.4 — where the flat path also needed
     * `spark.driver.maxResultSize` raised past its 1g default just to
-    * run: treeReduce ships whole-model partials). 64 MB is the
-    * measured indifference point; one shard's per-task clone and
-    * full-model allreduce grow with V×K while S shards' per-pass
-    * broadcasts and partials stay bounded, so above this sharding is
-    * both faster and the only default-config-safe choice. */
+    * run). 64 MB was the indifference point of that measurement, taken
+    * on the since-deleted trainer whose allreduce shipped dense
+    * whole-model partials; today's passes ship sparse deltas, and
+    * ROADMAP item 3 re-measures the crossover. One shard's per-task
+    * clone grows with V×K while S shards' per-pass broadcasts and
+    * partials stay bounded. */
   val BroadcastModelBytesMax: Long = 64L << 20
 
   /** Per-shard broadcast target for sharded training: big enough to

@@ -217,10 +217,10 @@ object NytKsweep {
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
-      // default 1g on purpose: the flat path's treeReduce ships
-      // full-model partials, and hitting the stock limit at large K IS
-      // a finding (recorded in BENCH.md round 12); raise explicitly to
-      // measure past the cliff
+      // default 1g on purpose: the since-deleted trainer whose allreduce
+      // shipped full-model partials hit the stock limit at large K
+      // (recorded in BENCH.md round 12), and hitting it again IS a
+      // finding; raise explicitly to measure past the cliff
       .config("spark.driver.maxResultSize",
         sys.env.getOrElse("SPARK_MAX_RESULT", "1g"))
       .getOrCreate()

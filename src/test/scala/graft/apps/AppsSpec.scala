@@ -67,6 +67,11 @@ class AppsSpec extends SparkSpec {
     Flags.checkInferring(Flags(alpha = 0.1, beta = 0.01, modelFile = "m",
       inferenceDataFile = "i", inferenceResultFile = "o",
       burnInIterations = 1, totalIterations = 3))
+    // a trailing flag with no value fails, naming the flag, rather than
+    // leaving its default in force
+    assert(Flags.parse(Array("--num_topics", "2", "--seed", "7")).seed == 7L)
+    val e = intercept[RuntimeException](Flags.parse(Array("--num_topics", "2", "--seed")))
+    assert(e.getMessage.contains("--seed"), e.getMessage)
   }
 
   test("InferApp emits one line per kept input line, zeros for all-OOV docs") {

@@ -29,9 +29,9 @@ class ShardedLdaSpec extends SparkSpec {
   test("a 3-shard iteration conserves per-word and total counts across shards") {
     val docs = corpus(30)
     val model0 = Gibbs.countModel(docs, v, k)
-    val (sweptRdd, model, _, _) = LdaTrainer.iteration(docs.rdd.glom(),
+    val (sweptRdd, model, _, _) = LdaTrainer.iteration(docs.rdd.glom().map(Block.initial),
       model0, v, iterCfg, numShards = 3, iter = 0, new LdaTrainer.Generations)
-    val swept = spark.createDataset(sweptRdd.flatMap(_.iterator))
+    val swept = spark.createDataset(sweptRdd.flatMap(_.docs.iterator))
     val recount = Gibbs.countModel(swept, v, k)
     // topic flips never change word totals (row sums)
     assert(wordTotals(model0) == wordTotals(recount))
@@ -45,7 +45,7 @@ class ShardedLdaSpec extends SparkSpec {
     test(s"S = $s, computeLikelihood = $ll: the delta-updated model equals a fresh recount") {
       val cfg = iterCfg.copy(totalIterations = 3, computeLikelihood = ll)
       val gens = new LdaTrainer.Generations
-      var docs = corpus(30).rdd.glom().persist()
+      var docs = corpus(30).rdd.glom().map(Block.initial).persist()
       var model = Gibbs.countModelRdd(docs, 0, v, k)
       var moved = 0
       for (iter <- 0 until cfg.totalIterations) {
@@ -55,26 +55,24 @@ class ShardedLdaSpec extends SparkSpec {
         // at S = 1 the input model is the live broadcast value: untouched
         if (s == 1) assert(model.sameElements(before))
         assert(ll == (passLL != 0.0))
-        // pass p alone moves the occurrences of its words, so its partial
-        // on a partition is the delta of its range between the iteration's
-        // input and output: sorted distinct nonzero entries of the
-        // (hi − lo + 1)×K slice, so never more than the dense slice
-        for (p <- 0 until s) {
-          val (lo, hi) = LdaTrainer.shardBounds(v, s, p)
-          val topics = k
-          val size = (hi - lo + 1) * topics
-          swept.zipPartitions(docs) { (o, i) =>
-            Iterator.single(Gibbs.countDelta(o.next(), i.next(), lo, hi, topics))
-          }
-            .collect().foreach { d =>
-              val idx = d.map(Gibbs.deltaIndex)
-              assert(d.length <= size)
-              assert(idx.forall(i => i >= 0 && i < size))
-              assert(idx.indices.drop(1).forall(i => idx(i - 1) < idx(i)))
-              assert(d.forall(Gibbs.deltaChange(_) != 0))
-              moved += d.length
-            }
+        // each block of the returned generation carries the last pass's
+        // partial on its partition: sorted distinct nonzero entries of
+        // that pass's (hi − lo + 1)×K slice, so never more than the dense
+        // slice
+        val (lo, hi) = LdaTrainer.shardBounds(v, s, s - 1)
+        val size = (hi - lo + 1) * k
+        val sum = new Array[Long](size)
+        swept.collect().map(_.delta).foreach { d =>
+          val idx = d.map(Gibbs.deltaIndex)
+          assert(d.length <= size)
+          assert(idx.forall(i => i >= 0 && i < size))
+          assert(idx.indices.drop(1).forall(i => idx(i - 1) < idx(i)))
+          assert(d.forall(Gibbs.deltaChange(_) != 0))
+          d.foreach(e => sum(Gibbs.deltaIndex(e)) += Gibbs.deltaChange(e))
+          moved += d.length
         }
+        // at S = 1 the one pass's partials sum to the iteration's change
+        if (s == 1) assert(sum.sameElements(next.indices.map(i => next(i) - before(i))))
         gens.retire(docs)
         docs = swept
         model = next
@@ -86,16 +84,32 @@ class ShardedLdaSpec extends SparkSpec {
 
   test("a shard pass recomputed after its cache is dropped resamples identically") {
     // each shard pass keys its RNG on its own shard index, so lineage
-    // recompute (block loss, eviction) must replay the same draws
-    val docs = corpus(30).rdd.glom()
-    val (swept, _, _, _) = LdaTrainer.iteration(docs,
-      Gibbs.countModelRdd(docs, 0, v, k), v, iterCfg, numShards = 3, iter = 0,
-      new LdaTrainer.Generations)
-    def topics = swept.collect().flatten.sortBy(_.docId).map(_.topics.toSeq)
+    // recompute (block loss, eviction) must replay the same draws, and
+    // the recomputed blocks carry the same deltas, which the pass's
+    // allreduce sums to the same delta and likelihood
+    val docs = corpus(30).rdd.glom().map(Block.initial)
+    val model0 = Gibbs.countModelRdd(docs, 0, v, k)
+    val (swept, _, _, _) = LdaTrainer.iteration(docs, model0, v, iterCfg, numShards = 3,
+      iter = 0, new LdaTrainer.Generations)
+    val (lo, hi) = LdaTrainer.shardBounds(v, 3, 2) // the last pass's range
+    val rows = model0.slice(lo * k, hi * k) ++ model0.slice(v * k, (v + 1) * k)
+    val (numWords, topicCount) = (v, k)
+    val likelihood = Some((docs, (d: DocState, sum: Double) =>
+      Gibbs.logLikelihood(d, rows, lo, hi, numWords, 0.1, 0.01, topicCount, sum)))
+    def topics = swept.collect().flatMap(_.docs).sortBy(_.docId).map(_.topics.toSeq)
+    def deltas = swept.collect().map(_.delta.toSeq).toSeq
+    def pass = Gibbs.sumDeltas(swept, lo, hi, k, likelihood, Gibbs.DriverIngressBytes) match {
+      case (delta, ll) => (delta.toSeq, ll)
+    }
     val first = topics
+    val firstDeltas = deltas
+    val firstPass = pass
+    assert(firstDeltas.exists(_.nonEmpty) && firstPass._2 != 0.0)
     swept.unpersist(blocking = true)
     val changed = first.zip(topics).count { case (a, b) => a != b }
     assert(changed == 0, s"$changed of 30 docs resampled differently")
+    assert(deltas == firstDeltas, "recomputed blocks carry different deltas")
+    assert(pass == firstPass, "the recomputed pass sums to a different delta or likelihood")
   }
 
   test("sharded training is deterministic for fixed seed and shards") {

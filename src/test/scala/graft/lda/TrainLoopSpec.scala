@@ -78,7 +78,7 @@ class TrainLoopSpec extends SparkSpec {
       val cfg = LdaConfig(k, 0.1, 0.01, totalIterations = 3, computeLikelihood = ll, seed = 17L)
       def run(ingressMax: Long) = {
         val gens = new LdaTrainer.Generations
-        var docs = corpus(64, 8).rdd.glom().persist()
+        var docs = corpus(64, 8).rdd.glom().map(Block.initial).persist()
         var model = Gibbs.countModelRdd(docs, 0, v, k, ingressMax)
         val trace = Seq.newBuilder[(Seq[Long], Double)]
         trace += ((model.toSeq, 0.0))
@@ -90,7 +90,7 @@ class TrainLoopSpec extends SparkSpec {
           docs = swept
           model = next
         }
-        val topics = docs.collect().flatten.map(d => d.docId -> d.topics.toSeq).toSeq
+        val topics = docs.collect().flatMap(_.docs).map(d => d.docId -> d.topics.toSeq).toSeq
         gens.release(docs)
         (trace.result(), topics)
       }
@@ -119,15 +119,22 @@ class TrainLoopSpec extends SparkSpec {
     assert(full.averaged.sameElements(m3.indices.map(i => (m3(i) + m4(i)) / 2.0)))
   }
 
-  for (s <- Seq(1, 3)) {
-    test(s"S = $s: the final generation recomputes from the newest local checkpoint") {
-      // 12 iterations cross at least one checkpoint (every 10th pass) past
-      // the input copy; dropping the final generation's cache makes the
-      // recount recompute it through its lineage, which ends in that
-      // checkpointed generation
+  // 12 iterations cross at least one checkpoint (every 10th pass) past
+  // the input copy; dropping the final generation's cache makes the
+  // recount recompute it through its lineage, which ends in that
+  // checkpointed generation. At S = 3 with likelihood on, 4 iterations
+  // end just past a mid-iteration checkpoint (pass 10: iteration 3, shard
+  // 0), whose materialization drops the input copy's checkpoint; the
+  // passes after it fold the likelihood over the iteration-start
+  // generation, unpersisted once the iteration ends, so that fold must
+  // stay out of the generations' lineage.
+  for ((s, ll, iters) <- Seq((1, false, 12), (3, false, 12), (3, true, 4))) {
+    test(s"S = $s${if (ll) ", computeLikelihood = true" else ""}: " +
+        "the final generation recomputes from the newest local checkpoint") {
       val sc = spark.sparkContext
       val before = sc.getPersistentRDDs.keySet
-      val cfg = LdaConfig(k, 0.1, 0.01, totalIterations = 12, seed = 13L)
+      val cfg = LdaConfig(k, 0.1, 0.01, totalIterations = iters, computeLikelihood = ll,
+        seed = 13L)
       val r = LdaTrainer.train(corpus(30, 2), v, cfg, numShards = s)
       try {
         val cached = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }

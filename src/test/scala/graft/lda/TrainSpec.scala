@@ -223,7 +223,7 @@ class TrainSpec extends SparkSpec {
     val b = LdaTrainer.trainResumable(corpus, 10, cfg8, dirB, every = 2)
     // byte-equality of every output surface: final counts, burn-in
     // average (double-exact: same accumulation order), LL trace
-    // (double-exact: same treeReduce shape), and parallel timing arrays
+    // (double-exact: same partition-order slot sum), and parallel timing arrays
     assert(a.model.sameElements(b.model))
     assert(a.averaged.sameElements(b.averaged))
     assert(a.likelihoods.sameElements(b.likelihoods))
