@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -82,7 +83,7 @@ object Verify {
         val dt = (System.nanoTime() - t0) / 1e9
         timings.append(f"$name\t$dt%.2f%n")
         System.err.println(f"[verify] $name ok in $dt%.1fs")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         Files.writeString(errMarker,

@@ -25,20 +25,24 @@ object Flags {
     var f = Flags()
     var i = 0
     while (i < args.length) {
-      if (i + 1 == args.length) sys.error(s"flag ${args(i)} has no value")
+      val flag = args(i)
+      if (i + 1 == args.length) sys.error(s"flag $flag has no value")
       val v = args(i + 1)
-      args(i) match {
-        case "--num_topics" => f = f.copy(numTopics = v.toInt)
-        case "--alpha" => f = f.copy(alpha = v.toDouble)
-        case "--beta" => f = f.copy(beta = v.toDouble)
+      def num[A](parse: String => A): A =
+        try parse(v)
+        catch { case _: NumberFormatException => sys.error(s"flag $flag: bad number \"$v\"") }
+      flag match {
+        case "--num_topics" => f = f.copy(numTopics = num(_.toInt))
+        case "--alpha" => f = f.copy(alpha = num(_.toDouble))
+        case "--beta" => f = f.copy(beta = num(_.toDouble))
         case "--training_data_file" => f = f.copy(trainingDataFile = v)
         case "--model_file" => f = f.copy(modelFile = v)
         case "--inference_data_file" => f = f.copy(inferenceDataFile = v)
         case "--inference_result_file" => f = f.copy(inferenceResultFile = v)
-        case "--burn_in_iterations" => f = f.copy(burnInIterations = v.toInt)
-        case "--total_iterations" => f = f.copy(totalIterations = v.toInt)
+        case "--burn_in_iterations" => f = f.copy(burnInIterations = num(_.toInt))
+        case "--total_iterations" => f = f.copy(totalIterations = num(_.toInt))
         case "--compute_likelihood" => f = f.copy(computeLikelihood = v == "true")
-        case "--seed" => f = f.copy(seed = v.toLong)
+        case "--seed" => f = f.copy(seed = num(_.toLong))
         case "--output_mode" => f = f.copy(outputMode = v)
         case other => sys.error(s"unknown flag: $other")
       }

@@ -2,18 +2,19 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev-only published-scale LDA benchmark pair (test scope, not shipped).
+/** Dev-only published-scale LDA tools (test scope, not shipped).
   *
   * The reference's ONLY documented workload (README.md:102-133) is the
   * UCI NYTimes bag-of-words: 300,000 docs, 102,660-word vocabulary,
   * ~100,000,000 tokens, trained with K=10, α=0.1, β=0.01. That dataset
-  * isn't in this container (zero egress), so [[NytGen]] synthesizes a
-  * deterministic corpus with the SAME shape — doc count, vocab size,
-  * token total, Zipf-Mandelbrot frequency profile — in the reference's
-  * own text format (`word cnt word cnt …`, lda.cc:56-84), and
-  * [[NytTrain]] times our trainer on it with per-iteration resolution.
-  * The identical file feeds the patched reference `lda` binary, turning
-  * BASELINE.md's "within 2×" bar into a measured single-node ratio.
+  * isn't in the repository, so [[NytGen]] synthesizes a deterministic
+  * corpus with the SAME shape — doc count, vocab size, token total,
+  * Zipf-Mandelbrot frequency profile — in the reference's own text
+  * format (`word cnt word cnt …`, lda.cc:56-84), and [[NytKsweep]] times
+  * our trainer on it at a given K and word-shard count, with
+  * per-iteration resolution. Both run on `local[*]` with one shuffle
+  * partition per available processor, so they size themselves to the
+  * host; the heap is the forked JVM's -Xmx (SPARK_DRIVER_MEM).
   */
 object NytGen {
   /** p(rank r) ∝ 1/(r + shift): Zipf-Mandelbrot, the empirical shape of
@@ -39,14 +40,17 @@ object NytGen {
     val lenSpan = 201
     val seed = 20260815L
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = SparkSession.builder().master("local[*]")
+      .config("spark.sql.shuffle.partitions",
+        Runtime.getRuntime.availableProcessors.toLong)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
     val bcCum = spark.sparkContext.broadcast(cumulative(vocab, 27.0))
+    // 32 slices whatever the host: the part files (and so the corpus
+    // bytes) stay the same on every host; each doc's RNG is keyed by its id
     spark.range(0L, nDocs, 1L, 32).as[Long].mapPartitions { it =>
       val cum = bcCum.value
       it.map { docId =>
@@ -82,116 +86,6 @@ object NytGen {
   }
 }
 
-/** Times [[graft.apps.InferApp]] end-to-end (read model + corpus,
-  * fold-in inference, write the positional result file) on the same
-  * corpus + model files the reference `infer` binary consumes — the B2
-  * head-to-head. Run:
-  * sbt "Test/runMain graft.NytInfer <corpus> <model> <out>" */
-object NytInfer {
-  def main(args: Array[String]): Unit = {
-    val corpus = args.headOption.getOrElse("/tmp/nyt/nytimes.txt")
-    val model = args.lift(1).getOrElse("/tmp/nyt/ref_model.txt")
-    val out = args.lift(2).getOrElse("/tmp/nyt/graft_infer.txt")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val f = graft.apps.Flags.parse(Array(
-      "--alpha", "0.1", "--beta", "0.01",
-      "--inference_data_file", corpus,
-      "--inference_result_file", out,
-      "--model_file", model,
-      "--total_iterations", "15", "--burn_in_iterations", "10"))
-    val t0 = System.nanoTime()
-    graft.apps.InferApp.run(spark, f)
-    val wall = (System.nanoTime() - t0) / 1e9
-    println(f"""{"metric":"nyt_b2_infer","wall_sec":$wall%.1f}""")
-    spark.stop()
-  }
-}
-
-/** Times [[graft.lda.LdaTrainer]] on a plda-format corpus at the
-  * reference's published config (K=10, α=0.1, β=0.01) and prints one
-  * JSON line: per-iteration wall, broadcast time, steady-state
-  * tokens·iterations/s (iterations 5+, BASELINE.md B1 definition).
-  * Run: sbt "Test/runMain graft.NytTrain /tmp/nyt/corpus 30 /tmp/nyt/b1.json"
-  */
-object NytTrain {
-  def main(args: Array[String]): Unit = {
-    val path = args.headOption.getOrElse("/tmp/nyt/corpus")
-    val iters = args.lift(1).map(_.toInt).getOrElse(30)
-    val outJson = args.lift(2).getOrElse("/tmp/nyt/b1.json")
-    val k = args.lift(3).map(_.toInt).getOrElse(10)
-    val withLl = args.lift(4).contains("ll")
-
-    // heap comes from the forked JVM's -Xmx (SPARK_DRIVER_MEM) — a
-    // spark.driver.memory conf here would be ignored in local mode
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import org.apache.spark.sql.functions._
-
-    val t0 = System.nanoTime()
-    val bowTok = graft.lda.Corpus.readPldaText(spark, path)
-    val vocab = graft.lda.Corpus.sortedVocab(bowTok.select("tok")).cache()
-    val numWords = vocab.count().toInt
-    val bow = bowTok.join(broadcast(vocab), "tok")
-      .select("doc_id", "word_id", "c")
-    val corpus = graft.lda.Corpus.fromBow(bow, k, 42L)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (nDocs, nToks) = corpus.rdd
-      .map(d => (1L, d.topics.length.toLong))
-      .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-    val tLoad = (System.nanoTime() - t0) / 1e9
-    println(s"LOADED docs=$nDocs tokens=$nToks vocab=$numWords in ${tLoad}s")
-
-    val cfg = graft.lda.LdaConfig(numTopics = k, alpha = 0.1, beta = 0.01,
-      totalIterations = iters, burnInIterations = math.max(0, iters - 10),
-      computeLikelihood = withLl, seed = 42L)
-    val tTrain0 = System.nanoTime()
-    val r = graft.lda.LdaTrainer.train(corpus, numWords, cfg)
-    val wall = (System.nanoTime() - tTrain0) / 1e9
-    r.release()
-
-    val iterSec = r.iterMillis.map(_ / 1000.0)
-    val bcastSec = r.bcastMillis.map(_ / 1000.0)
-    // steady-state window = post-JIT iterations; with <=5 iterations the
-    // drop would leave an empty window (0/0 = NaN → invalid JSON), so
-    // fall back to the full trace
-    val steady = if (iterSec.length > 5) iterSec.drop(5) else iterSec
-    val steadyMean = steady.sum / steady.length
-    val rate = nToks.toDouble / steadyMean // tokens·iters/s at steady state
-    // optional arg 6: write the burn-in-averaged model in the reference's
-    // own text format (outside the timed window) — lets the reference
-    // `infer` binary consume a graft-trained model, the interop reverse
-    // of NytInfer reading a reference-trained one
-    args.lift(5).foreach { modelOut =>
-      val words = vocab.orderBy("word_id")
-        .select("tok").collect().map(_.getString(0))
-      graft.lda.ModelIO.writeAveraged(r.averaged, k, words, modelOut)
-      println(s"MODEL written to $modelOut")
-    }
-    val json =
-      s"""{"metric":"nyt_b1_train","docs":$nDocs,"tokens":$nToks,""" +
-      s""""vocab":$numWords,"k":$k,"iters":$iters,"load_sec":${f"$tLoad%.1f"},""" +
-      s""""train_wall_sec":${f"$wall%.1f"},""" +
-      s""""iter_sec":[${iterSec.map(s => f"$s%.2f").mkString(",")}],""" +
-      s""""bcast_sec":[${bcastSec.map(s => f"$s%.3f").mkString(",")}],""" +
-      s""""steady_iter_sec":${f"$steadyMean%.2f"},""" +
-      s""""tokens_iters_per_sec":${f"$rate%.3e"}""" +
-      (if (withLl)
-        s""","likelihoods":[${r.likelihoods.map(v => f"$v%.6e").mkString(",")}]"""
-       else "") + "}"
-    println(json)
-    val w = new java.io.PrintWriter(outJson)
-    try w.println(json) finally w.close()
-    spark.stop()
-  }
-}
-
 /** One-shard vs word-sharded crossover measurement on the MODEL-SIZE axis
   * (BASELINE.md's scaling law is the memory formula V×K×8 bytes,
   * reference README.md:125 / model.cc:54): trains the SAME corpus at a
@@ -214,8 +108,9 @@ object NytKsweep {
     val mode = args.lift(3).getOrElse("flat")
     val outJson = args.lift(4).getOrElse(s"/tmp/nyt/ksweep_${mode}_k$k.json")
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = SparkSession.builder().master("local[*]")
+      .config("spark.sql.shuffle.partitions",
+        Runtime.getRuntime.availableProcessors.toLong)
       .config("spark.ui.enabled", "false")
       // default 1g on purpose: the since-deleted trainer whose allreduce
       // shipped full-model partials hit the stock limit at large K

@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   * reads the same generated parquet.
   *
   * Replication is REPLICA-DISJOINT by construction, so per-replica
-  * structure equals the base corpus and totals grow linearly — the
-  * ScalingMain lesson (verbatim copies make all m replicas mutual
-  * near-dups: an m² pair blowup that measures the data, not the engine):
+  * structure equals the base corpus and totals grow linearly (verbatim
+  * copies make all m replicas mutual near-dups: an m² pair blowup that
+  * measures the data, not the engine):
   *  - every int64 id key (custkey/orderkey/partkey/suppkey/user_id/
   *    event_id/doc_id/vec_id) shifts by the SAME rep·10⁷ constant, so
   *    within-replica joins are preserved and replicas never collide;

@@ -72,6 +72,11 @@ class AppsSpec extends SparkSpec {
     assert(Flags.parse(Array("--num_topics", "2", "--seed", "7")).seed == 7L)
     val e = intercept[RuntimeException](Flags.parse(Array("--num_topics", "2", "--seed")))
     assert(e.getMessage.contains("--seed"), e.getMessage)
+    // a numeric flag whose value does not parse fails naming flag and value
+    for ((flag, bad) <- Seq("--num_topics" -> "x", "--alpha" -> "y", "--seed" -> "z")) {
+      val e = intercept[RuntimeException](Flags.parse(Array(flag, bad)))
+      assert(e.getMessage.contains(flag) && e.getMessage.contains(s"\"$bad\""), e.getMessage)
+    }
   }
 
   test("InferApp emits one line per kept input line, zeros for all-OOV docs") {
