@@ -9,7 +9,8 @@ import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     // Shuffle/spill codec knob for isolated A/B runs (BENCH_ab protocol).
     // The bench default stays Spark's lz4 (round-over-round continuity:
     // every BENCH_r* ran lz4): the r12 interleaved A/B measured zstd at
@@ -78,7 +79,7 @@ object Bench {
     // Host-contention self-adjudication (BENCH.md's "compare warm runs
     // only" rule, machine-readable): record the 1-min load average before
     // and after the battery so a contended run carries its own evidence —
-    // on the 32-cpu box, load far above the battery's own footprint means
+    // load far above the battery's own footprint on the host means
     // the total is noise-inflated and per-query A/B re-runs decide.
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadStart = osBean.getSystemLoadAverage

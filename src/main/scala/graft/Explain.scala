@@ -6,7 +6,8 @@ import java.nio.file.{Files, Paths}
   * files — the optimization-round evidence artifact (plans/<round>/).
   *
   * Usage: runMain graft.Explain <outDir> <entry>[,<entry>...] [suffix]
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS
+  * (default: the host's processor count).
   * Writes <outDir>/<entry>_<suffix>.txt (suffix default "plan").
   */
 object Explain {
@@ -15,7 +16,8 @@ object Explain {
     val names = args(1).split(",").toSeq
     val suffix = if (args.length > 2) args(2) else "plan"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

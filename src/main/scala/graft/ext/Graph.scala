@@ -1,7 +1,11 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.graftbridge.CheckpointBridge
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Graph operators over pair tables — the natural continuation of
   * [[Dedup.dupClusters]]' connected components: once a candidate-pair
@@ -381,8 +385,9 @@ object Graph {
   /** BFS distance layers from a source node over an undirected pair
     * graph — "how far does influence/contamination spread" in hops.
     * Pregel-lite frontier expansion: each round joins the frontier to
-    * the adjacency list and anti-joins the known set (one shuffle per
-    * round, localCheckpoint-truncated); pure INTEGER set computation.
+    * the adjacency list and anti-joins the known set (3–4 jobs per
+    * round under AQE, localCheckpoint-truncated); pure INTEGER set
+    * computation.
     * Rounds stop when the frontier empties; if it hasn't by
     * `maxDepth` the operator THROWS (the oracle unrolls exactly
     * `maxDepth` rounds — same contract as [[kCoreSummary]]). The
@@ -420,8 +425,11 @@ object Graph {
     while (frontierN > 0 && depth < maxDepth) {
       depth += 1
       // lazy checkpoints: the count() below materializes `next` (and the
-      // previous round's lazy `known` union riding inside its anti-join)
-      // in the SAME job — one job per round instead of three eager ones
+      // previous round's lazy `known` union riding inside its anti-join).
+      // A round is still 3–4 jobs, not one: AQE runs the round's shuffle
+      // stages as their own jobs while the lazy checkpoint is built (1
+      // in round 1, whose `known` is broadcast; 2 after), and the count
+      // is 2 more (measured on 5-node paths and the sf0.001 graph)
       val next = adjC.join(frontier.select(col("v")), Seq("v"), "left_semi")
         .select(col("n").as("v")).distinct()
         .join(known, Seq("v"), "left_anti")
@@ -454,8 +462,9 @@ object Graph {
     * no floats anywhere, so the result is trivially engine-exact.
     *
     * Scale shape: each round is one degree rollup + two semi-joins,
-    * all shuffle-bounded; `localCheckpoint` truncates the per-round
-    * lineage. Rounds to fixpoint are ≤ the graph's degeneracy-peeling
+    * all shuffle-bounded (4 jobs a round under AQE, see the loop);
+    * `localCheckpoint` truncates the per-round lineage. Rounds to
+    * fixpoint are ≤ the graph's degeneracy-peeling
     * depth — small for real graphs; `maxRounds` caps the loop and the
     * operator THROWS if the fixpoint isn't reached (the oracle unrolls
     * exactly `maxRounds` rounds, so a non-converged result would be
@@ -495,8 +504,11 @@ object Graph {
           // round state sized by its own row count (prev = the edge
           // count entering the round bounds the survivors)
           .coalesce(stateParts(spark, prev))
-          // lazy: the count() materializes the checkpoint in the same
-          // job — one job per peeling round instead of two
+          // lazy: the count() materializes the checkpoint rows. A round
+          // is still 4 jobs: AQE runs the degree rollup's and the
+          // semi-joins' shuffle stages as 2 jobs while the checkpoint is
+          // built, and the count is 2 more (measured on 5-node paths, a
+          // triangle with a tail, and the sf0.001 graph)
           .localCheckpoint(eager = false)
         n = edges.count(); r += 1
       }
@@ -579,65 +591,37 @@ object Graph {
   /** Closeness + harmonic centrality per node by ALL-PAIRS BFS — who
     * sits nearest the middle of the co-activity graph (the influence /
     * hub readout next to [[pageRank]]'s flow-based one). Distances are
-    * exact integers (unweighted layered BFS); closeness =
-    * n_reached/sum_dist is one division of exact longs, harmonic folds
-    * the ≤maxDepth-term distance histogram in distance order —
-    * disconnected components cost 0 there instead of ∞. Eccentricity
-    * rides along (its max over nodes = the component diameter).
+    * exact integers (unweighted layered BFS); eccentricity rides along
+    * (its max over nodes = the component diameter).
     *
-    * Scale shape: BITSET multi-source BFS — 64 sources per long word,
-    * so a round is ONE adjacency join over E rows with W-word OR-folds
-    * (≈ diameter·E·V/64 word-ORs total) instead of a (src, v) frontier
-    * join's Σ frontier·deg ≈ V·2E tuple expansion (measured 22.8 s →
-    * ~4 s on the 1.5k-node/39k-edge fixture graph); each (src, v) pair
-    * explodes to a row exactly once, the round its bit turns on. The
-    * V·V/8-byte bitset state is the V²-bounded part — guarded at 16k
-    * nodes; an EVAL op for bounded entity graphs (users, domains,
-    * sources), not a billion-node pipeline stage. THROWS if a frontier
-    * outlives `maxDepth` (the oracle unrolls exactly that many
+    * Every node is a source of [[bitsetBfs]], and undirected distance is
+    * symmetric: the sources whose bits first reach v at depth d are
+    * exactly the nodes at distance d FROM v. So each node's own fold is
+    * its distance histogram — n_reached = Σ p_d, sum_dist = Σ d·p_d,
+    * ecc = the last d with p_d > 0, harmonic = Σ p_d/d added in depth
+    * order (disconnected components cost 0 there instead of ∞; a depth
+    * with p_d = 0 would add an exact +0.0, so the sum is bit-identical
+    * to the oracle's distance-ordered fold) — and no (source, node) row
+    * is ever produced. closeness = n_reached/sum_dist is one division
+    * of exact longs. The V·V/64-word bitset state is the V²-bounded
+    * part — guarded at 16k nodes; an EVAL op for bounded entity graphs
+    * (users, domains, sources), not a billion-node pipeline stage;
+    * [[approxCloseness]] is the unbounded-V variant. THROWS if a
+    * frontier outlives `maxDepth` (the oracle unrolls exactly that many
     * rounds). */
   def closenessCentrality(pairs: DataFrame, maxDepth: Int = 8): DataFrame = {
     val spark = pairs.sparkSession
-    import spark.implicits._
-    val e = pairs.select(
-        least(col("doc_a"), col("doc_b")).cast("long").as("a"),
-        greatest(col("doc_a"), col("doc_b")).cast("long").as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val adj = e.select(col("a").as("v"), col("b").as("n"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("n")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // BITSET multi-source BFS (see [[bitsetBfs]]). The V·W bitset state
-    // is the V²-bounded part — guarded below; [[approxCloseness]] is
-    // the unbounded-V variant.
-    val ids = adj.select("v").distinct().orderBy("v").as[Long].collect()
-    val V = ids.length
-    require(V <= 16384, s"bitset all-pairs BFS bounded at 16384 nodes, got $V")
-    val idxDf = spark.createDataset(ids.toSeq.zipWithIndex)
-      .toDF("src_id", "si")
-    val known = bitsetBfs(adj, idxDf.select(col("src_id").as("v")), idxDf,
-        V, maxDepth)
-      .join(broadcast(idxDf), "si")
-      .select(col("src_id").as("src"), col("v"), col("dist"))
-    adj.unpersist(blocking = false)
-    // ONE pass over the V² emitted rows: collapse to the (src, dist)
-    // histogram first (V·diameter rows), then fold every output measure
-    // off it — n_reached = Σcnt − 1 (the self row), sum_dist = Σ d·cnt,
-    // harmonic folds the sorted histogram in distance order exactly as
-    // before (the d = 0 self entry contributes +0.0 first, which is
-    // float-exact), so values are bit-identical to the former
-    // two-aggregation form at half the scans
-    val byDist = known.groupBy("src", "dist").agg(count(lit(1)).as("cnt"))
-    byDist.groupBy("src")
-      .agg((sum("cnt") - 1).as("n_reached"), max("dist").as("ecc"),
-        sum(col("dist") * col("cnt")).cast("long").as("sum_dist"),
-        aggregate(sort_array(collect_list(struct(col("dist").as("d"),
-            col("cnt").as("cnt")))), lit(0.0),
-            (a, x) => a + when(x.getField("d") > 0,
-              x.getField("cnt").cast("double") / x.getField("d"))
-              .otherwise(lit(0.0)))
-          .as("harmonic"))
-      .select(col("src").as("user_id"), col("n_reached"), col("ecc"),
-        col("sum_dist"),
+    val arcs = undirectedArcs(pairs)
+    val ids = arcs.keys.distinct().collect()
+    require(ids.length <= 16384,
+      s"bitset all-pairs BFS bounded at 16384 nodes, got ${ids.length}")
+    // an explicit schema pins each column's nullability, which is part
+    // of the written parquet bytes
+    spark.createDataFrame(bitsetBfs(spark, arcs, ids.length, ids, maxDepth)
+        .map { case (v, s) => Row(v, s.reached, s.ecc, s.sumDist, s.harmonic) },
+        StructType.fromDDL("user_id BIGINT NOT NULL, n_reached BIGINT, ecc INT, " +
+          "sum_dist BIGINT, harmonic DOUBLE"))
+      .select(col("user_id"), col("n_reached"), col("ecc"), col("sum_dist"),
         when(col("sum_dist") > 0,
           round(col("n_reached").cast("double")
             / col("sum_dist").cast("double"), 4)).as("closeness"),
@@ -645,95 +629,86 @@ object Graph {
       .orderBy("user_id")
   }
 
-  /** BITSET multi-source BFS core shared by [[closenessCentrality]]
-    * (sources = all nodes) and [[approxCloseness]] (sources = k sampled
-    * pivots): 64 sources per long word, so one round costs ONE adjacency
-    * join over E rows with W-word OR-folds instead of a (src, v)
-    * frontier join (which expands Σ_src frontier·deg ≈ V·2E tuples over
-    * the run — ~100M on a 1.5k-node/39k-edge graph vs ~6·E·W word-ORs
-    * here; measured 22.8 s → ~4 s). Each (source, v) pair is exploded
-    * to a row exactly ONCE, the round its bit first turns on. State is
-    * V·⌈S/64⌉ longs — LINEAR in V for a fixed source count, quadratic
-    * only when every node is a source (the caller's guard). Eager:
-    * rounds run as jobs, results ride localCheckpoint blocks — exactly
-    * ONE checkpoint + one count job per round (gather, new-bit mask,
-    * and seen-merge fused into a single left join over the V-row state;
-    * the r11 form checkpointed frontier, emitted rows, and seen
-    * separately — 4 eager jobs/round; BENCH.md round 12 has the
-    * before/after). Emitted (si, v, dist) rows stay LAZY projections of the
-    * per-round checkpointed state: they are exploded once, at the
-    * single downstream consumption, instead of being materialized per
-    * depth. r15: the per-round checkpoint is LAZY — the freshN count
-    * materializes it, so a round is ONE job, not checkpoint + count.
-    * THROWS if a frontier outlives `maxDepth` (oracles unroll
-    * exactly that many rounds). Returns (si, v, dist). */
-  private def bitsetBfs(adj: DataFrame, nodes: DataFrame, idxDf: DataFrame,
-      nSources: Int, maxDepth: Int): DataFrame = {
-    val W = (nSources + 63) / 64
-    // every node carries a bit vector: its own source bit if it IS a
-    // source, zeros otherwise (non-source nodes must still be in `seen`
-    // or the left join below would drop them from expansion)
-    val selfBits = nodes
-      .join(idxDf.withColumnRenamed("src_id", "v"), Seq("v"), "left")
-      .select(col("v"),
-        expr(s"""transform(sequence(0, ${W - 1}),
-                 w -> CASE WHEN si IS NOT NULL AND si div 64 = w
-                      THEN shiftleft(CAST(1 AS BIGINT), CAST(si % 64 AS INT))
-                      ELSE CAST(0 AS BIGINT) END)""").as("bits"))
-      .localCheckpoint()
-    def orFold(c: Column) =
-      aggregate(c, array((0 until W).map(_ => lit(0L)): _*),
-        (acc, x) => zip_with(acc, x, _ bitwiseOR _))
-    // every (source, v) pair becomes a row exactly ONCE — the round its
-    // bit first turns on; NO checkpoint here (see scaladoc)
-    def emitRows(df: DataFrame, depth: Int): DataFrame = df
-      .select(col("v"), posexplode(col("bits")).as(Seq("w", "word")))
-      .where(col("word") =!= 0L)
-      .select(col("v"), col("w"),
-        explode(expr("filter(sequence(0, 63), b -> ((word >> b) & 1) = 1)"))
-          .as("b"))
-      .select((col("w") * 64 + col("b")).cast("int").as("si"), col("v"),
-        lit(depth).as("dist"))
-    val zeros = expr(s"array_repeat(CAST(0 AS BIGINT), $W)")
-    var seen = selfBits
-    // only last round's NEW bits expand next round; zero-bit rows have
-    // nothing to propagate
-    var fresh = selfBits.where(exists(col("bits"), w => w =!= 0L))
-    val emitted = scala.collection.mutable.ArrayBuffer[DataFrame](
-      emitRows(fresh, 0))
+  /** `pairs` as arcs in both directions; self-loops and null endpoints
+    * dropped (duplicates stay — [[bitsetBfs]] dedupes each node's
+    * neighbours). */
+  private def undirectedArcs(pairs: DataFrame): RDD[(Long, Long)] = {
+    import pairs.sparkSession.implicits._
+    pairs.select(col("doc_a").cast("long").as("a"), col("doc_b").cast("long").as("b"))
+      .where(col("a") =!= col("b"))
+      .as[(Long, Long)].rdd
+      .flatMap(e => Iterator(e, e.swap))
+  }
+
+  /** One node of [[bitsetBfs]]: its deduped neighbours, the source bits
+    * it has seen and those first seen in the last round (empty when
+    * none), and its fold over the p_d sources first reaching it at each
+    * depth d: reached = Σ p_d, sumDist = Σ d·p_d, ecc = the last d with
+    * p_d > 0, harmonic = Σ p_d/d in depth order. */
+  private final case class BfsNode(nbrs: Array[Long], seen: Array[Long],
+      fresh: Array[Long], reached: Long, sumDist: Long, ecc: Int,
+      harmonic: Double)
+
+  /** BITSET multi-source BFS as a Pregel superstep loop (Malewicz et
+    * al., SIGMOD 2010) shared by [[closenessCentrality]] (sources = all
+    * nodes) and [[approxCloseness]] (sources = k sampled pivots): 64
+    * sources per long word, W = ⌈S/64⌉ words per node. The adjacency is
+    * ONE `groupByKey` of `arcs` on a [[stateParts]]-sized
+    * HashPartitioner, and the per-node state ([[BfsNode]]) lives in the
+    * same partitions. A round: every node with fresh bits sends them to
+    * its neighbours (`reduceByKey` ORs them on the state's partitioner),
+    * a narrow `leftOuterJoin` keeps the bits each node had not seen, and
+    * with p = their popcount at depth d the node adds p to its fold. The
+    * new state is `localCheckpoint`ed and materialized by the count of
+    * its fresh nodes — exactly ONE job per round — and the previous
+    * state's blocks are dropped. Cost is ≈ diameter·2E W-word ORs; state
+    * is V·W longs — LINEAR in V for a fixed source count, quadratic only
+    * when every node is a source (the caller's guard). THROWS if a
+    * frontier outlives `maxDepth` (oracles unroll exactly that many
+    * rounds). Returns the final state, one row per node of `arcs`,
+    * `localCheckpoint`ed (its blocks die with the caller's reference). */
+  private def bitsetBfs(spark: org.apache.spark.sql.SparkSession,
+      arcs: RDD[(Long, Long)], nodes: Long, sources: Array[Long],
+      maxDepth: Int): RDD[(Long, BfsNode)] = {
+    val W = (sources.length + 63) / 64
+    val srcIdx = sources.sorted
+    val none = Array.emptyLongArray
+    val part = new HashPartitioner(stateParts(spark, nodes))
+    // a source's bit is its index in `srcIdx`; every node starts with
+    // its own bit (zeros if it is no source) seen and fresh
+    var state = arcs.groupByKey(part).mapPartitions(_.map { case (v, ns) =>
+      val bits = new Array[Long](W)
+      val si = java.util.Arrays.binarySearch(srcIdx, v)
+      if (si >= 0) bits(si / 64) = 1L << (si % 64)
+      v -> BfsNode(ns.toArray.distinct, bits, if (si >= 0) bits else none,
+        0L, 0L, 0, 0.0)
+    }, preservesPartitioning = true)
     var depth = 0
     var freshN = 1L
-    // the frontier join stays a plain equi-join: AQE (on in graft
-    // sessions) picks broadcast-vs-shuffle per round from the measured
-    // frontier size — an explicit per-round broadcast() hint was tried
-    // and measured SLOWER here (driver collect + rebuild every depth)
     while (freshN > 0 && depth < maxDepth) {
       depth += 1
-      val gathered = adj.join(fresh.withColumnRenamed("v", "n"), "n")
-        .groupBy("v").agg(orFold(collect_list(col("bits"))).as("obits"))
-      // one state row per node: nbits = gathered AND NOT seen (new this
-      // round), bits = seen OR nbits (the merged seen) — non-gathered
-      // nodes keep their bits with an all-zero nbits via the left join
-      val upd = seen.join(gathered, Seq("v"), "left")
-        .select(col("v"), col("bits"),
-          zip_with(coalesce(col("obits"), zeros), col("bits"),
-            (o, s) => o bitwiseAND bitwise_not(s)).as("nbits"))
-        .select(col("v"),
-          zip_with(col("bits"), col("nbits"), _ bitwiseOR _).as("bits"),
-          col("nbits"))
-        // lazy: freshN's count scans every partition of `upd` (the
-        // filter can't prune), so it materializes the checkpoint in the
-        // same job — one job per round instead of two
-        .localCheckpoint(eager = false)
-      fresh = upd.where(exists(col("nbits"), w => w =!= 0L))
-        .select(col("v"), col("nbits").as("bits"))
-      freshN = fresh.count()
-      if (freshN > 0) emitted += emitRows(fresh, depth)
-      seen = upd.select(col("v"), col("bits"))
+      val d = depth
+      val msgs = state
+        .flatMap { case (_, s) =>
+          if (s.fresh.isEmpty) Iterator.empty else s.nbrs.iterator.map(_ -> s.fresh) }
+        .reduceByKey(part, (a, b) => Array.tabulate(W)(i => a(i) | b(i)))
+      val next = state.leftOuterJoin(msgs, part).mapValues {
+        case (s, Some(m)) =>
+          val nb = Array.tabulate(W)(i => m(i) & ~s.seen(i))
+          val p = nb.map(java.lang.Long.bitCount).sum
+          if (p == 0) s.copy(fresh = none)
+          else BfsNode(s.nbrs, Array.tabulate(W)(i => s.seen(i) | nb(i)), nb,
+            s.reached + p, s.sumDist + p.toLong * d, d, s.harmonic + p.toDouble / d)
+        case (s, None) => if (s.fresh.isEmpty) s else s.copy(fresh = none)
+      }.localCheckpoint()
+      freshN = next.filter(_._2.fresh.nonEmpty).count()
+      if (state.isCheckpointed) CheckpointBridge.drop(state)
+      state = next
     }
+    if (freshN > 0) CheckpointBridge.drop(state)
     require(freshN == 0,
       s"bitset BFS frontier still expanding at maxDepth=$maxDepth")
-    emitted.reduce(_ unionAll _)
+    state
   }
 
   /** Sampled-pivot closeness (Eppstein–Wang, "Fast approximation of
@@ -747,7 +722,9 @@ object Graph {
     * over REACHED pivots only; error is O(1/√k)·diameter w.h.p.
     * (their Hoeffding bound). On a connected graph E[ĉ] ≈
     * closeness·(n−1)/n — rankings agree with the exact op
-    * (spec: GraphSpec).
+    * (spec: GraphSpec). The pivots whose bits first reach v at depth d
+    * of [[bitsetBfs]] are exactly those at distance d from v, so r(v)
+    * and S(v) are v's own fold: its reached count and distance sum.
     *
     * Determinism (cross-engine): pivots are the k smallest
     * md5("ccap" ‖ v) — a seedless uniform hash both engines compute
@@ -760,39 +737,26 @@ object Graph {
       s"1 <= numPivots <= 4096 (state is numPivots*V/64 longs), got $numPivots")
     val spark = pairs.sparkSession
     import spark.implicits._
-    val e = pairs.select(
-        least(col("doc_a"), col("doc_b")).cast("long").as("a"),
-        greatest(col("doc_a"), col("doc_b")).cast("long").as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val adj = e.select(col("a").as("v"), col("b").as("n"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("n")))
+    val arcs = undirectedArcs(pairs)
+    val nodes = arcs.keys.distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = adj.select("v").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // try/finally: bitsetBfs can throw its maxDepth require and the pivot
-    // collect can fail — without the finally both caches would leak for
-    // the session lifetime (same leak class as the r11 adamicAdar fix)
-    try {
-      val n = nodes.count() // one scalar job; the cache feeds selfBits next
-      // k smallest hash values via TakeOrdered (never a global sort), then
-      // a k-bounded collect to index the pivots 0..k-1
-      val pivots = nodes
+    // the finally drops the node cache when the count or the pivot
+    // collect fails, or it would stay cached for the session's lifetime
+    val (n, pivots) = try {
+      // k smallest hash values via TakeOrdered (never a global sort),
+      // a k-bounded collect
+      (nodes.count(), nodes.toDF("v")
         .select(col("v"), md5(concat(lit("ccap"), col("v").cast("string"))).as("h"))
         .orderBy("h", "v").limit(numPivots)
-        .collect().map(_.getLong(0))
-      val idxDf = spark.createDataset(pivots.toSeq.zipWithIndex)
-        .toDF("src_id", "si")
-      val perV = bitsetBfs(adj, nodes, idxDf, pivots.length, maxDepth)
-        .where(col("dist") > 0) // self rows carry no distance information
-        .groupBy("v").agg(count(lit(1)).as("k_reached"),
-          sum("dist").cast("long").as("sum_dist"))
-      perV.select(col("v").as("user_id"), col("k_reached"), col("sum_dist"),
-          round((col("k_reached") * lit(n - 1)).cast("double")
-            / (col("sum_dist") * lit(n)).cast("double"), 4).as("closeness_hat"))
-        .orderBy("user_id")
-    } finally {
-      adj.unpersist(blocking = false)
-      nodes.unpersist(blocking = false)
-    }
+        .collect().map(_.getLong(0)))
+    } finally nodes.unpersist(blocking = false)
+    spark.createDataFrame(bitsetBfs(spark, arcs, n, pivots, maxDepth)
+        .flatMap { case (v, s) =>
+          if (s.reached > 0) Iterator(Row(v, s.reached, s.sumDist)) else Iterator.empty },
+        StructType.fromDDL("user_id BIGINT, k_reached BIGINT NOT NULL, sum_dist BIGINT"))
+      .select(col("user_id"), col("k_reached"), col("sum_dist"),
+        round((col("k_reached") * lit(n - 1)).cast("double")
+          / (col("sum_dist") * lit(n)).cast("double"), 4).as("closeness_hat"))
+      .orderBy("user_id")
   }
 }

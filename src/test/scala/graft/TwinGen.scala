@@ -44,8 +44,9 @@ object TwinGen {
     val m = args.lift(2).map(_.toInt).getOrElse(10)
     val only = args.lift(3).map(_.split(",").toSet)
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = Runtime.getRuntime.availableProcessors
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
+import scala.jdk.CollectionConverters._
 
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -299,6 +300,122 @@ class GraphSpec extends SparkSpec {
     val topE = exact.toSeq.sortBy { case (id, v) => (-v, id) }.take(10).map(_._1).toSet
     val topA = approx.toSeq.sortBy { case (id, v) => (-v, id) }.take(10).map(_._1).toSet
     assert((topE & topA).size >= 3, s"top-10 overlap ${(topE & topA).size}")
+  }
+
+  /** 152 nodes (W = 3 bitset words): a 140-node chain with skip links,
+    * a disconnected 10-node path, an isolated pair; plus a self-loop, a
+    * reversed duplicate, and a node seen only in a self-loop (dropped). */
+  private val multiWordEdges: Seq[(Long, Long)] =
+    (0 until 139).map(i => (i.toLong, i + 1L)) ++
+      (0 until 140).map(i => (i.toLong, ((i * 7 + 3) % 140).toLong))
+        .filter { case (a, b) => a != b } ++
+      (200 until 209).map(i => (i.toLong, i + 1L)) ++
+      Seq((300L, 301L), (5L, 5L), (1L, 0L), (400L, 400L))
+
+  /** Plain-Scala BFS from every node: node -> (distance -> node count),
+    * the source itself at distance 0. */
+  private def bfsHistograms(edges: Seq[(Long, Long)]): Map[Long, Map[Int, Long]] = {
+    val nbrs = edges.filter { case (a, b) => a != b }
+      .flatMap(e => Seq(e, e.swap)).groupBy(_._1)
+      .map { case (v, es) => v -> es.map(_._2).distinct }
+    nbrs.keys.map { s =>
+      val dist = scala.collection.mutable.Map(s -> 0)
+      var frontier = Seq(s)
+      var d = 0
+      while (frontier.nonEmpty) {
+        d += 1
+        frontier = frontier.flatMap(nbrs).distinct.filterNot(dist.contains)
+        frontier.foreach(dist(_) = d)
+      }
+      s -> dist.values.groupBy(identity).map { case (k, vs) => k -> vs.size.toLong }
+    }.toMap
+  }
+
+  private def round4(x: Double): Double =
+    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  test("closeness and approxCloseness match a plain BFS on a 3-word graph") {
+    val hist = bfsHistograms(multiWordEdges)
+    assert(hist.size == 152 && !hist.contains(400L))
+    val g = multiWordEdges.toDF("doc_a", "doc_b").repartition(3)
+    val want = hist.toSeq.sortBy(_._1).map { case (v, h) =>
+      val reached = h.values.sum - 1
+      val sumDist = h.map { case (d, c) => d * c }.sum
+      // harmonic folds the histogram in distance order, as the oracle does
+      val harmonic = h.toSeq.sorted.filter(_._1 > 0)
+        .foldLeft(0.0) { case (a, (d, c)) => a + c.toDouble / d }
+      (v, reached, h.keys.max, sumDist, round4(reached.toDouble / sumDist),
+        round4(harmonic))
+    }
+    val got = Graph.closenessCentrality(g, maxDepth = 16)
+      .as[(Long, Long, Int, Long, Double, Double)].collect().toSeq
+    assert(got == want)
+    // every node a pivot: k_reached and sum_dist are the exact per-node
+    // reach and distance sum, closeness_hat r(n−1)/(nS) with n = 152
+    val n = hist.size.toLong
+    val wantHat = want.map { case (v, r, _, s, _, _) =>
+      (v, r, s, round4((r * (n - 1)).toDouble / (s * n).toDouble)) }
+    val gotHat = Graph.approxCloseness(g, numPivots = 256, maxDepth = 16)
+      .as[(Long, Long, Long, Double)].collect().toSeq
+    assert(gotHat == wantHat)
+  }
+
+  /** The stage count of each job the body launches, in launch order,
+    * seen by a listener on a private job group; a marker job run after
+    * the body is seen last (the listener bus delivers in order), so every
+    * job of the body is counted. */
+  private def jobStages(body: => Unit): Seq[Int] = {
+    val sc = spark.sparkContext
+    val group = s"graph-jobs-${System.nanoTime()}"
+    val marker = group + "-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith(group)).foreach(g => seen.add((g, e.stageInfos.size)))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobs counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def markerSeen = seen.asScala.exists(_._1 == marker)
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(markerSeen, "listener never saw the marker job")
+      seen.asScala.toSeq.collect { case (`group`, stages) => stages }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("bitset BFS: one job per round; only the final state stays cached") {
+    val sc = spark.sparkContext
+    // a path of n nodes has diameter n − 1: n − 1 rounds find new bits,
+    // and one more finds none
+    def path(n: Int) = (1 until n).map(i => (i.toLong, i + 1L)).toDF("doc_a", "doc_b")
+    for (n <- Seq(4, 7)) {
+      val before = sc.getPersistentRDDs.keySet
+      var df: org.apache.spark.sql.DataFrame = null
+      // the node index collect (map + result stage), then one job per
+      // round: the first also runs the adjacency's groupByKey, later
+      // ones read the checkpointed state through the narrow join, so
+      // only the message shuffle precedes the result stage
+      val stages = jobStages { df = Graph.closenessCentrality(path(n)) }
+      assert(stages == Seq(2, 3) ++ Seq.fill(n - 1)(2), s"n = $n")
+      assert(df.collect().length == n)
+      assert((sc.getPersistentRDDs.keySet -- before).size <= 1, s"n = $n")
+    }
+    // approxCloseness runs the same loop after its pivot pick
+    val approx = Seq(4, 7).map(n => jobStages(Graph.approxCloseness(path(n))).size)
+    assert(approx(1) - approx(0) == 3, approx.toString)
+    val before = sc.getPersistentRDDs.keySet
+    Graph.approxCloseness(path(5)).collect()
+    assert((sc.getPersistentRDDs.keySet -- before).size <= 1)
+    // a frontier outliving maxDepth still throws, and drops its state
+    val beforeThrow = sc.getPersistentRDDs.keySet
+    intercept[IllegalArgumentException](Graph.closenessCentrality(path(7), maxDepth = 6))
+    intercept[IllegalArgumentException](Graph.approxCloseness(path(7), maxDepth = 6))
+    assert(sc.getPersistentRDDs.keySet == beforeThrow)
   }
 
 }

@@ -5,8 +5,10 @@ Usage: evlog.py <eventlog-file-or-dir> [top_n]
 
 Jobs are grouped by spark.job.description (set by Bench to the entry
 name).  For each description prints: number of jobs, summed job wall
-time, summed task time, max single job, and (if BENCH_full.json is
-given) the bench-measured wall so driver-side gaps are visible.
+time, summed task time, max single job, and the bench-measured wall
+from ./BENCH_partial.json when SPARK_GRAFT_QUERIES is set (as for the
+Bench run that wrote the log), else ./BENCH_full.json, so driver-side
+gaps are visible.
 """
 import json, sys, os, glob, collections
 
@@ -107,9 +109,13 @@ if True:
             agg[desc]["cpu"] += m.get("Executor CPU Time", 0) / 1e9
             agg[desc]["deser"] += m.get("Executor Deserialize Time", 0) / 1e3
 
+# the artifact Bench writes for this kind of run: a SPARK_GRAFT_QUERIES
+# subset writes BENCH_partial.json, the full battery BENCH_full.json
+bench_file = ("BENCH_partial.json" if os.environ.get("SPARK_GRAFT_QUERIES")
+              else "BENCH_full.json")
 bench = {}
-if os.path.exists("BENCH_full.json"):
-    bench = json.load(open("BENCH_full.json")).get("queries", {})
+if os.path.exists(bench_file):
+    bench = json.load(open(bench_file)).get("queries", {})
 
 rows = []
 for desc, a in agg.items():
