@@ -43,7 +43,10 @@ object Flags {
         case "--total_iterations" => f = f.copy(totalIterations = num(_.toInt))
         case "--compute_likelihood" => f = f.copy(computeLikelihood = v == "true")
         case "--seed" => f = f.copy(seed = num(_.toLong))
-        case "--output_mode" => f = f.copy(outputMode = v)
+        case "--output_mode" =>
+          if (v != "averaged" && v != "final_counts")
+            sys.error(s"flag $flag: bad value \"$v\" (averaged | final_counts)")
+          f = f.copy(outputMode = v)
         case other => sys.error(s"unknown flag: $other")
       }
       i += 2
@@ -81,7 +84,8 @@ object Flags {
   def session(name: String): SparkSession = SparkSession.builder()
     .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
     .appName(name)
-    .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString))
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 }

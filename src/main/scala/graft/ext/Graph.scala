@@ -13,23 +13,33 @@ import org.apache.spark.sql.types.StructType
   * its nodes. */
 object Graph {
 
-  /** Round-state partition count for the iterative loops (k-core
-    * peeling, BFS frontiers, bitset-BFS state), derived from the
-    * state's own MEASURED row volume — ~500k narrow rows per partition,
-    * floor 1, cap 8× the cluster's parallelism. The loops checkpoint
-    * their state every round, and a checkpoint's partition count is
-    * inherited by every downstream map stage of every later round: left
-    * at the session's shuffle default, a ~39k-edge fixture graph ran
-    * 32–64 tasks per round at ~0.1 CPU-s of FIXED per-task cost each
-    * (r16 evlog: kcore spent 54 CPU-s on <1 MB of state, and 8 cores
-    * beat 32 across the whole family — PERF_r15 scaling ratios 0.41 to
-    * 0.58). Volume-derived, so at 100 TB frontiers the count grows with
-    * the data instead of strangling it; `coalesce` (narrow) never adds
-    * an exchange and never increases a smaller existing count. */
+  /** Partition count of the per-node state of the [[supersteps]] loops
+    * — [[bitsetBfs]] (behind [[closenessCentrality]], [[approxCloseness]]
+    * and [[bfsLayers]]) and [[kCoreSummary]] — derived from the node
+    * count: ~500k nodes per partition, floor 1, cap 8× the cluster's
+    * parallelism. Every round's state and message shuffle keeps this
+    * count, so left at the session's shuffle default a ~39k-edge fixture
+    * graph ran 32–64 tasks per round at ~0.1 CPU-s of FIXED per-task
+    * cost each (r16 evlog: kcore spent 54 CPU-s on <1 MB of state, and 8
+    * cores beat 32 across the whole family — PERF_r15 scaling ratios
+    * 0.41 to 0.58). Volume-derived, so at 100 TB the count grows with
+    * the data instead of strangling it. */
   private def stateParts(spark: org.apache.spark.sql.SparkSession,
       rows: Long): Int =
     math.max(1L, math.min(rows / 500000L + 1,
       8L * spark.sparkContext.defaultParallelism)).toInt
+
+  /** The canonical undirected edge set of `pairs`: one (a, b) row per
+    * unordered pair, a < b, self-loops dropped. */
+  private def edgeSet(pairs: DataFrame): DataFrame =
+    pairs.select(least(col("doc_a"), col("doc_b")).as("a"),
+        greatest(col("doc_a"), col("doc_b")).as("b"))
+      .where(col("a") =!= col("b")).distinct()
+
+  /** (v, d): each node's degree in an [[edgeSet]]. */
+  private def degrees(e: DataFrame): DataFrame =
+    e.select(col("a").as("v")).union(e.select(col("b").as("v")))
+      .groupBy("v").agg(count(lit(1)).as("d"))
 
   /** PageRank over an undirected edge list (doc_a, doc_b), `iters` exact
     * synchronous iterations with damping `d`:
@@ -95,12 +105,8 @@ object Graph {
     * shared minhash candidates) pay zero extra scans.
     * Output (one row): n_edges, n_wedges, n_triangles, gcc. */
   def triangleStats(pairs: DataFrame): DataFrame = {
-    val e = pairs.select(
-        least(col("doc_a"), col("doc_b")).as("a"),
-        greatest(col("doc_a"), col("doc_b")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("d"))
+    val e = edgeSet(pairs)
+    val deg = degrees(e)
     val wedges = deg.agg(expr("sum(d * (d - 1)) div 2").as("n_wedges"))
     val e2 = e.toDF("b2", "c")
     val e3 = e.toDF("a3", "c3")
@@ -156,12 +162,8 @@ object Graph {
     * has degree 1 (Σ = 0: no tail to fit). Output: one row per degree
     * with n_nodes and the α rider. */
   def degreeDistribution(pairs: DataFrame): DataFrame = {
-    val e = pairs.select(
-        least(col("doc_a"), col("doc_b")).as("a"),
-        greatest(col("doc_a"), col("doc_b")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("degree"))
+    val e = edgeSet(pairs)
+    val deg = degrees(e).toDF("v", "degree")
     val hist = deg.groupBy("degree").agg(count(lit(1)).as("n_nodes"))
     val alpha = hist.agg(
         sum(col("n_nodes")).as("nn"),
@@ -181,12 +183,8 @@ object Graph {
     * engines divide identical numerators; NULL when degenerate (all
     * degrees equal). Output: one row (n_edges, r). */
   def assortativity(pairs: DataFrame): DataFrame = {
-    val e = pairs.select(
-        least(col("doc_a"), col("doc_b")).as("a"),
-        greatest(col("doc_a"), col("doc_b")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("d"))
+    val e = edgeSet(pairs)
+    val deg = degrees(e)
     val stubs = e.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
       .join(deg.toDF("src", "dx"), "src")
@@ -214,15 +212,11 @@ object Graph {
     * leakage. All counts exact integers off one edge⋈label join; one
     * division. `labels` must be (doc_id, cluster). */
   def clusterConductance(pairs: DataFrame, labels: DataFrame): DataFrame = {
-    val e = pairs.select(
-        least(col("doc_a"), col("doc_b")).as("a"),
-        greatest(col("doc_a"), col("doc_b")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
+    val e = edgeSet(pairs)
     val el = e
       .join(labels.toDF("a", "la"), "a")
       .join(labels.toDF("b", "lb"), "b")
-    val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("d"))
+    val deg = degrees(e)
     val vol = labels.toDF("v", "cluster").join(deg, "v")
       .groupBy("cluster").agg(count(lit(1)).as("n_nodes"), sum("d").as("vol"))
     val volAll = e.agg((count(lit(1)) * 2).as("vol_all"))
@@ -251,12 +245,8 @@ object Graph {
     * Counts are exact integers; lcc is one division. Nodes with d < 2 are
     * excluded (coefficient undefined). Output: (v, degree, n_tri, lcc). */
   def localClustering(pairs: DataFrame): DataFrame = {
-    val e = pairs.select(
-        least(col("doc_a"), col("doc_b")).as("a"),
-        greatest(col("doc_a"), col("doc_b")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("degree"))
+    val e = edgeSet(pairs)
+    val deg = degrees(e).toDF("v", "degree")
     val e2 = e.toDF("b2", "c")
     val e3 = e.toDF("a3", "c3")
     val tris = e.join(e2, col("b") === col("b2"))
@@ -296,10 +286,7 @@ object Graph {
     * both engines associate the same doubles identically. */
   def adamicAdar(pairs: DataFrame, topK: Int = 20,
       maxCenterDegree: Long = 65536L): DataFrame = {
-    val e = pairs.select(
-        least(col("doc_a"), col("doc_b")).cast("long").as("a"),
-        greatest(col("doc_a"), col("doc_b")).cast("long").as("b"))
-      .where(col("a") =!= col("b")).distinct()
+    val e = edgeSet(pairs)
     // ONE pinned exchange on v serves the whole head of the op: the
     // degree rollup aggregates in place on it (hash(v) satisfies the
     // groupBy's clustering), the center semi-join is co-partitioned
@@ -383,76 +370,44 @@ object Graph {
   }
 
   /** BFS distance layers from a source node over an undirected pair
-    * graph — "how far does influence/contamination spread" in hops.
-    * Pregel-lite frontier expansion: each round joins the frontier to
-    * the adjacency list and anti-joins the known set (3–4 jobs per
-    * round under AQE, localCheckpoint-truncated); pure INTEGER set
-    * computation.
-    * Rounds stop when the frontier empties; if it hasn't by
-    * `maxDepth` the operator THROWS (the oracle unrolls exactly
-    * `maxDepth` rounds — same contract as [[kCoreSummary]]). The
-    * default source is the graph's MINIMUM node id (deterministic).
-    * Output: (dist, n_nodes) histogram, plus a dist = −1 row counting
-    * nodes unreached from the source. */
+    * graph — "how far does influence/contamination spread" in hops:
+    * [[bitsetBfs]] with the source as its one source (W = 1 word per
+    * node). The bit first reaches a node at its distance d, so each
+    * node's own fold is its layer (`ecc`), and any other node the bit
+    * never reaches is unreached. Pure integer set computation. THROWS if
+    * the frontier outlives `maxDepth` (the oracle unrolls exactly
+    * `maxDepth` rounds — same contract as [[kCoreSummary]]). The default
+    * source is the graph's MINIMUM node id (deterministic); a source
+    * that is no node of the graph is still its own layer 0. Output:
+    * (dist, n_nodes) histogram, plus a dist = −1 row counting nodes
+    * unreached from the source. */
   def bfsLayers(pairs: DataFrame, source: Option[Long] = None,
       maxDepth: Int = 8): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val e = pairs.select(
-        least(col("doc_a"), col("doc_b")).cast("long").as("a"),
-        greatest(col("doc_a"), col("doc_b")).cast("long").as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val adj = e.select(col("a").as("v"), col("b").as("n"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("n")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = adj.select("v").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one job yields the default source AND the node count that sizes
-    // the per-round frontier/known state (both sets hold ≤ V rows)
-    val head = nodes.agg(min("v"), count(lit(1))).head()
-    val src = source.getOrElse(head.getLong(0))
-    val vParts = stateParts(spark, head.getLong(1))
-    // the cached adjacency feeds every round's frontier join from its
-    // build-time partition count (AQE cannot re-partition a cached
-    // plan), so coalesce ON TOP of the cache by its measured volume —
-    // the count is one sub-task job over already-materialized blocks
-    val adjC = adj.coalesce(stateParts(spark, adj.count()))
-    var known = spark.createDataset(Seq((src, 0)))
-      .toDF("v", "dist").localCheckpoint()
-    var frontier = known
-    var depth = 0
-    var frontierN = 1L
-    while (frontierN > 0 && depth < maxDepth) {
-      depth += 1
-      // lazy checkpoints: the count() below materializes `next` (and the
-      // previous round's lazy `known` union riding inside its anti-join).
-      // A round is still 3–4 jobs, not one: AQE runs the round's shuffle
-      // stages as their own jobs while the lazy checkpoint is built (1
-      // in round 1, whose `known` is broadcast; 2 after), and the count
-      // is 2 more (measured on 5-node paths and the sf0.001 graph)
-      val next = adjC.join(frontier.select(col("v")), Seq("v"), "left_semi")
-        .select(col("n").as("v")).distinct()
-        .join(known, Seq("v"), "left_anti")
-        .select(col("v"), lit(depth).as("dist"))
-        .coalesce(vParts)
-        .localCheckpoint(eager = false)
-      frontierN = next.count()
-      known = known.unionAll(next).localCheckpoint(eager = false)
-      frontier = next
+    val arcs = undirectedArcs(pairs)
+    // one job yields the node count that sizes the state AND the
+    // default source
+    val (n, minV) = arcs.keys.distinct().aggregate((0L, Long.MaxValue))(
+      (a, v) => (a._1 + 1, math.min(a._2, v)),
+      (a, b) => (a._1 + b._1, math.min(a._2, b._2)))
+    val src = source.getOrElse {
+      require(n > 0, "bfsLayers: a graph without edges has no default source")
+      minV
     }
-    require(frontierN == 0,
-      s"BFS frontier still expanding at maxDepth=$maxDepth")
-    val hist = known.groupBy("dist").agg(count(lit(1)).as("n_nodes"))
-    val unreached = nodes.join(known, Seq("v"), "left_anti")
-      .agg(count(lit(1)).as("n_nodes"))
-      .select(lit(-1).as("dist"), col("n_nodes"))
-      .where(col("n_nodes") > 0)
-    // materialize the ≤(maxDepth+2)-row result so the cached adjacency
-    // can be dropped before returning
-    val rows = hist.unionAll(unreached).as[(Int, Long)].collect().sortBy(_._1)
-    adj.unpersist(blocking = false); nodes.unpersist(blocking = false)
-    spark.createDataset(rows.toSeq).toDF("dist", "n_nodes").orderBy("dist")
+    val state = bitsetBfs(spark, arcs, n, Array(src), maxDepth)
+    val layers = try state.map { case (v, s) =>
+        if (v == src) 0 else if (s.reached > 0) s.ecc else -1 }.countByValue()
+      finally CheckpointBridge.drop(state)
+    // the source is layer 0 whether or not it is a node
+    spark.createDataset((layers.toMap + (0 -> 1L)).toSeq.sorted)
+      .toDF("dist", "n_nodes").orderBy("dist")
   }
+
+  /** One node of [[kCoreSummary]]'s peel: its deduped neighbours, its
+    * live degree (the number of them still alive) and whether it is
+    * alive itself. */
+  private final case class CoreNode(nbrs: Array[Long], deg: Int, alive: Boolean)
 
   /** k-core decomposition summary — iterative peeling: repeatedly drop
     * nodes of degree &lt; k until a fixpoint; what survives is the
@@ -461,67 +416,55 @@ object Graph {
     * chains of borderline pairs don't). Pure integer set computation —
     * no floats anywhere, so the result is trivially engine-exact.
     *
-    * Scale shape: each round is one degree rollup + two semi-joins,
-    * all shuffle-bounded (4 jobs a round under AQE, see the loop);
-    * `localCheckpoint` truncates the per-round lineage. Rounds to
-    * fixpoint are ≤ the graph's degeneracy-peeling
-    * depth — small for real graphs; `maxRounds` caps the loop and the
-    * operator THROWS if the fixpoint isn't reached (the oracle unrolls
-    * exactly `maxRounds` rounds, so a non-converged result would be
-    * silently wrong — fail loudly instead). Output per k:
-    * (k, n_nodes, n_edges) of the surviving core. */
+    * Scale shape: the [[supersteps]] loop over one node state
+    * ([[CoreNode]]) per node. A round kills the alive nodes whose live
+    * degree is below k; each sends a 1 to every neighbour, the 1s are
+    * summed by `reduceByKey` on the state's partitioner and subtracted
+    * through a narrow `leftOuterJoin`. The round's one job sums the
+    * alive nodes' live degrees: the surviving edge set is exactly the
+    * edges between alive nodes, so that sum is twice its size, and the
+    * edge count per round is the one the edge-peeling oracle sees.
+    * Rounds to fixpoint are ≤ the graph's degeneracy-peeling depth —
+    * small for real graphs; `maxRounds` caps the loop and the operator
+    * THROWS if the fixpoint isn't reached (the oracle unrolls exactly
+    * `maxRounds` rounds, so a non-converged result would be silently
+    * wrong — fail loudly instead). k-cores are nested, so each k peels
+    * on from the previous k's survivors. Output per k: (k, n_nodes,
+    * n_edges) of the surviving core. */
   def kCoreSummary(pairs: DataFrame, ks: Seq[Int] = Seq(2, 3, 4),
       maxRounds: Int = 8): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val e0 = pairs.select(
-        least(col("doc_a"), col("doc_b")).cast("long").as("a"),
-        greatest(col("doc_a"), col("doc_b")).cast("long").as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n0 = e0.count()
-    // k-cores are nested (k-core ⊆ (k−1)-core), so each k peels from the
-    // PREVIOUS core's edges instead of the full graph — same fixpoint,
-    // far fewer rounds/jobs for the higher ks. Coalesce ON TOP of the
-    // cache by its measured volume: the cached plan's build-time
-    // partition count (AQE cannot change it) otherwise sets every
-    // round's map-side task count — see [[stateParts]].
-    var start: DataFrame = e0.coalesce(stateParts(spark, n0))
-    val rows = ks.sorted.map { k =>
-      var edges = start
-      var prev = -1L
-      var n = edges.count()
-      var r = 0
-      while (n != prev && n > 0 && r < maxRounds) {
-        prev = n
-        val deg = edges.select(col("a").as("v"))
-          .unionAll(edges.select(col("b").as("v")))
-          .groupBy("v").agg(count(lit(1)).as("dg"))
-          .where(col("dg") >= k)
-        edges = edges
-          .join(deg.select(col("v").as("a")), Seq("a"), "left_semi")
-          .join(deg.select(col("v").as("b")), Seq("b"), "left_semi")
-          // round state sized by its own row count (prev = the edge
-          // count entering the round bounds the survivors)
-          .coalesce(stateParts(spark, prev))
-          // lazy: the count() materializes the checkpoint rows. A round
-          // is still 4 jobs: AQE runs the degree rollup's and the
-          // semi-joins' shuffle stages as 2 jobs while the checkpoint is
-          // built, and the count is 2 more (measured on 5-node paths, a
-          // triangle with a tail, and the sf0.001 graph)
-          .localCheckpoint(eager = false)
-        n = edges.count(); r += 1
-      }
-      require(n == prev || n == 0,
-        s"k-core peeling not converged within $maxRounds rounds (k=$k)")
-      val nodes =
-        if (n == 0) 0L
-        else edges.select(col("a").as("v")).union(edges.select(col("b").as("v")))
-          .distinct().count()
-      start = edges
-      (k, nodes, n)
+    val arcs = undirectedArcs(pairs)
+    // one job counts the nodes (sizing the state) and sums their degrees
+    val (nodes, degSum) = arcs.distinct().mapValues(_ => 1L).reduceByKey(_ + _)
+      .values.aggregate((0L, 0L))((a, d) => (a._1 + 1, a._2 + d),
+        (a, b) => (a._1 + b._1, a._2 + b._2))
+    var state = nodeStates(spark, arcs, nodes)((_, ns) => CoreNode(ns, ns.length, true))
+    // a state's (n_edges, n_nodes): alive nodes with live degree > 0
+    def measure(s: RDD[(Long, CoreNode)]): (Long, Long) = {
+      val (d, v) = s.values.filter(_.alive).aggregate((0L, 0L))(
+        (a, c) => (a._1 + c.deg, a._2 + (if (c.deg > 0) 1 else 0)),
+        (a, b) => (a._1 + b._1, a._2 + b._2))
+      (d / 2, v)
     }
-    e0.unpersist(blocking = false)
+    var m = (degSum / 2, nodes)
+    val rows = ks.sorted.map { k =>
+      val (next, mk) = supersteps(state, (-1L, 0L), m, maxRounds,
+          s"k-core peeling not converged within $maxRounds rounds (k=$k)")(
+          { case ((prevN, _), (n, _)) => n != prevN && n > 0 }) { (s, _) =>
+        val part = s.partitioner.get
+        val lost = s
+          .flatMap { case (_, c) =>
+            if (c.alive && c.deg < k) c.nbrs.iterator.map(_ -> 1) else Iterator.empty }
+          .reduceByKey(part, _ + _)
+        s.leftOuterJoin(lost, part).mapValues { case (c, l) =>
+          CoreNode(c.nbrs, c.deg - l.getOrElse(0), c.alive && c.deg >= k) }
+      }(measure)
+      state = next; m = mk
+      (k, m._2, m._1)
+    }
+    CheckpointBridge.drop(state)
     spark.createDataset(rows).toDF("k", "n_nodes", "n_edges").orderBy("k")
   }
 
@@ -649,20 +592,60 @@ object Graph {
       fresh: Array[Long], reached: Long, sumDist: Long, ecc: Int,
       harmonic: Double)
 
-  /** BITSET multi-source BFS as a Pregel superstep loop (Malewicz et
-    * al., SIGMOD 2010) shared by [[closenessCentrality]] (sources = all
-    * nodes) and [[approxCloseness]] (sources = k sampled pivots): 64
-    * sources per long word, W = ⌈S/64⌉ words per node. The adjacency is
-    * ONE `groupByKey` of `arcs` on a [[stateParts]]-sized
-    * HashPartitioner, and the per-node state ([[BfsNode]]) lives in the
-    * same partitions. A round: every node with fresh bits sends them to
-    * its neighbours (`reduceByKey` ORs them on the state's partitioner),
-    * a narrow `leftOuterJoin` keeps the bits each node had not seen, and
-    * with p = their popcount at depth d the node adds p to its fold. The
-    * new state is `localCheckpoint`ed and materialized by the count of
-    * its fresh nodes — exactly ONE job per round — and the previous
-    * state's blocks are dropped. Cost is ≈ diameter·2E W-word ORs; state
-    * is V·W longs — LINEAR in V for a fixed source count, quadratic only
+  /** The initial state of a [[supersteps]] loop: `init` of each node of
+    * `arcs` and its deduped neighbours, built by ONE `groupByKey` on a
+    * [[stateParts]]-sized HashPartitioner that every round's state keeps
+    * (rounds read it back from `partitioner`). */
+  private def nodeStates[S](spark: org.apache.spark.sql.SparkSession,
+      arcs: RDD[(Long, Long)], nodes: Long)(
+      init: (Long, Array[Long]) => S): RDD[(Long, S)] =
+    arcs.groupByKey(new HashPartitioner(stateParts(spark, nodes)))
+      .mapPartitions(_.map { case (v, ns) => v -> init(v, ns.toArray.distinct) },
+        preservesPartitioning = true)
+
+  /** The superstep loop (Pregel, Malewicz et al., SIGMOD 2010) of
+    * [[bitsetBfs]] and [[kCoreSummary]]. From `state`, whose measure is
+    * `m` (and its predecessor's `before`), it runs rounds while
+    * `more(before, m)` holds and fewer than `maxRounds` have run: round
+    * r (from 1) builds the next state, which is `localCheckpoint`ed and
+    * materialized by ONE job, `measure`, whose result is its measure;
+    * then the previous state's blocks are dropped. THROWS `failure` if
+    * `more` still holds after `maxRounds` (the oracles unroll exactly
+    * that many rounds). A throw drops every state the loop holds, the
+    * given one included; otherwise the final state and its measure are
+    * returned, the state cached (its blocks die with the caller's
+    * reference or a [[CheckpointBridge]] drop). */
+  private def supersteps[S, M](state: RDD[(Long, S)], before: M, m: M,
+      maxRounds: Int, failure: => String)(more: (M, M) => Boolean)(
+      round: (RDD[(Long, S)], Int) => RDD[(Long, S)])(
+      measure: RDD[(Long, S)] => M): (RDD[(Long, S)], M) = {
+    var live = List(state) // newest first: the state, and the one being built
+    var (prev, cur, r) = (before, m, 0)
+    try {
+      while (more(prev, cur) && r < maxRounds) {
+        r += 1
+        live = round(live.head, r).localCheckpoint() :: live
+        prev = cur
+        cur = measure(live.head)
+        live.tail.foreach(CheckpointBridge.drop)
+        live = live.take(1)
+      }
+      require(!more(prev, cur), failure)
+      (live.head, cur)
+    } catch { case t: Throwable => live.foreach(CheckpointBridge.drop); throw t }
+  }
+
+  /** BITSET multi-source BFS as a [[supersteps]] loop shared by
+    * [[closenessCentrality]] (sources = all nodes), [[approxCloseness]]
+    * (sources = k sampled pivots) and [[bfsLayers]] (one source): 64
+    * sources per long word, W = ⌈S/64⌉ words per node, the per-node
+    * state ([[BfsNode]]) built by [[nodeStates]]. A round: every node
+    * with fresh bits sends them to its neighbours (`reduceByKey` ORs
+    * them on the state's partitioner), a narrow `leftOuterJoin` keeps
+    * the bits each node had not seen, and with p = their popcount at
+    * depth d the node adds p to its fold; the round's one job counts the
+    * nodes with fresh bits. Cost is ≈ diameter·2E W-word ORs; state is
+    * V·W longs — LINEAR in V for a fixed source count, quadratic only
     * when every node is a source (the caller's guard). THROWS if a
     * frontier outlives `maxDepth` (oracles unroll exactly that many
     * rounds). Returns the final state, one row per node of `arcs`,
@@ -673,26 +656,24 @@ object Graph {
     val W = (sources.length + 63) / 64
     val srcIdx = sources.sorted
     val none = Array.emptyLongArray
-    val part = new HashPartitioner(stateParts(spark, nodes))
     // a source's bit is its index in `srcIdx`; every node starts with
     // its own bit (zeros if it is no source) seen and fresh
-    var state = arcs.groupByKey(part).mapPartitions(_.map { case (v, ns) =>
+    val init = nodeStates(spark, arcs, nodes) { (v, ns) =>
       val bits = new Array[Long](W)
       val si = java.util.Arrays.binarySearch(srcIdx, v)
       if (si >= 0) bits(si / 64) = 1L << (si % 64)
-      v -> BfsNode(ns.toArray.distinct, bits, if (si >= 0) bits else none,
-        0L, 0L, 0, 0.0)
-    }, preservesPartitioning = true)
-    var depth = 0
-    var freshN = 1L
-    while (freshN > 0 && depth < maxDepth) {
-      depth += 1
-      val d = depth
+      BfsNode(ns, bits, if (si >= 0) bits else none, 0L, 0L, 0, 0.0)
+    }
+    // the sources are the first frontier: a round runs even if none is a node
+    supersteps(init, 0L, 1L, maxDepth,
+        s"BFS frontier still expanding at maxDepth=$maxDepth")(
+        (_, freshN) => freshN > 0) { (state, d) =>
+      val part = state.partitioner.get
       val msgs = state
         .flatMap { case (_, s) =>
           if (s.fresh.isEmpty) Iterator.empty else s.nbrs.iterator.map(_ -> s.fresh) }
         .reduceByKey(part, (a, b) => Array.tabulate(W)(i => a(i) | b(i)))
-      val next = state.leftOuterJoin(msgs, part).mapValues {
+      state.leftOuterJoin(msgs, part).mapValues {
         case (s, Some(m)) =>
           val nb = Array.tabulate(W)(i => m(i) & ~s.seen(i))
           val p = nb.map(java.lang.Long.bitCount).sum
@@ -700,15 +681,8 @@ object Graph {
           else BfsNode(s.nbrs, Array.tabulate(W)(i => s.seen(i) | nb(i)), nb,
             s.reached + p, s.sumDist + p.toLong * d, d, s.harmonic + p.toDouble / d)
         case (s, None) => if (s.fresh.isEmpty) s else s.copy(fresh = none)
-      }.localCheckpoint()
-      freshN = next.filter(_._2.fresh.nonEmpty).count()
-      if (state.isCheckpointed) CheckpointBridge.drop(state)
-      state = next
-    }
-    if (freshN > 0) CheckpointBridge.drop(state)
-    require(freshN == 0,
-      s"bitset BFS frontier still expanding at maxDepth=$maxDepth")
-    state
+      }
+    }(_.filter(_._2.fresh.nonEmpty).count())._1
   }
 
   /** Sampled-pivot closeness (Eppstein–Wang, "Fast approximation of

@@ -77,6 +77,13 @@ class AppsSpec extends SparkSpec {
       val e = intercept[RuntimeException](Flags.parse(Array(flag, bad)))
       assert(e.getMessage.contains(flag) && e.getMessage.contains(s"\"$bad\""), e.getMessage)
     }
+    // --output_mode takes only its two values; a typo fails naming flag
+    // and value instead of silently selecting the averaged model
+    assert(Flags.parse(Array("--output_mode", "final_counts")).outputMode == "final_counts")
+    assert(Flags.parse(Array("--output_mode", "averaged")).outputMode == "averaged")
+    val om = intercept[RuntimeException](Flags.parse(Array("--output_mode", "final_count")))
+    assert(om.getMessage.contains("--output_mode") && om.getMessage.contains("\"final_count\""),
+      om.getMessage)
   }
 
   test("InferApp emits one line per kept input line, zeros for all-OOV docs") {

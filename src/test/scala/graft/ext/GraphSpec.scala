@@ -176,24 +176,32 @@ class GraphSpec extends SparkSpec {
 
   test("k-core peeling: path dissolves, triangle is the 2-core, K4 the 3-core") {
     import spark.implicits._
-    // path 1-2-3-4: no 2-core; triangle 5-6-7: 2-core, no 3-core
-    val g = Seq((1L,2L),(2L,3L),(3L,4L),(5L,6L),(6L,7L),(5L,7L))
+    // path 1-2-3-4: no 2-core; triangle 5-6-7: 2-core, no 3-core; plus
+    // self-loops, a duplicate and reversed pairs, which change nothing
+    val g = Seq((1L,2L),(2L,3L),(3L,4L),(5L,6L),(6L,7L),(5L,7L),
+        (2L,1L),(1L,2L),(3L,3L),(7L,6L),(8L,8L))
       .toDF("doc_a", "doc_b")
     val got = Graph.kCoreSummary(g, Seq(2, 3))
       .as[(Int, Long, Long)].collect().toSeq
     assert(got == Seq((2, 3L, 3L), (3, 0L, 0L)), got.toString)
-    // K4: 3-core is the whole graph
+    // K4: 3-core is the whole graph; its 4- and 5-cores are empty
     val k4 = (for (a <- 1 to 4; b <- a + 1 to 4) yield (a.toLong, b.toLong))
       .toDF("doc_a", "doc_b")
-    val g2 = Graph.kCoreSummary(k4, Seq(3)).as[(Int, Long, Long)].collect()
-    assert(g2.toSeq == Seq((3, 4L, 6L)), g2.toSeq.toString)
+    val g2 = Graph.kCoreSummary(k4, Seq(5, 3, 4)).as[(Int, Long, Long)].collect()
+    assert(g2.toSeq == Seq((3, 4L, 6L), (4, 0L, 0L), (5, 0L, 0L)), g2.toSeq.toString)
+    // the 2-peel takes 2 rounds to dissolve the path (its ends, then its
+    // middle edge) and a third that changes nothing: a cap of 2 throws
+    intercept[IllegalArgumentException](Graph.kCoreSummary(g, Seq(2), maxRounds = 2))
+    assert(Graph.kCoreSummary(g, Seq(2), maxRounds = 3)
+      .as[(Int, Long, Long)].collect().toSeq == Seq((2, 3L, 3L)))
   }
-
 
   test("bfs layers: path distances from min node, disconnected reports -1") {
     import spark.implicits._
-    // path 1-2-3-4 plus island 9-10: from node 1, dists 0,1,2,3; island -1
-    val g = Seq((1L,2L),(2L,3L),(3L,4L),(9L,10L)).toDF("doc_a", "doc_b")
+    // path 1-2-3-4 plus island 9-10: from node 1, dists 0,1,2,3; island
+    // -1; self-loops, a duplicate and reversed pairs change nothing
+    val g = Seq((1L,2L),(2L,3L),(3L,4L),(9L,10L),(2L,1L),(3L,2L),(3L,2L),(4L,4L),(11L,11L))
+      .toDF("doc_a", "doc_b")
     val got = Graph.bfsLayers(g).as[(Int, Long)].collect().toSeq
     assert(got == Seq((-1, 2L), (0, 1L), (1, 1L), (2, 1L), (3, 1L)),
       got.toString)
@@ -201,10 +209,21 @@ class GraphSpec extends SparkSpec {
     val fromIsland = Graph.bfsLayers(g, source = Some(9L))
       .as[(Int, Long)].collect().toSeq
     assert(fromIsland == Seq((-1, 4L), (0, 1L), (1, 1L)), fromIsland.toString)
-    // maxDepth too small for the path -> loud failure, not a wrong answer
-    intercept[IllegalArgumentException] {
-      Graph.bfsLayers(g, maxDepth = 2)
-    }
+    // a source that is no node is its own layer 0 and reaches nothing
+    val fromNowhere = Graph.bfsLayers(g, source = Some(5L))
+      .as[(Int, Long)].collect().toSeq
+    assert(fromNowhere == Seq((-1, 6L), (0, 1L)), fromNowhere.toString)
+    // a graph without edges has no default source, but a given one is
+    val empty = Seq((1L, 1L)).toDF("doc_a", "doc_b")
+    intercept[IllegalArgumentException](Graph.bfsLayers(empty))
+    assert(Graph.bfsLayers(empty, source = Some(1L)).as[(Int, Long)].collect().toSeq ==
+      Seq((0, 1L)))
+    // maxDepth too small for the path -> loud failure, not a wrong answer;
+    // an eccentricity equal to maxDepth throws too (the round that would
+    // find the frontier empty never runs), one more round passes
+    intercept[IllegalArgumentException](Graph.bfsLayers(g, maxDepth = 2))
+    intercept[IllegalArgumentException](Graph.bfsLayers(g, maxDepth = 3))
+    assert(Graph.bfsLayers(g, maxDepth = 4).as[(Int, Long)].collect().toSeq == got)
   }
 
   test("closenessCentrality: path 1-2-3 + island pair, hand values") {
@@ -360,6 +379,33 @@ class GraphSpec extends SparkSpec {
     assert(gotHat == wantHat)
   }
 
+  test("bfsLayers and kCoreSummary match plain BFS and edge peeling on a 3-word graph") {
+    val hist = bfsHistograms(multiWordEdges)
+    val g = multiWordEdges.toDF("doc_a", "doc_b").repartition(3)
+    for (src <- Seq(0L, 70L, 139L, 204L, 300L)) {
+      val h = hist(src)
+      val want = (h.toSeq :+ (-1 -> (hist.size - h.values.sum))).filter(_._2 > 0).sorted
+      val got = Graph.bfsLayers(g, source = Some(src), maxDepth = 16)
+        .as[(Int, Long)].collect().toSeq
+      assert(got == want, s"source $src")
+    }
+    // plain edge peeling to a fixpoint, each k from the previous k's core
+    var e = multiWordEdges.collect { case (a, b) if a != b => (a min b, a max b) }.distinct
+    val ks = Seq(2, 3, 4, 5)
+    val want = ks.map { k =>
+      var prev = -1
+      while (e.size != prev) {
+        prev = e.size
+        val deg = e.flatMap(x => Seq(x._1, x._2)).groupBy(identity).map { case (v, vs) => v -> vs.size }
+        e = e.filter(x => deg(x._1) >= k && deg(x._2) >= k)
+      }
+      (k, e.flatMap(x => Seq(x._1, x._2)).distinct.size.toLong, e.size.toLong)
+    }
+    assert(want.map(_._3).distinct.size > 2, want.toString) // the peel bites
+    val got = Graph.kCoreSummary(g, ks, maxRounds = 64).as[(Int, Long, Long)].collect().toSeq
+    assert(got == want)
+  }
+
   /** The stage count of each job the body launches, in launch order,
     * seen by a listener on a private job group; a marker job run after
     * the body is seen last (the listener bus delivers in order), so every
@@ -411,10 +457,33 @@ class GraphSpec extends SparkSpec {
     val before = sc.getPersistentRDDs.keySet
     Graph.approxCloseness(path(5)).collect()
     assert((sc.getPersistentRDDs.keySet -- before).size <= 1)
-    // a frontier outliving maxDepth still throws, and drops its state
+    // bfsLayers and kCoreSummary run the same loop: one job per round
+    // after their set-up job, and keep nothing cached
+    for (n <- Seq(4, 7)) {
+      val before = sc.getPersistentRDDs.keySet
+      // the node count / default source (distinct: map + result stage),
+      // then the n rounds of the BFS from node 1, then the histogram
+      // (countByValue: map + result stage)
+      var layers: org.apache.spark.sql.DataFrame = null
+      val bfs = jobStages { layers = Graph.bfsLayers(path(n)) }
+      // the node and degree count (distinct, degree rollup, result), then
+      // one round per pair of ends peeled off the path for k = 2; the
+      // empty 2-core leaves k = 3 and 4 no round to run
+      var cores: org.apache.spark.sql.DataFrame = null
+      val kcore = jobStages { cores = Graph.kCoreSummary(path(n)) }
+      assert(bfs == Seq(2, 3) ++ Seq.fill(n - 1)(2) ++ Seq(2), s"n = $n: $bfs")
+      assert(kcore == Seq(3, 3) ++ Seq.fill(n / 2 - 1)(2), s"n = $n: $kcore")
+      assert(layers.count() == n && cores.count() == 3)
+      assert(sc.getPersistentRDDs.keySet == before, s"n = $n")
+    }
+    // a frontier outliving maxDepth, or a peel outliving maxRounds, still
+    // throws, and drops its state
     val beforeThrow = sc.getPersistentRDDs.keySet
     intercept[IllegalArgumentException](Graph.closenessCentrality(path(7), maxDepth = 6))
     intercept[IllegalArgumentException](Graph.approxCloseness(path(7), maxDepth = 6))
+    intercept[IllegalArgumentException](Graph.bfsLayers(path(7), maxDepth = 6))
+    intercept[IllegalArgumentException](Graph.kCoreSummary(path(7), maxRounds = 2))
+    intercept[IllegalArgumentException](Graph.kCoreSummary(path(7), Seq(1, 2), maxRounds = 2))
     assert(sc.getPersistentRDDs.keySet == beforeThrow)
   }
 
